@@ -351,30 +351,20 @@ class PlanSpec extends AnyFunSuite {
     // flag-domain guard before the query executed the same aggregation
     // again (guide §5 "no driver actions in query paths"). The guard now
     // only ever reads a persisted state (RollupSpec covers that branch).
-    // construction-time jobs that are NOT the guard: spark.read.parquet
-    // runs footer/schema-inference jobs per table read — baseline them with
-    // a known-lazy body over the SAME two tables (lineitem ⋈ part)
-    def jobsDuring(f: => Unit): Int = {
-      @volatile var jobs = 0
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { f; Thread.sleep(500) } // listener events post asynchronously
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs
-    }
-    val lazyBaseline = jobsDuring {
-      SparkEntry.queries("tpch_q19_disjunction")(spark, sf)
-    }
+    // construction-time jobs that are NOT the guard: the first read of a
+    // table in a session infers its parquet schema in a Spark job. A
+    // known-lazy body over the SAME two tables (lineitem ⋈ part) warms
+    // both schemas first, so building q14 must then start no job at all,
+    // whatever ran earlier in the session
+    import SparkTestBase.jobsDuring
+    SparkEntry.queries("tpch_q19_disjunction")(spark, sf)
     var df: org.apache.spark.sql.DataFrame = null
     val q14Jobs = jobsDuring {
       df = SparkEntry.queries("tpcds_q14_cross_channel")(spark, sf)
     }
-    assert(q14Jobs <= lazyBaseline,
-      s"building the flat q14 plan ran $q14Jobs jobs vs $lazyBaseline for a " +
-        "lazy body over the same tables — a driver action is back in the query path")
+    assert(q14Jobs == 0,
+      s"building the flat q14 plan over warmed tables ran $q14Jobs jobs — " +
+        "a driver action is back in the query path")
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"never a cartesian (the 1-row totals attach via broadcast):\n$p")
