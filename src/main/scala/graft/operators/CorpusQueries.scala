@@ -27,7 +27,16 @@ import scala.collection.concurrent.TrieMap
   *    pre-registers the sf parquet tables).
   *
   * Queries and fixture data are read from /root/reference AT RUNTIME — nothing
-  * is copied into this repo. `float` fixture columns widen to double on BOTH
+  * is copied into this repo, and nothing is read while this object
+  * initializes: the corpus file and the `.tbl` fixtures are read on the
+  * first use of [[all]]. Where the reference tree is absent:
+  *  - no corpus file: [[all]] is empty and one warning names the missing
+  *    path (entry names come from the file's line numbers, so there is
+  *    nothing to register in its place);
+  *  - corpus file present, a `.tbl` fixture missing: every unit stays
+  *    registered, without an oracle (the oracle inlines the fixture rows),
+  *    and each run fails on its own with the missing path in its error.
+  * `float` fixture columns widen to double on BOTH
   * sides (the reference's oracle is SQLite, where REAL is 8-byte — the same
   * choice), so arithmetic agrees bit-for-bit.
   *
@@ -51,7 +60,9 @@ object CorpusQueries {
 
   private val root = "/root/reference/resources/test_data"
 
-  private val fixtureFiles = Seq(
+  private[operators] val corpusFile = s"$root/sqlite_testrunner_queries.sql"
+
+  private[operators] val fixtureFiles = Seq(
     (s"$root/tbl/sqlite/mixed_types_100.tbl", "mixed"),
     (s"$root/tbl/sqlite/mixed_types_null_100.tbl", "mixed_null"),
     (s"$root/tbl/sqlite/id_int_int_int_50.tbl", "id_int_int_int_50"),
@@ -318,13 +329,17 @@ object CorpusQueries {
 
   /** Corpus units, named by source line number (stable): each non-comment,
     * non-empty LINE is one unit, trailing `--` comments stripped. */
-  private[operators] lazy val units: Seq[(String, String)] = {
-    val text = Files.readString(Paths.get(s"$root/sqlite_testrunner_queries.sql"))
-    text.linesIterator.zipWithIndex.flatMap { case (raw, i) =>
-      val line = raw.replaceAll("--.*$", "").trim
-      if (line.isEmpty) None else Some((f"corpus_l${i + 1}%03d", line))
-    }.toSeq
-  }
+  private[operators] lazy val units: Seq[(String, String)] =
+    if (!Files.exists(Paths.get(corpusFile))) {
+      System.err.println(s"graft: corpus file $corpusFile is missing; no corpus units are registered")
+      Seq.empty
+    } else {
+      val text = Files.readString(Paths.get(corpusFile))
+      text.linesIterator.zipWithIndex.flatMap { case (raw, i) =>
+        val line = raw.replaceAll("--.*$", "").trim
+        if (line.isEmpty) None else Some((f"corpus_l${i + 1}%03d", line))
+      }.toSeq
+    }
 
   /** Units excluded entirely (Spark cannot execute the statement). Empty since
     * round 5: the last skip (l506, BEGIN/ROLLBACK undo) is now executed by the
@@ -464,13 +479,17 @@ object CorpusQueries {
     "corpus_l436" ->
       "SELECT COALESCE(b, CAST(FLOOR(c) AS INT), 0) b_not_null FROM mixed_null")
 
-  val all: Seq[Q] = units.collect {
-    case (name, rawUnit) if !skip.contains(name) =>
-      val unit = canonicalizeNames(overrides.getOrElse(name, rawUnit))
-      oracleOverrides.get(name) match {
-        case Some(o) => Q(name, duckPrelude + o)(runUnit(unit))
-        case None if noOracle.contains(name) => Q.noOracle(name)(runUnit(unit))
-        case None => Q(name, duckPrelude + unit)(runUnit(unit))
-      }
+  lazy val all: Seq[Q] = {
+    // the oracle prelude inlines the fixture rows, so with a fixture missing
+    // no unit gets an oracle; each run then fails in `fixtures`, naming the file
+    val missing = fixtureFiles.map(_._1).filterNot(p => Files.exists(Paths.get(p)))
+    if (units.nonEmpty && missing.nonEmpty)
+      System.err.println(s"graft: corpus fixtures ${missing.mkString(", ")} are missing; corpus units run without an oracle and fail")
+    units.collect {
+      case (name, rawUnit) if !skip.contains(name) =>
+        val unit = canonicalizeNames(overrides.getOrElse(name, rawUnit))
+        if (missing.nonEmpty || noOracle.contains(name)) Q.noOracle(name)(runUnit(unit))
+        else Q(name, duckPrelude + oracleOverrides.getOrElse(name, unit))(runUnit(unit))
+    }
   }
 }

@@ -32,6 +32,8 @@ import java.nio.file.{Files, Paths}
   *     FrameOfReference (int32): vector_type u8 | block_count u32
   *                 | block minima i32 × block_count | nulls_stored u8
   *                 [+ null flags] | offset vector; value = minima(i/2048)+off(i)
+  *     attribute/offset vectors: vector_type 0 = bit_width u8 then u64
+  *                 words, values packed LSB-first; 1/2/3 = u8/u16/u32 × rows
   *     LZ4: num_elements u32 | block_count u32 | block_size u32
   *                 | last_block_size u32 | per-block compressed sizes u32
   *                 | blocks | null_count u32 [+ null flags] | dict_size u32
@@ -40,7 +42,9 @@ import java.nio.file.{Files, Paths}
   *                 independently with the dict as match history ([[Lz4Block]])
   *
   * Import supports ALL SIX segment encodings (cross-read against the
-  * reference's own golden fixtures in BinFormatSpec). Export
+  * reference's own golden fixtures in BinFormatSpec where that tree is
+  * present, and always against hand-built fixtures of this layout under
+  * src/test/resources/bin-layout). Export
   * always writes Unencoded, the format's canonical interchange encoding
   * (reference: binary_writer.cpp writes the segment's current encoding; any
   * conforming parser accepts Unencoded). This is a FIXTURE interchange path —

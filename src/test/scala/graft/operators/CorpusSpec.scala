@@ -2,18 +2,30 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
 
 /** Sanity contract for the ported SQLite-testrunner corpus: parsing is
   * line-stable, coverage stays at the expected level, and representative
   * units (scan, join-with-dup-columns, stateful DML script, DDL script)
-  * produce correct results from pristine fixtures every run. */
+  * produce correct results from pristine fixtures every run.
+  *
+  * The corpus and its `.tbl` fixtures live in the reference tree, which this
+  * repository does not hold: each test is canceled, naming the missing file,
+  * where that tree is absent. */
 class CorpusSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private def run(name: String) =
+  private def assumePresent(paths: Seq[String]): Unit =
+    paths.foreach(p => assume(Files.exists(Paths.get(p)), s"$p is not on this machine"))
+
+  /** A unit's run registers all six fixtures (one pristine catalog per run). */
+  private def run(name: String) = {
+    assumePresent(CorpusQueries.corpusFile +: CorpusQueries.fixtureFiles.map(_._1))
     CorpusQueries.all.find(_.name == name).get.run(spark, "unused")
+  }
 
   test("corpus covers ≥350 of the reference's 366 query lines") {
+    assumePresent(Seq(CorpusQueries.corpusFile))
     assert(CorpusQueries.units.size >= 360)
     assert(CorpusQueries.all.size >= 350)
     assert(CorpusQueries.skip.size <= 16, "skips must stay a short, documented list")
