@@ -358,35 +358,6 @@ final class Catalog(val spark: SparkSession) {
   private def joinedBase(d: MatViews.MatViewDef): DataFrame =
     MatViews.joinedRows(d, table)
 
-  /** Attach the durable layout rollups under `dir` (the `_rollup` family a
-    * scale build ships, [[Rollups]]) as catalog materialized views: user SQL
-    * through the Pipeline then rewrites onto the persisted state via the
-    * same exact/rollup-descent tiers session MVs use
-    * ([[answerFromMatView]]). Only states whose manifest still matches the
-    * base files attach ([[Tables.rollupState]] refuses stale or legacy
-    * dirs), and a def attaches only when every base table it reads is
-    * registered. The parquet state is bound directly — it is already
-    * durable, no checkpoint needed. In-session DML on a base then maintains
-    * the attached view O(delta) like any session view; the layout dir
-    * itself stays owned by the ingest pipeline ([[Rollups.refresh]]) and is
-    * never rewritten from here. Returns the attached names. */
-  def attachLayoutRollups(dir: String): Seq[String] =
-    Rollups.names.flatMap { n =>
-      val d = Rollups.definition(n)
-      // transformed defs (anti-join states) answer MORE than their SQL text
-      // says — never rewrite-eligible (their consumers are the query bodies)
-      if (!d.baseTables.forall(hasTable) || isMatView(n) || Rollups.transformed(n)) None
-      else Tables.rollupState(spark, dir, n).map { st =>
-        matViewDefs.put(n, d)
-        matViewState.put(n, st)
-        matViewBaseVer.put(n,
-          d.baseTables.map(t => t -> lastCommit.getOrElse(t, 0L)).toMap)
-        register(d.name, MatViews.visible(d, st))
-        logEvent("INFO", s"attached durable rollup $n from $dir/_rollup")
-        n
-      }
-    }
-
   /** Full recompute from the current base (REFRESH MATERIALIZED VIEW; also
     * the fallback for non-incremental paths). */
   def refreshMatView(name: String): Unit = {

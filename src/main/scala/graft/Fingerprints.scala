@@ -2,8 +2,8 @@ package graft
 
 /** Content fingerprints for durable-layout freshness pinning.
   *
-  * A derived on-disk artifact (a [[Rollups]] state, a bucketed copy under
-  * `_layout`, an ANN index) is only as good as the base files it was computed
+  * A derived on-disk artifact (a bucketed copy under `_layout`, an ANN
+  * index) is only as good as the base files it was computed
   * from: served on trust, a base rewrite that forgets to refresh the artifact
   * silently answers from stale state. The fix the repo already proved on the
   * ANN manifest (AnnIndex.manifestJson's corpus_fp) is generalized here: pin
@@ -44,16 +44,8 @@ object Fingerprints {
     }
   }
 
-  /** Fingerprints of each `tables` entry's flat parquet path under `dir` —
-    * the canonical base a derived layout artifact pins ({table → fp}). */
-  def ofTables(dir: String, tables: Seq[String]): Map[String, String] =
-    tables.map(t => t -> of(s"$dir/$t.parquet")).toMap
-
-  /** Render {table → fp} as a stable JSON object (sorted keys). */
-  def toJson(fps: Map[String, String]): String =
-    fps.toSeq.sorted.map { case (t, fp) => s""""$t":"$fp"""" }.mkString("{", ",", "}")
-
-  /** Parse the object written by [[toJson]] back to {table → fp}. */
+  /** Parse a flat `{"key":"fp",...}` JSON object (the `_layout/<t>.fp.json`
+    * pin [[ScaleUpLayout.bucketFacts]] writes) to {key → fp}. */
   def fromJson(s: String): Map[String, String] =
     """"([^"]+)":"([^"]+)"""".r.findAllMatchIn(s).map(m => m.group(1) -> m.group(2)).toMap
 }

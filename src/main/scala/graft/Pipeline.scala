@@ -286,17 +286,6 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
         }
         invalidatePlanCache()
         StatementResult(s, Ok, None)
-      } else if (upper.startsWith("ATTACH ROLLUPS ")) {
-        // ATTACH ROLLUPS '<dir>' — bind the durable layout's `_rollup`
-        // states (r15) as catalog materialized views; subsequent SELECTs
-        // rewrite onto them through the same tiers as session views.
-        val dir = s.drop("ATTACH ROLLUPS ".length).trim.stripPrefix("'").stripSuffix("'")
-        val attached = catalog.attachLayoutRollups(dir)
-        invalidatePlanCache()
-        StatementResult(s, Ok, Some(spark.createDataFrame(
-          java.util.Arrays.asList(attached.map(org.apache.spark.sql.Row(_)): _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("attached", org.apache.spark.sql.types.StringType))))))
       } else if (upper.startsWith("REFRESH MATERIALIZED VIEW ")) {
         catalog.refreshMatView(s.drop("REFRESH MATERIALIZED VIEW ".length).trim)
         invalidatePlanCache()

@@ -1,236 +1,83 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Durable aggregate rollups: named [[MatViews]] definitions whose IVM state
-  * is persisted inside a dataset dir (`_rollup/<name>`) by [[ScaleUpLayout]]
-  * and consumed by query bodies through [[Tables.rollupState]].
+/** Shared aggregate fragments: named [[MatViews]] definitions that query
+  * bodies compute inline through `MatViews.deltaState`/`visible` over the
+  * base tables of the dir they read. Nothing here is persisted or read back:
+  * every query answers from base data, and the only materialized state in
+  * the engine is a user-declared MATERIALIZED VIEW ([[MatViews]] through
+  * the [[Catalog]]).
   *
-  * This is the second durable-layout family (after the orderkey bucketing):
-  * where bucketing pays the co-location shuffle once at ingest, a rollup pays
-  * the AGGREGATION once at ingest. The reference reaches the same endpoint
-  * with chunk-level pruning statistics plus its aggregate operator; on Spark
-  * the idiomatic form is a materialized view maintained by the repo's own
-  * IVM tier (MatViews.deltaState/merge — O(delta) upkeep, spec-proven), so a
-  * 20M-group aggregation over 600M rows at SF100 becomes a 20M-row scan at
-  * query time.
-  *
-  * On-disk layout (r15 — versioned + fingerprint-pinned, closing the two r14
-  * verdict findings):
-  *
-  * {{{
-  *   <dir>/_rollup/<name>/manifest.json   {"version":N,"bases":{t:fp,...}}
-  *   <dir>/_rollup/<name>/v<N>/           the live state (parquet)
-  *   <dir>/_rollup/<name>/v<N-1>/         grace copy for in-flight readers
-  * }}}
-  *
-  *  - ATOMIC swap: [[build]]/[[refresh]] write the NEXT version dir in full,
-  *    then publish it with one atomic manifest rename; the PREVIOUS version
-  *    survives one more cycle, so a reader that resolved the old manifest
-  *    keeps a complete state dir under its feet — a refresh can never produce
-  *    FileNotFound or a partial listing mid-query (r14 verdict "what's
-  *    wrong" #1).
-  *  - STALENESS refusal: the manifest pins the base facts' listing
-  *    fingerprints ([[Fingerprints]], the ANN manifest's corpus_fp pattern);
-  *    [[freshState]] re-fingerprints on read and REFUSES mismatched state
-  *    (fall through to recompute — correct, only slower), so a fact rewrite
-  *    without a refresh can no longer be served silently (r14 verdict
-  *    "what's wrong" #2). The owner contract is: apply the delta to the base
-  *    files FIRST, then call [[refresh]] — the manifest pins the post-delta
-  *    base. */
+  * Expressing a body's aggregate as a definition lets the `*_rollup`
+  * registry entries check the MatViews state math (component columns,
+  * re-summation, `visible`) end to end against DuckDB's raw recompute. */
 object Rollups {
-  import MatViews._
-  import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+  import MatViews.{MatViewDef, parse}
 
-  /** tpch_q11's per-part value sums — the SF100 #1 after r13's orderkey
-    * bucketing halved the orderkey tail: the query is aggregation-bound on
-    * l_partkey, which orderkey bucketing cannot touch by design. The SUM
-    * argument text matches the query body's `net` expression exactly, so the
-    * stored decimal type and every downstream comparison are identical.
-    * Also feeds tpcds_q67/q5's rollup-from-base finest level. */
+  /** Per-part value sums; tpch_q11_rollup. The SUM argument text matches
+    * q11's `net` expression, so the decimal type is identical. */
   val LineitemByPartkey = "lineitem_by_partkey"
 
-  /** tpcds_q78's per-(customer, linestatus) non-returned cents — the r14
-    * SF100 #1 (69.2 s) is aggregation-bound on o_custkey over the orderkey
-    * join. The maintained input is the query's NOT-EXISTS anti-join itself
-    * (rows whose (l_orderkey, l_linenumber) group contains no 'R' row),
-    * materialized by [[keepNonReturned]] — NOT a row-local returnflag
-    * predicate: the fixtures carry duplicate keys with mixed flags, where an
-    * 'R' row evicts its non-'R' siblings. An anti-join view is non-monotone
-    * (a delta 'R' row can retract previously-kept rows), so incremental
-    * upkeep is sound only under the CLOSED-GROUP ingest contract: deltas
-    * carry complete orderkey groups (orders arrive whole — the ingest
-    * reality), enforced for inserts by the manifest's orderkey high-water
-    * mark (the ANN append-guard pattern, AnnIndex.storedMaxVecId).
-    * Oracle-gated by tpcds_q78_rollup, whose DuckDB twin runs the literal
-    * anti-join. */
+  /** Per-(customer, linestatus) non-returned cents; tpcds_q78_rollup. The
+    * FROM rows are the query's NOT-EXISTS anti-join ([[keepNonReturned]]),
+    * not a row-local returnflag predicate: the fixtures carry duplicate
+    * (l_orderkey, l_linenumber) keys with mixed flags, where an 'R' row
+    * evicts its non-'R' siblings. */
   val CentsByCustStatus = "lineitem_cents_by_cust_status"
 
-  /** tpcds_q23's per-customer quantity sums (the best_ss_customer CTE):
-    * the max-spend gate re-reads a 600M-row join for a 15M-row aggregate. */
+  /** Per-customer quantity sums (the best_ss_customer CTE); tpcds_q23_rollup. */
   val QtyByCustkey = "lineitem_qty_by_custkey"
 
-  /** tpcds_q23's frequent-items feeder: distinct (part, 1997-date) pairs.
-    * COUNT(DISTINCT date) is not incrementally maintainable, but the FINEST
-    * level below it is — state rows ARE the distinct pairs, so the distinct
-    * count per part is a plain row count over the state. */
+  /** Distinct (part, 1997-date) pairs; tpcds_q23_rollup. COUNT(DISTINCT
+    * date) per part is a plain row count over these rows. */
   val Dates1997ByPartkey = "lineitem_1997_dates_by_partkey"
 
-  /** tpcds_q75's per-(brand, year) returns-signed quantity and amount sums.
-    * r15 first shipped this at (part, year) grain with a query-time part
-    * join (137M state rows × 20M part dim dominated the remaining 17 s);
-    * the multi-join fragment now folds the part join into the definition,
-    * so the state IS the query's grain — ~|brands×years| rows. */
+  /** Per-(brand, year) returns-signed quantity and amount sums over the
+    * part join; tpcds_q75_rollup. */
   val SignedByBrandYear = "lineitem_signed_by_brand_year"
 
-  /** tpcds_q67's finest lattice level — per-(type, brand) revenue over the
-    * part join; the ROLLUP lattice and rank run over ~|type×brand| rows. */
-  val ValueByTypeBrand = "lineitem_value_by_type_brand"
-
-  /** SSB flight 2 + q4_3: per-(year, brand, type, supplier-nation) revenue
-    * AND profit sums. Supplier geography is keyed by the RAW s_nationkey —
-    * nation/region names resolve through broadcast dims at query time, so
-    * one state serves every region/nation slice (and a second nation join
-    * would collide on column names). All three q2 flights subsume their
-    * part predicates over the p_brand/p_type key columns. */
-  val SsbRevByYearBrandType = "ssb_rev_by_year_brand_type"
-
-  /** SSB flight 3: per-(cust-nation, supp-nation, year-month) revenue.
-    * Month grain because q3_4 slices a single month; the year flights
-    * filter yrmo ranges (year boundaries align exactly). */
-  val SsbRevByNationsYearmo = "ssb_rev_by_nations_yearmo"
-
-  /** SSB q4_1/q4_2 AND TPC-H q8: per-(cust-nation, supp-nation, year,
-    * part-type) profit AND revenue sums — the region filters, the market
-    * nation-share CASE and the groupings of all three are re-aggregations
-    * over the nationkey/type keys. */
-  val SsbProfitByNationsYearType = "ssb_profit_by_nations_year_type"
-
-  /** TPC-H q7: per-(cust-nation, supp-nation, SHIP-year) revenue — q7 keys
-    * its year off l_shipdate, so the order-date flight-3 state cannot serve
-    * it; same nationkey-keyed shape otherwise. */
-  val RevByNationsShipYear = "lineitem_rev_by_nations_shipyear"
-
-  /** TPC-H q9: per-(supp-nation, order-year) profit over the '%blue%' part
-    * slice — the part-name predicate is NOT key-derivable, so it lives in
-    * the definition WHERE (the state answers exactly this slice; a def-text
-    * change re-keys the manifest defsha). */
-  val ProfitBlueByNationYear = "lineitem_profit_blue_by_nation_year"
-
-  /** tpcds_q14's per-(part, brand) FLAG-PIVOTED quantity state (r15 second
-    * cut): q14's "channels" ARE the returnflag populations and the flag
-    * domain is the closed set {A, N, R} (fixture-verified; a `n_o` catch-all
-    * column counts anything else so the body can detect and refuse a domain
-    * violation), so the three channels pivot into CASE'd aggregate columns
-    * over ONE row per part. That makes the INTERSECT membership ("a part
-    * carrying all three flags") a ROW-LOCAL predicate (n_a>0 ∧ n_n>0 ∧
-    * n_r>0) instead of a |parts×flags|-row shuffle-and-count, and shrinks
-    * the state from |parts×flags| to |parts| rows — the r15 first cut at
-    * (part, flag, brand) grain spent its remaining 12 s at SF100
-    * re-shuffling 60M state rows for the membership count. p_brand rides in
-    * the key (functionally dependent on l_partkey, the grain is unchanged)
-    * so no part join at query time. */
-  val QtyByPartBrandFlags = "lineitem_qty_by_part_brand_flags"
-
-  /** tpcds_q80's per-(brand, channel) sales/refunds decimal sums, channel
-    * being the EXPRESSION KEY `l_linenumber % 3`. The part join and BOTH
-    * aggregation levels the query needs are paid at ingest — the state is
-    * ~|brands×3| rows and the query is a state read. (The orders join in
-    * the query spec is row-preserving under the declared l_orderkey FK and
-    * contributes no columns, so the definition reads lineitem⋈part; the
-    * oracle gate re-runs the spec WITH the orders join, so a fixture ever
-    * violating that FK fails loudly rather than silently.) */
+  /** Per-(brand, channel) sales/refunds decimal sums, channel being the
+    * expression key `l_linenumber % 3`; tpcds_q80_channel_profit_rollup's
+    * finest level (its body semi-joins orders before this fragment). */
   val ProfitByBrandChannel = "lineitem_profit_by_brand_channel"
 
-  /** TPC-H Q1's per-(flag, status, shipdate) pricing components — the
-    * closest Spark analog of the reference's chunk statistics: the fact
-    * carries ~|9 flags×status × days| pre-aggregated rows, and the query's
-    * `shipdate <=` cutoff plus every aggregate (SUM/COUNT re-sum, AVG from
-    * SUM/COUNT, MIN/MAX fold — all associative) is answered from them.
-    * MIN/MAX components make delete-deltas undefined (documented MatViews
-    * limitation); insert-only refresh is exact. */
-  val PricingByFlagStatusDay = "lineitem_pricing_by_flag_status_day"
-
-  /** TPC-H Q12's late-lines priority counts at RESULT grain (per
-    * l_linestatus): the definition carries the query's cross-table lateness
-    * predicate in its WHERE, so the 600M-row join collapses to a handful of
-    * state rows read at query time — the classic materialized view, upkeep
-    * O(delta) through the same machinery as every other state. */
+  /** TPC-H Q12's late-lines priority counts at result grain: the definition
+    * WHERE carries the cross-table lateness predicate. */
   val LateCountsByStatus = "lineitem_late_counts_by_status"
 
-  /** TPC-H Q14's per-shipdate promo/total revenue sums over the part join:
-    * the promo classification (`p_type LIKE 'PROMO%'`) is folded into the
-    * CASE'd sum at maintenance time, so the query is a date-range filter
-    * plus two re-sums over ~|days| rows. */
-  val PromoRevByShipday = "lineitem_promo_rev_by_shipday"
-
-  /** tpcds_q5's finest lattice level — per-(channel, orderpriority) signed
-    * revenue and counts, channel being the EXPRESSION KEY returnflag
-    * classification. The whole UNION-ALL + ROLLUP query re-aggregates ~10
-    * state rows. */
+  /** tpcds_q5_rollup_channels' finest lattice level: per-(channel,
+    * orderpriority) signed revenue and counts, channel being the
+    * returnflag classification. */
   val RevByChannelPriority = "lineitem_rev_by_channel_priority"
 
-  /** TPC-H Q18's per-order quantity sums AT THE QUERY'S GRAIN (r15 second
-    * cut): the orders join is paid at ingest so (o_orderdate, o_custkey)
-    * ride in the key — the grain is unchanged (o_orderkey is unique in
-    * orders) and the query becomes a ZERO-JOIN state read: filter the HAVING
-    * threshold, project, sort. The customer join in the spec contributes
-    * only c_custkey = o_custkey (row-preserving under the declared FK — the
-    * q80 precedent; the oracle re-runs the spec WITH the join, so an FK
-    * violation fails loudly). The state is written ORDERED BY the quantity
-    * component descending ([[writeOrder]]) so the >250 filter's parquet
-    * min/max stats skip all but the head row groups — guide §6 "sort order
-    * on write determines how well readers can skip". */
+  /** TPC-H Q18's per-order quantity sums at the query's grain
+    * ((o_orderdate, o_custkey) ride in the key; o_orderkey is unique). */
   val QtyDecByOrder = "lineitem_qtydec_by_order"
 
-  /** TPC-H Q13's per-customer order counts over the ORDERS base (the only
-    * non-lineitem-based state): the left-join zero-count arm re-derives at
-    * query time as customer ∖ state. */
+  /** TPC-H Q13's per-customer order counts over orders; the left join's
+    * zero-count arm re-derives as customer ∖ state. */
   val OrderCountByCust = "orders_count_by_custkey"
 
-  // NOTE (r15, measured): a distinct-(part, supplier)-pairs state for
-  // TPC-H Q16 was built and REVERTED — the fixture draws suppkey
-  // independently per line, so the "finest level" was 591M rows on the
-  // 600M-row fact (5.6 GiB for a ~1× collapse). Same ruling as the SSB
-  // per-(cust, supp, year) state: when distinct combinations approach the
-  // line count, the finest level IS the fact and a durable state buys
-  // nothing. Q16 keeps its broadcast-semi-reduced direct plan.
-
-  /** TPC-H Q10's returned-revenue sums AT THE QUERY'S GRAIN (r15 second
-    * cut): the customer join is paid at ingest so (c_name, c_nationkey) ride
-    * in the key — both functionally dependent on o_custkey (customer PK), so
-    * the grain is per-customer and the 15M-row customer⋈aggregate shuffle
-    * the first cut paid per query moves to ingest. The query's `o_orderdate
-    * >= 1997-01-01` cutoff falls on a year boundary, so `year() >= 1997` in
-    * the definition WHERE selects exactly the spec's rows; nation resolves
-    * through the broadcast dim at query time. Unlike q18, the customer join
-    * here is IN the definition, so the state is exact with no FK assumption. */
+  /** TPC-H Q10's returned-revenue sums at the query's grain: (c_name,
+    * c_nationkey) are functionally dependent on o_custkey, and the
+    * `o_orderdate >= 1997-01-01` cutoff is `year() >= 1997` in the WHERE. */
   val RRevByCust = "lineitem_rrev_by_customer"
 
-  /** TPC-H Q3's per-order unshipped revenue with ALL THREE query predicates
-    * pinned in the definition WHERE (the q9 '%blue%' precedent): BUILDING
-    * segment, ordered before / shipped after the cutoff. The fixture ships
-    * ~half the lines after 1998-06-15, so no scan layout can skip its way
-    * out of the 600M-row read at query time — but the surviving ORDER set
-    * is ~13.5M rows at SF100, and the query becomes a zero-join state
-    * read + top-10. */
+  /** TPC-H Q3's per-order unshipped revenue with all three query predicates
+    * in the definition WHERE. */
   val RevBuildingUnshipped = "lineitem_rev_building_unshipped"
 
-  /** tpcds_q23's final-pass slice at (part, customer) grain with the 1998Q1
-    * date predicate pinned in the definition WHERE: the two semi-join
-    * filters (freq parts, best customers) and the final SUM/COUNT are exact
-    * re-aggregations over ~22M state rows at SF100 instead of a fifth full
-    * 600M-row fact⋈orders pass. */
+  /** tpcds_q23's final 1998Q1 pass at (part, customer) grain, the date
+    * predicate in the definition WHERE. */
   val Price9801ByPartCust = "lineitem_9801_price_by_part_cust"
 
   /** TPC-H Q21's per-(order, supplier) lateness profile over F-status
     * orders: supp_late (MAX of the 60-day lateness flag) and late_lines
-    * (its SUM). The query's per-order EXISTS/NOT-EXISTS cascade becomes a
-    * window over ~|F-order × supplier| state rows; MIN/MAX components make
-    * this insert-only (delete-delta refused, documented MatViews rule). */
+    * (its SUM). */
   val LateByOrderSupp = "lineitem_late_by_order_supp"
 
-  private[graft] val defs: Map[String, MatViewDef] = Map(
+  private val defs: Map[String, MatViewDef] = Map(
     LineitemByPartkey -> parse(
       LineitemByPartkey,
       "SELECT l_partkey, " +
@@ -238,7 +85,7 @@ object Rollups {
         "FROM lineitem GROUP BY l_partkey"),
     CentsByCustStatus -> parse(
       CentsByCustStatus,
-      // the FROM is fed by keepNonReturned(lineitem) — see baseTransforms
+      // the FROM rows are keepNonReturned(lineitem) joined to orders
       "SELECT o_custkey, l_linestatus, " +
         "SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS cents_sum " +
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
@@ -264,73 +111,6 @@ object Rollups {
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "JOIN part ON l_partkey = p_partkey " +
         "GROUP BY p_brand, yr"),
-    ValueByTypeBrand -> parse(
-      ValueByTypeBrand,
-      "SELECT p_type, p_brand, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
-        "GROUP BY p_type, p_brand"),
-    SsbRevByYearBrandType -> parse(
-      SsbRevByYearBrandType,
-      "SELECT year(o_orderdate) AS yr, p_brand, p_type, s_nationkey, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) " +
-        "- CAST(0.6 AS DECIMAL(2,1)) * CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS profit " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN part ON l_partkey = p_partkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey " +
-        "GROUP BY yr, p_brand, p_type, s_nationkey"),
-    SsbRevByNationsYearmo -> parse(
-      SsbRevByNationsYearmo,
-      "SELECT c_nationkey, s_nationkey, " +
-        "year(o_orderdate) * 100 + month(o_orderdate) AS yrmo, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey " +
-        "GROUP BY c_nationkey, s_nationkey, yrmo"),
-    SsbProfitByNationsYearType -> parse(
-      SsbProfitByNationsYearType,
-      "SELECT c_nationkey, s_nationkey, year(o_orderdate) AS yr, p_type, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) " +
-        "- CAST(0.6 AS DECIMAL(2,1)) * CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS profit, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey " +
-        "JOIN part ON l_partkey = p_partkey " +
-        "GROUP BY c_nationkey, s_nationkey, yr, p_type"),
-    RevByNationsShipYear -> parse(
-      RevByNationsShipYear,
-      "SELECT c_nationkey, s_nationkey, year(l_shipdate) AS shipyr, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey " +
-        "GROUP BY c_nationkey, s_nationkey, shipyr"),
-    ProfitBlueByNationYear -> parse(
-      ProfitBlueByNationYear,
-      "SELECT s_nationkey, year(o_orderdate) AS yr, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) " +
-        "- CAST(0.1 AS DECIMAL(2,1)) * CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS profit " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey " +
-        "JOIN part ON l_partkey = p_partkey " +
-        "WHERE p_name LIKE '%blue%' " +
-        "GROUP BY s_nationkey, yr"),
-    QtyByPartBrandFlags -> parse(
-      QtyByPartBrandFlags,
-      "SELECT l_partkey, p_brand, " +
-        "SUM(CASE WHEN l_returnflag = 'A' THEN CAST(FLOOR(l_quantity) AS BIGINT) ELSE 0 END) AS qty_a, " +
-        "COUNT(CASE WHEN l_returnflag = 'A' THEN 1 END) AS n_a, " +
-        "SUM(CASE WHEN l_returnflag = 'N' THEN CAST(FLOOR(l_quantity) AS BIGINT) ELSE 0 END) AS qty_n, " +
-        "COUNT(CASE WHEN l_returnflag = 'N' THEN 1 END) AS n_n, " +
-        "SUM(CASE WHEN l_returnflag = 'R' THEN CAST(FLOOR(l_quantity) AS BIGINT) ELSE 0 END) AS qty_r, " +
-        "COUNT(CASE WHEN l_returnflag = 'R' THEN 1 END) AS n_r, " +
-        "SUM(CASE WHEN l_returnflag IS NULL OR l_returnflag NOT IN ('A', 'N', 'R') THEN CAST(FLOOR(l_quantity) AS BIGINT) ELSE 0 END) AS qty_o, " +
-        "COUNT(CASE WHEN l_returnflag IS NULL OR l_returnflag NOT IN ('A', 'N', 'R') THEN 1 END) AS n_o " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
-        "GROUP BY l_partkey, p_brand"),
     ProfitByBrandChannel -> parse(
       ProfitByBrandChannel,
       "SELECT p_brand, l_linenumber % 3 AS ch, " +
@@ -342,16 +122,6 @@ object Rollups {
         "ELSE CAST(0 AS DECIMAL(18,2)) END) AS refunds_sum " +
         "FROM lineitem JOIN part ON l_partkey = p_partkey " +
         "GROUP BY p_brand, ch"),
-    PricingByFlagStatusDay -> parse(
-      PricingByFlagStatusDay,
-      "SELECT l_returnflag, l_linestatus, l_shipdate, " +
-        "SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sum_base_price, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS sum_disc_price, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) * (1 + CAST(l_tax AS DECIMAL(18,2)))) AS sum_charge, " +
-        "MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty, " +
-        "COUNT(*) AS count_order " +
-        "FROM lineitem GROUP BY l_returnflag, l_linestatus, l_shipdate"),
     LateCountsByStatus -> parse(
       LateCountsByStatus,
       "SELECT l_linestatus, " +
@@ -360,15 +130,6 @@ object Rollups {
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "WHERE l_shipdate >= o_orderdate + INTERVAL 90 DAY " +
         "GROUP BY l_linestatus"),
-    PromoRevByShipday -> parse(
-      PromoRevByShipday,
-      "SELECT l_shipdate, " +
-        "SUM(CASE WHEN p_type LIKE 'PROMO%' " +
-        "THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) " +
-        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS promo_rev, " +
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS total_rev " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
-        "GROUP BY l_shipdate"),
     RevByChannelPriority -> parse(
       RevByChannelPriority,
       "SELECT CASE WHEN l_returnflag = 'R' THEN 'returns' ELSE 'catalog' END AS channel, " +
@@ -422,14 +183,10 @@ object Rollups {
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "WHERE o_orderstatus = 'F' GROUP BY l_orderkey, l_suppkey"))
 
-  def names: Seq[String] = defs.keys.toSeq.sorted
   def definition(name: String): MatViewDef = defs(name)
 
-  // ----------------------------------------------------------- FROM rows
-
   /** q78's NOT-EXISTS materialized: rows whose (l_orderkey, l_linenumber)
-    * group contains no 'R' row. Applied to base-fact rows (full set OR a
-    * closed-group delta) before the join/aggregate. */
+    * group contains no 'R' row. */
   private[graft] def keepNonReturned(li: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
     val r = li.filter(col("l_returnflag") === "R")
@@ -438,312 +195,4 @@ object Rollups {
       col("l_orderkey") === col("r_ok") && col("l_linenumber") === col("r_ln"),
       "left_anti")
   }
-
-  /** Base-row pre-transforms: the non-monotone (anti-join) part of a
-    * definition, applied to the base fact's rows before [[MatViews
-    * .deltaState]]. Exact over the FULL base; exact over a DELTA only when
-    * the delta is closed under the transform's witness groups — hence
-    * [[closureGuard]]. */
-  private val baseTransforms: Map[String, DataFrame => DataFrame] =
-    Map(CentsByCustStatus -> keepNonReturned)
-
-  /** For transformed definitions: the base column whose monotone high-water
-    * mark enforces the closed-group insert contract (a delta of wholly-new
-    * orderkeys can never retract earlier keeps). */
-  private val closureGuard: Map[String, String] =
-    Map(CentsByCustStatus -> "l_orderkey")
-
-  /** Definitions whose semantics include a base-row pre-transform the SQL
-    * text does NOT carry — these must never attach to a catalog as
-    * rewrite-eligible views (a user query matching the plain text would get
-    * transformed data) and their generic-SQL surface is the query bodies
-    * that understand the transform. */
-  private[graft] def transformed(name: String): Boolean =
-    baseTransforms.contains(name)
-
-  /** FK-elided spec joins (r16): definitions that DROP a row-preserving
-    * spec join under a declared FK — q18's customer join (contributes only
-    * c_custkey = o_custkey) and q80's orders join (contributes no columns).
-    * Entries are (childTable, childKey, parentTable, parentKey): the state
-    * equals the spec iff every child key has a parent match. [[build]] and
-    * [[refresh]] VERIFY that containment and refuse to publish on violation
-    * (loud failure at ingest; queries keep falling back to the spec-exact
-    * inline path), and the parent table's fingerprint is pinned in the
-    * manifest alongside the definition's own tables ([[pinnedTables]]) so a
-    * parent rewrite refuses the stored state instead of silently serving
-    * rows the spec would now drop — this was the repo's one by-design
-    * silent-divergence path (r15 verdict) and is now closed. */
-  private[graft] val fkElisions: Map[String, (String, String, String, String)] = Map(
-    QtyDecByOrder -> (("orders", "o_custkey", "customer", "c_custkey")),
-    ProfitByBrandChannel -> (("lineitem", "l_orderkey", "orders", "o_orderkey")))
-
-  /** Every table whose fingerprint pins the state: the definition's FROM
-    * chain plus the FK-elided parent (whose rows the spec joins but the
-    * definition deliberately does not read). */
-  private def pinnedTables(name: String): Seq[String] =
-    defs(name).baseTables ++ fkElisions.get(name).map(_._3).toSeq
-
-  /** Refuse to publish a state whose FK elision does not hold on this data:
-    * one anti-join existence probe at ingest (limit 1 — the probe stops at
-    * the first orphan). `childRows` narrows the check to a refresh delta. */
-  private def checkFkElision(spark: SparkSession, dir: String, name: String,
-      childRows: Option[DataFrame] = None): Unit =
-    fkElisions.get(name).foreach { case (ct, ck, pt, pk) =>
-      import org.apache.spark.sql.functions.col
-      val child = childRows.getOrElse(Tables.df(spark, dir, ct)).select(col(ck))
-      val orphan = child.join(Tables.df(spark, dir, pt).select(col(pk)),
-        col(ck) === col(pk), "left_anti").limit(1).count()
-      require(orphan == 0L,
-        s"rollup $name: FK elision violated — $ct.$ck carries values absent " +
-          s"from $pt.$pk, so the state would answer differently from the " +
-          "declared SQL. Refusing to publish; queries fall back to the " +
-          "inline spec-exact path.")
-    }
-
-  private def baseRows(spark: SparkSession, dir: String, d: MatViewDef): DataFrame =
-    baseTransforms.get(d.name)
-      .fold(Tables.df(spark, dir, d.base))(f => f(Tables.df(spark, dir, d.base)))
-
-  /** The defining FROM clause's rows under `dir`: the (transformed) base
-    * fact, folded through the definition's join chain (r15 multi-join). */
-  private def joinedRows(spark: SparkSession, dir: String, d: MatViewDef): DataFrame =
-    d.joins.foldLeft(baseRows(spark, dir, d)) { case (acc, j) =>
-      MatViews.joinFrames(j, acc, Tables.df(spark, dir, j.table2))
-    }
-
-  // ------------------------------------------------------------ manifest
-
-  private def stateRoot(dir: String, name: String): String = s"$dir/_rollup/$name"
-
-  private final case class Manifest(version: Long, bases: Map[String, String],
-      hwm: Option[Long], defSha: Option[String])
-
-  /** 12-hex SHA-256 of the canonical definition text — pinned in the
-    * manifest so a changed/renamed DEFINITION refuses the old state exactly
-    * like a changed base does (r15: a def edit with matching base
-    * fingerprints would otherwise silently serve the old aggregation). */
-  private def defSha(d: MatViewDef): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(d.sqlText.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-  }
-
-  private def readManifest(root: String): Option[Manifest] = {
-    val p = Paths.get(root, "manifest.json")
-    if (!Files.exists(p)) None
-    else {
-      val s = new String(Files.readAllBytes(p), "UTF-8")
-      for {
-        v <- """"version":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-        b <- """"bases":(\{.*?\})""".r.findFirstMatchIn(s).map(m => Fingerprints.fromJson(m.group(1)))
-      } yield Manifest(v, b,
-        """"hwm":(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong),
-        """"defsha":"([0-9a-f]+)"""".r.findFirstMatchIn(s).map(_.group(1)))
-    }
-  }
-
-  /** Publish `version` with one atomic rename — the only mutation a reader
-    * can ever observe. */
-  private def writeManifest(root: String, version: Long, bases: Map[String, String],
-      hwm: Option[Long], sha: String): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val hwmField = hwm.map(h => s""","hwm":$h""").getOrElse("")
-    val json = s"""{"version":$version,"defsha":"$sha","bases":${Fingerprints.toJson(bases)}$hwmField}"""
-    val tmp = Paths.get(root, ".manifest.tmp")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(root, "manifest.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Retire `_rollup/<name>` dirs whose definition no longer exists
-    * (renamed/removed defs) — the `_rollup` family is wholly owned by this
-    * object, so an unknown child is always dead state. */
-  private[graft] def retireUnknown(dir: String): Seq[String] = {
-    val root = Paths.get(dir, "_rollup")
-    if (!Files.isDirectory(root)) Nil
-    else {
-      val known = defs.keySet
-      val ls = Files.list(root)
-      val dead = try {
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala.toList
-          .filter(p => Files.isDirectory(p) && !known.contains(p.getFileName.toString))
-      } finally ls.close()
-      dead.foreach(deleteTree)
-      dead.map(_.getFileName.toString)
-    }
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    val walk = Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(q => Files.delete(q))
-    finally walk.close()
-  }
-
-  /** Retire state dirs two or more versions behind `published` (the grace
-    * window for in-flight readers), plus any pre-r15 flat-layout files. */
-  private def retireOld(root: String, published: Long): Unit = {
-    val d = Paths.get(root)
-    if (Files.isDirectory(d)) {
-      val ls = Files.list(d)
-      try ls.forEach { p =>
-        val n = p.getFileName.toString
-        val oldVersion = n.length > 1 && n.startsWith("v") &&
-          n.drop(1).forall(_.isDigit) && n.drop(1).toLong < published - 1
-        val legacyFile = Files.isRegularFile(p) &&
-          n != "manifest.json" && !n.startsWith(".manifest")
-        if (oldVersion || legacyFile) deleteTree(p)
-      } finally ls.close()
-    }
-  }
-
-  // --------------------------------------------------------- build/refresh
-
-  /** State write order (guide §6: partitioning and SORT ORDER ON WRITE
-    * determine how well readers can skip). Key: state name → the STORED
-    * component column ordered descending. q18's body filters the quantity
-    * sum (`> 250`, ~1.5 % selective), so writing the state sorted by that
-    * component clusters survivors into the head row groups and the parquet
-    * min/max stats skip the rest of a |orders|-row state. The sort is a
-    * range exchange paid at ingest; row order never changes state VALUES, so
-    * refresh ≡ rebuild is untouched. */
-  private val writeOrder: Map[String, String] =
-    Map(QtyDecByOrder -> "__s_qty_dec")
-
-  private def orderedForWrite(name: String, state: DataFrame): DataFrame =
-    writeOrder.get(name).fold(state)(c =>
-      state.sort(org.apache.spark.sql.functions.col(c).desc_nulls_last))
-
-  /** Build (or rebuild) the persisted state of `name` under `dir` from the
-    * base fact — one aggregation pass, the ingest-time cost the query path
-    * then never pays. State rows ≈ group count (√-ish of the fact), written
-    * cluster-friendly in one file set. */
-  def build(spark: SparkSession, dir: String, name: String): Long = {
-    val d = defs(name)
-    val root = stateRoot(dir, name)
-    // fingerprint BEFORE reading (the ANN buildAll discipline): a concurrent
-    // base rewrite mid-build leaves a mismatched manifest (→ recompute),
-    // never a manifest that blesses half-old half-new state
-    val fps = Fingerprints.ofTables(dir, pinnedTables(name))
-    val next = readManifest(root).map(_.version + 1).getOrElse(1L)
-    val path = s"$root/v$next"
-    checkFkElision(spark, dir, name)
-    orderedForWrite(name, deltaState(d, joinedRows(spark, dir, d)))
-      .write.mode("overwrite").parquet(path)
-    // transformed defs pin the closure column's high-water mark over the RAW
-    // base — the insert-delta guard for the closed-group contract
-    val hwm = closureGuard.get(name).map { c =>
-      import org.apache.spark.sql.functions.{max => fmax, col}
-      val row = Tables.df(spark, dir, d.base).agg(fmax(col(c))).head
-      if (row.isNullAt(0)) -1L else row.getLong(0)
-    }
-    writeManifest(root, next, fps, hwm, defSha(d))
-    retireOld(root, next)
-    spark.read.parquet(path).count()
-  }
-
-  /** O(delta) IVM upkeep: merge a (possibly signed) delta into the stored
-    * state and publish it as the next version (atomic manifest swap; the
-    * previous version dir survives one cycle for in-flight readers). `sign`
-    * −1 processes a delete-delta; for join definitions `changed` names the
-    * delta's table (default: the base fact) and the delta joins the CURRENT
-    * other side — Δ(A⋈B) = ΔA⋈B / A⋈ΔB, the Catalog.viewDelta identity. */
-  def refresh(spark: SparkSession, dir: String, name: String,
-      delta: DataFrame, sign: Int = 1, changed: String = ""): Unit = {
-    val d = defs(name)
-    val root = stateRoot(dir, name)
-    val m = readManifest(root).getOrElse(
-      sys.error(s"no rollup state to refresh at $root — run build first"))
-    require(m.defSha.contains(defSha(d)),
-      s"$name: the stored state was built for a different definition " +
-        s"(manifest ${m.defSha.getOrElse("<none>")}) — rebuild with Rollups.build")
-    val changedT = if (changed.isEmpty) d.base else changed
-    require(d.baseTables.exists(_.equalsIgnoreCase(changedT)),
-      s"$changedT is not a base table of $name (${d.baseTables.mkString(", ")})")
-    // transformed (anti-join) defs: a base-fact insert-delta is exact only
-    // when it cannot retract earlier keeps — enforced by requiring wholly-new
-    // closure groups past the stored high-water mark (delete-deltas must
-    // carry complete groups: documented contract, same as the insert side)
-    var newHwm = m.hwm
-    if (changedT.equalsIgnoreCase(d.base)) closureGuard.get(name).foreach { c =>
-      import org.apache.spark.sql.functions.{min => fmin, max => fmax, col, lit, count}
-      val row = delta.agg(fmin(col(c)), fmax(col(c)), count(lit(1))).head
-      if (row.getLong(2) > 0L) {
-        val (dMin, dMax) = (row.getLong(0), row.getLong(1))
-        if (sign > 0) {
-          require(m.hwm.forall(dMin > _),
-            s"$name insert-delta must carry wholly-new $c groups: " +
-              s"min(delta.$c)=$dMin ≤ stored high-water mark ${m.hwm.getOrElse(-1L)} " +
-              "(the anti-join state cannot retract earlier keeps incrementally — " +
-              "rebuild with Rollups.build instead)")
-          newHwm = Some(math.max(m.hwm.getOrElse(-1L), dMax))
-        }
-      }
-    }
-    val deltaRows = baseTransforms.get(name)
-      .filter(_ => changedT.equalsIgnoreCase(d.base)).fold(delta)(f => f(delta))
-    // Δ(A⋈B⋈…): substitute the delta for the ONE changed table and join the
-    // CURRENT others (r15 multi-join chain)
-    val rows =
-      if (changedT.equalsIgnoreCase(d.base))
-        d.joins.foldLeft(deltaRows) { case (acc, j) =>
-          MatViews.joinFrames(j, acc, Tables.df(spark, dir, j.table2))
-        }
-      else d.joins.foldLeft(baseRows(spark, dir, d)) { case (acc, j) =>
-        MatViews.joinFrames(j, acc,
-          if (j.table2.equalsIgnoreCase(changedT)) delta
-          else Tables.df(spark, dir, j.table2))
-      }
-    // FK-elision guard on the delta: inserted child rows must keep the
-    // containment the elided spec join relies on (a violating delta is
-    // refused BEFORE any state is written)
-    fkElisions.get(name).foreach { case (ct, _, _, _) =>
-      if (sign > 0 && ct.equalsIgnoreCase(changedT))
-        checkFkElision(spark, dir, name, Some(delta))
-    }
-    val merged = merge(d, spark.read.parquet(s"$root/v${m.version}"),
-      deltaState(d, rows, sign))
-    val next = m.version + 1
-    orderedForWrite(name, merged).write.mode("overwrite").parquet(s"$root/v$next")
-    // owner contract: the base files already carry the delta — pin them NOW
-    writeManifest(root, next, Fingerprints.ofTables(dir, pinnedTables(name)), newHwm, defSha(d))
-    retireOld(root, next)
-  }
-
-  // --------------------------------------------------------------- reads
-
-  /** The live state rows under `dir` for `name`, ONLY when the manifest's
-    * pinned base fingerprints still match the base files — stale or legacy
-    * (un-pinned) state is refused loudly and the caller recomputes from the
-    * fact (correct, only slower). */
-  private[graft] def freshState(spark: SparkSession, dir: String, name: String): Option[DataFrame] = {
-    val root = stateRoot(dir, name)
-    readManifest(root) match {
-      case None =>
-        if (Files.exists(Paths.get(root)))
-          System.err.println(s"graft: REFUSING un-pinned legacy rollup state at $root " +
-            "(no manifest.json) — rebuild with Rollups.build / ScaleUpLayout --rollup-only")
-        None
-      case Some(m) =>
-        val current = Fingerprints.ofTables(dir, pinnedTables(name))
-        val sha = defSha(defs(name))
-        if (!m.defSha.contains(sha)) {
-          System.err.println(s"graft: REFUSING rollup state at $root — the DEFINITION " +
-            s"moved (manifest ${m.defSha.getOrElse("<none>")} vs current $sha); the " +
-            "stored aggregation no longer answers this definition. Rebuild with " +
-            "Rollups.build / ScaleUpLayout --rollup-only.")
-          None
-        } else if (current != m.bases) {
-          System.err.println(s"graft: REFUSING STALE rollup state at $root — base " +
-            s"fingerprints moved (${m.bases} -> $current); recomputing from the fact. " +
-            "Refresh the state with Rollups.refresh after base changes.")
-          None
-        } else Some(spark.read.parquet(s"$root/v${m.version}"))
-    }
-  }
-
-  /** The user-visible rollup rows under `dir`, if the layout carries fresh
-    * state (None ⇒ caller recomputes from the base fact). */
-  def visibleDf(spark: SparkSession, dir: String, name: String): Option[DataFrame] =
-    Tables.rollupState(spark, dir, name).map(visible(defs(name), _))
 }

@@ -17,9 +17,16 @@ import java.nio.file.{Files, Paths}
   * ~128 MiB parquet per file from the source bytes × factor, the layout a
   * 1000-executor scan wants.
   *
+  * The output dir holds the flat hive-partitioned tables plus the
+  * orderkey-bucketed copy of the two facts ([[bucketFacts]], `_bucketed/`
+  * and `_layout/`); it carries no precomputed aggregates, so every query
+  * reads base data.
+  *
   * Usage: `runMain graft.ScaleUpLayout <srcSfDir> <dstDir> [factor=1000]`,
-  * then `SPARK_GRAFT_SF_DIR=<dstDir> runMain graft.Bench`. Bench-evidence
-  * tooling, not part of the driver contract.
+  * then `SPARK_GRAFT_SF_DIR=<dstDir> runMain graft.Bench`;
+  * `runMain graft.ScaleUpLayout --bucket-only <dir> [buckets]` adds the
+  * bucketed copy to an existing scaled dir. Bench-evidence tooling, not part
+  * of the driver contract.
   */
 object ScaleUpLayout {
 
@@ -154,43 +161,21 @@ object ScaleUpLayout {
     buckets
   }
 
-  /** Durable rollups shipped with every scale build (see [[Rollups]]): each
-    * aggregation is paid once here, not once per query. */
-  def rollupFacts(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    Rollups.retireUnknown(dir).foreach(n => println(s"rollup $n: unknown definition, retired"))
-    Rollups.names.foreach { name =>
-      // idempotent ingest: a state whose manifest still matches the base
-      // fingerprints needs no rebuild (new/stale/legacy states do)
-      if (Tables.rollupState(spark, dir, name).isDefined)
-        println(s"rollup $name: fresh, skipped")
-      else {
-        val rows = Rollups.build(spark, dir, name)
-        println(s"rollup $name: $rows state rows" +
-          s" -> ${dirBytes(s"$dir/_rollup/$name") >> 20}MiB")
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     // --bucket-only <dir> [buckets]: add the bucketed layout to an EXISTING
-    // scaled dir without rebuilding it; --rollup-only <dir>: same for the
-    // durable rollups
+    // scaled dir without rebuilding it
     val bucketOnly = args.headOption.contains("--bucket-only")
-    val rollupOnly = args.headOption.contains("--rollup-only")
     val spark = GraftSession.tuned(
       SparkSession.builder().master("local[32]").appName("graft-scale-up-layout"),
       shufflePartitions = 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (bucketOnly) {
       bucketFacts(spark, args(1), args.lift(2).map(_.toInt).getOrElse(0))
-    } else if (rollupOnly) {
-      rollupFacts(spark, args(1))
     } else {
       val (src, dst) = (args(0), args(1))
       val factor = args.lift(2).map(_.toInt).getOrElse(1000)
       writeScaled(spark, src, dst, factor)
       bucketFacts(spark, dst) // the bucketed facts ARE the production layout
-      rollupFacts(spark, dst)
     }
     spark.stop()
   }

@@ -80,8 +80,9 @@ object Tables {
     * metadata lives in the catalog, not in parquet, so a fresh session must
     * replay the DDL before the zero-exchange bucketed join kicks in). The
     * driver's fixture dirs carry no manifest and fall through to the flat
-    * path unchanged; `SPARK_GRAFT_FLAT=1` forces the flat read for layout
-    * A/Bs on a manifest-carrying dir. At 100 TB this is the production
+    * path unchanged; `SPARK_GRAFT_FLAT=1` makes every table read its flat
+    * files even where `_layout/` carries a bucketed copy (the bucketed-vs-
+    * flat A/B switch). At 100 TB this is the production
     * co-location story: both fact tables bucketed by orderkey join and
     * pre-aggregate with ZERO data-sized exchanges, paying the partitioning
     * shuffle once at ingest instead of once per query (the durable-storage
@@ -143,16 +144,6 @@ object Tables {
     bucketedFreshCache.clear()
     schemaCache.clear()
   }
-
-  /** Durable-rollup hook: a dataset dir built by [[ScaleUpLayout]] may carry
-    * `_rollup/<name>` — the persisted IVM state of a [[MatViews]] definition
-    * over a base fact (see [[Rollups]]). Served only when the state's
-    * manifest pins the CURRENT base fingerprints (r15 — stale or legacy
-    * state is refused loudly and the caller recomputes);
-    * `SPARK_GRAFT_FLAT=1` forces the recompute path for A/Bs. */
-  def rollupState(spark: SparkSession, dir: String, name: String): Option[DataFrame] =
-    if (sys.env.get("SPARK_GRAFT_FLAT").contains("1")) None
-    else Rollups.freshState(spark, dir, name)
 
   /** Rewrite `ts` to a nanosecond-epoch long whatever the file carried.
     * TIMESTAMP_NTZ wall-clock is interpreted in the session zone (pinned to

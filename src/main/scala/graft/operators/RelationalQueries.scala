@@ -441,52 +441,25 @@ object RelationalQueries {
       |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
-    // Durable-rollup finest level (r15): per-(flag, status, shipdate)
-    // pricing components ([[graft.Rollups.PricingByFlagStatusDay]]). The
-    // `shipdate <=` cutoff filters state rows, and every aggregate
-    // re-derives associatively (SUM/COUNT re-sum, AVG from the exact
-    // totals, MIN/MAX fold). Without a layout the r14 direct single-pass
-    // aggregate runs instead (r16: the r15 inline finest-level
-    // decomposition added an extra exchange that cost −26% at sf0.1 with
-    // no inline benefit; the state math stays oracle-gated end-to-end by
-    // the stateful-dir verify gate).
-    graft.Rollups.visibleDf(s, dir, graft.Rollups.PricingByFlagStatusDay) match {
-      case Some(det) =>
-        det.filter(col("l_shipdate") <= "1998-09-02 00:00:00")
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(
-            asDouble(sum(col("sum_qty"))).as("sum_qty"),
-            asDouble(sum(col("sum_base_price"))).as("sum_base_price"),
-            asDouble(sum(col("sum_disc_price"))).as("sum_disc_price"),
-            asDouble(sum(col("sum_charge"))).as("sum_charge"),
-            (asDouble(sum(col("sum_qty"))) / sum(col("count_order"))).as("avg_qty"),
-            (asDouble(sum(col("sum_base_price"))) / sum(col("count_order"))).as("avg_price"),
-            asDouble(min(col("min_qty"))).as("min_qty"),
-            asDouble(max(col("max_qty"))).as("max_qty"),
-            // every group carries ≥1 state row, so the SUM is never null —
-            // coalesce only pins the non-nullable schema the direct
-            // count(*) path declares
-            coalesce(sum(col("count_order")), lit(0L)).as("count_order"))
-          .orderBy("l_returnflag", "l_linestatus")
-      case None =>
-        val price = dec(col("l_extendedprice"))
-        val disc = dec(col("l_discount"))
-        val tax = dec(col("l_tax"))
-        t(s, dir, "lineitem")
-          .filter(col("l_shipdate") <= "1998-09-02 00:00:00")
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(
-            asDouble(sum(dec(col("l_quantity")))).as("sum_qty"),
-            asDouble(sum(price)).as("sum_base_price"),
-            asDouble(sum(price * (lit(1) - disc))).as("sum_disc_price"),
-            asDouble(sum(price * (lit(1) - disc) * (lit(1) + tax))).as("sum_charge"),
-            (asDouble(sum(dec(col("l_quantity")))) / count(lit(1))).as("avg_qty"),
-            (asDouble(sum(price)) / count(lit(1))).as("avg_price"),
-            asDouble(min(col("l_quantity"))).as("min_qty"),
-            asDouble(max(col("l_quantity"))).as("max_qty"),
-            count(lit(1)).as("count_order"))
-          .orderBy("l_returnflag", "l_linestatus")
-    }
+    // Direct single-pass aggregate (r16: an inline finest-level
+    // decomposition added an exchange that cost −26% at sf0.1).
+    val price = dec(col("l_extendedprice"))
+    val disc = dec(col("l_discount"))
+    val tax = dec(col("l_tax"))
+    t(s, dir, "lineitem")
+      .filter(col("l_shipdate") <= "1998-09-02 00:00:00")
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(
+        asDouble(sum(dec(col("l_quantity")))).as("sum_qty"),
+        asDouble(sum(price)).as("sum_base_price"),
+        asDouble(sum(price * (lit(1) - disc))).as("sum_disc_price"),
+        asDouble(sum(price * (lit(1) - disc) * (lit(1) + tax))).as("sum_charge"),
+        (asDouble(sum(dec(col("l_quantity")))) / count(lit(1))).as("avg_qty"),
+        (asDouble(sum(price)) / count(lit(1))).as("avg_price"),
+        asDouble(min(col("l_quantity"))).as("min_qty"),
+        asDouble(max(col("l_quantity"))).as("max_qty"),
+        count(lit(1)).as("count_order"))
+      .orderBy("l_returnflag", "l_linestatus")
   }
 
   /** COUNT(DISTINCT) (reference: WindowFunction::CountDistinct,

@@ -104,33 +104,13 @@ object SsbQueries {
        |JOIN ($supNationSql) s ON l_suppkey = s_suppkey
        |WHERE $partCond AND s_region = '$region'
        |GROUP BY d_year, p_brand ORDER BY d_year, p_brand""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): the per-(year, brand, type,
-    // supp-nationkey) state (Rollups.SsbRevByYearBrandType, multi-join
-    // definition) carries every flight-2 slice — the part predicate applies
-    // to the state's own p_brand/p_type key columns and the region filter
-    // resolves through the broadcast nation⋈region dim. The r15 floor
-    // audit's "no rewrite headroom short of a precomputed state" is that
-    // state. State-path ≡ original spec-plan equality is spec-pinned
-    // (RollupSpec layout-dir pickup); the DuckDB oracle gates the plan.
-    graft.Rollups.visibleDf(s, dir, graft.Rollups.SsbRevByYearBrandType) match {
-      case Some(st) =>
-        val regionKeys = t(s, dir, "nation")
-          .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-          .filter(col("r_name") === region).select("n_nationkey")
-        partCol(st)
-          .join(broadcast(regionKeys), col("s_nationkey") === col("n_nationkey"), "left_semi")
-          .groupBy(col("yr").as("d_year"), col("p_brand"))
-          .agg(asDouble(sum(col("rev"))).as("revenue"))
-          .orderBy("d_year", "p_brand")
-      case None =>
-        lineorder(s, dir)
-          .join(broadcast(partCol(t(s, dir, "part"))), col("l_partkey") === col("p_partkey"))
-          .join(supNation(s, dir).filter(col("s_region") === region),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy(year(col("o_orderdate")).as("d_year"), col("p_brand"))
-          .agg(netRevenue.as("revenue"))
-          .orderBy("d_year", "p_brand")
-    }
+    lineorder(s, dir)
+      .join(broadcast(partCol(t(s, dir, "part"))), col("l_partkey") === col("p_partkey"))
+      .join(supNation(s, dir).filter(col("s_region") === region),
+        col("l_suppkey") === col("s_suppkey"))
+      .groupBy(year(col("o_orderdate")).as("d_year"), col("p_brand"))
+      .agg(netRevenue.as("revenue"))
+      .orderBy("d_year", "p_brand")
   }
 
   val q2_1: Q = flight2("ssb_q2_1", "p_type = 'ECONOMY'", _.filter(col("p_type") === "ECONOMY"), "AMERICA")
@@ -142,7 +122,7 @@ object SsbQueries {
 
   private def flight3(name: String, geoCondSql: String,
       custF: DataFrame => DataFrame, supF: DataFrame => DataFrame,
-      dateCondSql: String, dateF: Column, yrmoF: Column): Q = Q(
+      dateCondSql: String, dateF: Column): Q = Q(
     name,
     s"""SELECT c_nation, s_nation, year(o_orderdate) AS d_year, $netRevenueSql AS revenue
        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -158,36 +138,12 @@ object SsbQueries {
     // (same layout/data, solo best-of-2): join-first 45.1 s vs eager-agg
     // variant 100.9 s. Eager aggregation pays only when the group count is
     // far below the input row count (see q4_1, where it wins 3.4×).
-    // Durable-rollup fast path (r15): per-(cust-nation, supp-nation,
-    // year-month) revenue state (Rollups.SsbRevByNationsYearmo, multi-join
-    // definition, month grain for q3_4's single-month slice). The raw
-    // nationkey keys join the broadcast nation⋈region dim per side — two
-    // aliased copies, sidestepping the column collision a second nation
-    // join in the definition would cause.
-    graft.Rollups.visibleDf(s, dir, graft.Rollups.SsbRevByNationsYearmo) match {
-      case Some(st) =>
-        val nr = t(s, dir, "nation")
-          .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey"), col("n_name"), col("r_name"))
-        val cdim = custF(nr.select(col("n_nationkey").as("ck"),
-          col("n_name").as("c_nation"), col("r_name").as("c_region")))
-        val sdim = supF(nr.select(col("n_nationkey").as("sk"),
-          col("n_name").as("s_nation"), col("r_name").as("s_region")))
-        st.filter(yrmoF)
-          .join(broadcast(cdim), col("c_nationkey") === col("ck"))
-          .join(broadcast(sdim), col("s_nationkey") === col("sk"))
-          .groupBy(col("c_nation"), col("s_nation"),
-            expr("CAST(yrmo DIV 100 AS INT)").as("d_year"))
-          .agg(asDouble(sum(col("rev"))).as("revenue"))
-          .orderBy(col("d_year"), col("revenue").desc, col("c_nation"), col("s_nation"))
-      case None =>
-        lineorder(s, dir).filter(dateF)
-          .join(custF(custNation(s, dir)), col("o_custkey") === col("c_custkey"))
-          .join(supF(supNation(s, dir)), col("l_suppkey") === col("s_suppkey"))
-          .groupBy(col("c_nation"), col("s_nation"), year(col("o_orderdate")).as("d_year"))
-          .agg(netRevenue.as("revenue"))
-          .orderBy(col("d_year"), col("revenue").desc, col("c_nation"), col("s_nation"))
-    }
+    lineorder(s, dir).filter(dateF)
+      .join(custF(custNation(s, dir)), col("o_custkey") === col("c_custkey"))
+      .join(supF(supNation(s, dir)), col("l_suppkey") === col("s_suppkey"))
+      .groupBy(col("c_nation"), col("s_nation"), year(col("o_orderdate")).as("d_year"))
+      .agg(netRevenue.as("revenue"))
+      .orderBy(col("d_year"), col("revenue").desc, col("c_nation"), col("s_nation"))
   }
 
   private val years9699 =
@@ -197,23 +153,22 @@ object SsbQueries {
   val q3_1: Q = flight3("ssb_q3_1",
     "c_region = 'ASIA' AND s_region = 'ASIA'",
     _.filter(col("c_region") === "ASIA"), _.filter(col("s_region") === "ASIA"),
-    years9699._1, years9699._2, col("yrmo").between(199601, 199912))
+    years9699._1, years9699._2)
   val q3_2: Q = flight3("ssb_q3_2",
     "c_region = 'AMERICA' AND s_region = 'AMERICA'",
     _.filter(col("c_region") === "AMERICA"), _.filter(col("s_region") === "AMERICA"),
-    years9699._1, years9699._2, col("yrmo").between(199601, 199912))
+    years9699._1, years9699._2)
   val q3_3: Q = flight3("ssb_q3_3",
     "c_nation IN ('NATION_5','NATION_7') AND s_nation IN ('NATION_5','NATION_7')",
     _.filter(col("c_nation").isin("NATION_5", "NATION_7")),
     _.filter(col("s_nation").isin("NATION_5", "NATION_7")),
-    years9699._1, years9699._2, col("yrmo").between(199601, 199912))
+    years9699._1, years9699._2)
   val q3_4: Q = flight3("ssb_q3_4",
     "c_nation IN ('NATION_5','NATION_7') AND s_nation IN ('NATION_5','NATION_7')",
     _.filter(col("c_nation").isin("NATION_5", "NATION_7")),
     _.filter(col("s_nation").isin("NATION_5", "NATION_7")),
     "o_orderdate >= TIMESTAMP '1997-12-01 00:00:00' AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'",
-    col("o_orderdate") >= "1997-12-01 00:00:00" && col("o_orderdate") < "1998-01-01 00:00:00",
-    col("yrmo") === 199712)
+    col("o_orderdate") >= "1997-12-01 00:00:00" && col("o_orderdate") < "1998-01-01 00:00:00")
 
   // ------------------------------------------------------------- flight 4
 
@@ -227,25 +182,6 @@ object SsbQueries {
        |WHERE c_region = 'AMERICA' AND s_region = 'AMERICA'
        |  AND p_type IN ('ECONOMY','STANDARD')
        |GROUP BY d_year, c_nation ORDER BY d_year, c_nation""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): the per-(cust-nation, supp-nation,
-    // year, part-type) profit state (Rollups.SsbProfitByNationsYearType)
-    // answers BOTH q4_1 and q4_2 — region filters semi-join the broadcast
-    // nation⋈region keys, p_type is a key column.
-    val statePath = graft.Rollups.visibleDf(s, dir, graft.Rollups.SsbProfitByNationsYearType)
-      .map { st =>
-        val nr = t(s, dir, "nation")
-          .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-          .filter(col("r_name") === "AMERICA")
-        st.filter(col("p_type").isin("ECONOMY", "STANDARD"))
-          .join(broadcast(nr.select("n_nationkey")),
-            col("s_nationkey") === col("n_nationkey"), "left_semi")
-          .join(broadcast(nr.select(col("n_nationkey").as("ck"),
-            col("n_name").as("c_nation"))), col("c_nationkey") === col("ck"))
-          .groupBy(col("yr").as("d_year"), col("c_nation"))
-          .agg(asDouble(sum(col("profit"))).as("profit"))
-          .orderBy("d_year", "c_nation")
-      }
-    statePath.getOrElse {
     // Same eager-aggregation shape as flight 3: both broadcast dims resolve
     // per-line profit terms first, profit is pre-summed per (custkey, year)
     // after the orderkey join, and only then does the SF-proportional
@@ -282,7 +218,6 @@ object SsbQueries {
       .groupBy(col("d_year"), col("c_nation"))
       .agg(asDouble(sum(col("profit_dec"))).as("profit"))
       .orderBy("d_year", "c_nation")
-    }
   }
 
   val q4_2: Q = Q(
@@ -296,24 +231,6 @@ object SsbQueries {
        |  AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
        |  AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
        |GROUP BY d_year, s_nation, p_type ORDER BY d_year, s_nation, p_type""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): same state as q4_1, different slice —
-    // yr is year-aligned with the date range, the customer side is a
-    // nationkey semi filter and s_nation resolves through the broadcast dim.
-    val statePath = graft.Rollups.visibleDf(s, dir, graft.Rollups.SsbProfitByNationsYearType)
-      .map { st =>
-        val nr = t(s, dir, "nation")
-          .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-          .filter(col("r_name") === "AMERICA")
-        st.filter(col("yr").isin(1997, 1998))
-          .join(broadcast(nr.select("n_nationkey")),
-            col("c_nationkey") === col("n_nationkey"), "left_semi")
-          .join(broadcast(nr.select(col("n_nationkey").as("sk"),
-            col("n_name").as("s_nation"))), col("s_nationkey") === col("sk"))
-          .groupBy(col("yr").as("d_year"), col("s_nation"), col("p_type"))
-          .agg(asDouble(sum(col("profit"))).as("profit"))
-          .orderBy("d_year", "s_nation", "p_type")
-      }
-    if (statePath.isDefined) statePath.get else {
     // No customer COLUMN reaches the output — the customer join is a pure
     // region filter, and c_custkey's uniqueness means inner ≡ semi. Semi-
     // reducing ORDERS (the narrow 2-column side) by the AMERICA custkeys
@@ -332,7 +249,6 @@ object SsbQueries {
       .groupBy(year(col("o_orderdate")).as("d_year"), col("s_nation"), col("p_type"))
       .agg(profit.as("profit"))
       .orderBy("d_year", "s_nation", "p_type")
-    }
   }
 
   val q4_3: Q = Q(
@@ -345,27 +261,14 @@ object SsbQueries {
        |  AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
        |  AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
        |GROUP BY d_year, p_brand ORDER BY d_year, p_brand""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): the flight-2 state also carries the
-    // profit sum, so q4_3 is a (year, nation) slice of it.
-    graft.Rollups.visibleDf(s, dir, graft.Rollups.SsbRevByYearBrandType) match {
-      case Some(st) =>
-        val n3 = t(s, dir, "nation")
-          .filter(col("n_name") === "NATION_3").select("n_nationkey")
-        st.filter(col("yr").isin(1997, 1998))
-          .join(broadcast(n3), col("s_nationkey") === col("n_nationkey"), "left_semi")
-          .groupBy(col("yr").as("d_year"), col("p_brand"))
-          .agg(asDouble(sum(col("profit"))).as("profit"))
-          .orderBy("d_year", "p_brand")
-      case None =>
-        lineorder(s, dir)
-          .filter(col("o_orderdate") >= "1997-01-01 00:00:00" && col("o_orderdate") < "1999-01-01 00:00:00")
-          .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-          .join(supNation(s, dir).filter(col("s_nation") === "NATION_3"),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy(year(col("o_orderdate")).as("d_year"), col("p_brand"))
-          .agg(profit.as("profit"))
-          .orderBy("d_year", "p_brand")
-    }
+    lineorder(s, dir)
+      .filter(col("o_orderdate") >= "1997-01-01 00:00:00" && col("o_orderdate") < "1999-01-01 00:00:00")
+      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+      .join(supNation(s, dir).filter(col("s_nation") === "NATION_3"),
+        col("l_suppkey") === col("s_suppkey"))
+      .groupBy(year(col("o_orderdate")).as("d_year"), col("p_brand"))
+      .agg(profit.as("profit"))
+      .orderBy("d_year", "p_brand")
   }
 
   /** Bench-floor probe (r15 SSB audit): the flights' shared substrate — the

@@ -144,17 +144,12 @@ object TpcdsQueries {
     // eager-agg variant 130.5 s. Contrast ssb_q4_1, where selective
     // broadcast dims shrink the fact BEFORE a low-cardinality pre-agg and
     // eager aggregation wins 3.4×.
-    // Durable-rollup finest level (r15): the (channel, priority) grain IS
-    // the query's finest lattice level ([[graft.Rollups
-    // .RevByChannelPriority]]) — a layout dir re-aggregates ~10 state rows;
-    // otherwise the identical finest level is computed inline by the same
-    // MatViews deltaState math over the (bucketed) orderkey join (the r14
-    // rollup-from-base shape, now shared with the durable state).
-    graft.Rollups.visibleDf(s, dir, graft.Rollups.RevByChannelPriority)
-      .getOrElse {
-        val d = graft.Rollups.definition(graft.Rollups.RevByChannelPriority)
-        graft.MatViews.visible(d, graft.MatViews.deltaState(d, lineorder(s, dir)))
-      }
+    // The (channel, priority) grain IS the query's finest lattice level
+    // ([[graft.Rollups.RevByChannelPriority]]), computed by the MatViews
+    // deltaState math over the (bucketed) orderkey join; the coarser levels
+    // re-aggregate from it (the r14 rollup-from-base shape).
+    val d = graft.Rollups.definition(graft.Rollups.RevByChannelPriority)
+    graft.MatViews.visible(d, graft.MatViews.deltaState(d, lineorder(s, dir)))
       .transform { base =>
         val revType = base.schema("rev").dataType
         val lvl1 = base.groupBy(col("channel"))
@@ -259,16 +254,10 @@ object TpcdsQueries {
     // coarser lattice levels re-aggregate EXACTLY from the finest level's
     // ~|type×brand| rows instead — one full-fact aggregation, two tiny ones.
     // Same rows, same types; DuckDB recomputes the spec ROLLUP.
-    // ... and the finest level IS the durable per-(type, brand) state when
-    // the layout carries it (r15 multi-join definition — the part join and
-    // the 600M-row aggregation are both paid at ingest; the earlier
-    // per-part state still needed a 20M-row state ⋈ part join here).
-    val base = graft.Rollups.visibleDf(s, dir, graft.Rollups.ValueByTypeBrand)
-      .map(_.select(col("p_type"), col("p_brand"), col("rev")))
-      .getOrElse(t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_type"), col("p_brand"))
-        .agg(sum(netRev).as("rev")))
+    val base = t(s, dir, "lineitem")
+      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+      .groupBy(col("p_type"), col("p_brand"))
+      .agg(sum(netRev).as("rev"))
       .toDF("p_type", "p_brand", "rev") // re-key rollup attrs (self-join check)
     val revType = base.schema("rev").dataType
     val lvl1 = base.groupBy(col("p_type"))
@@ -452,72 +441,30 @@ object TpcdsQueries {
       |GROUP BY ROLLUP(channel, p_brand)
       |HAVING SUM(qty) * (SELECT n FROM tot) > (SELECT t FROM tot) * 950
       |ORDER BY channel NULLS FIRST, p_brand NULLS FIRST""".stripMargin) { (s, dir) =>
-    // Raw finest-level shape: one (part, channel, brand) aggregation over
+    // Finest-level shape: one (part, channel, brand) aggregation over
     // the fact⋈part join; all three consumers (channel-membership semi set,
     // 1-row totals, ROLLUP re-aggregate) sit on the SAME aggregate subtree
     // so the physical plan reuses one Exchange (ReuseExchange) — a single
     // fact pass and NO driver-side action (r16: the r15 flat path ran the
     // full aggregation twice, once inside a `.head` domain guard and once
     // for the query; guide §5 "no driver loops in query paths").
-    def rawShape: DataFrame = {
-      val det3 = t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("l_partkey"), col("l_returnflag").as("channel"), col("p_brand"))
-        .agg(sum(floor(col("l_quantity")).cast("long")).as("qty_sum"),
-          count(lit(1)).as("n"))
-      val cross = det3.filter(col("channel").isin("A", "N", "R"))
-        .groupBy("l_partkey").agg(count(lit(1)).as("nch"))
-        .filter(col("nch") === 3).select("l_partkey")
-      val tot = det3.agg(sum(col("qty_sum")).as("t"), sum(col("n")).as("n"))
-      det3.join(cross, Seq("l_partkey"), "left_semi")
-        .rollup(col("channel"), col("p_brand"))
-        .agg(sum(col("qty_sum")).as("volume"), sum(col("n")).as("n_rows"))
-        .toDF("channel", "p_brand", "volume", "n_rows")
-        .crossJoin(broadcast(tot)) // 1-row totals, never a real cartesian
-        .filter(col("volume") * col("n") > col("t") * 950)
-        .select("channel", "p_brand", "volume", "n_rows")
-        .orderBy(col("channel").asc_nulls_first, col("p_brand").asc_nulls_first)
-    }
-    // Durable-rollup fast path (r15 second cut, guard restructured in r16):
-    // the state is FLAG-PIVOTED to ONE row per part — q14's channels are the
-    // returnflag populations over the closed domain {A, N, R}, so the
-    // INTERSECT membership ("a part carrying all three flags") is the
-    // ROW-LOCAL predicate n_a>0 ∧ n_n>0 ∧ n_r>0 instead of a |parts×flags|-
-    // row shuffle-and-count. The n_o/qty_o catch-all columns count rows
-    // whose flag is outside {A, N, R}: any such row makes the pivot unable
-    // to reconstruct that channel's rollup groups, so the ONE-ROW totals
-    // read over the (small, persisted) state detects it and falls back to
-    // the raw shape (correct, slower). The guard only ever runs against a
-    // persisted state — never against an inline fact aggregation — so flat
-    // dirs pay exactly one fact pass and no driver action.
-    graft.Rollups.visibleDf(s, dir, graft.Rollups.QtyByPartBrandFlags) match {
-      case Some(det) =>
-        val totRow = det.agg(
-          sum(col("qty_a") + col("qty_n") + col("qty_r") + col("qty_o")).as("t"),
-          sum(col("n_a") + col("n_n") + col("n_r") + col("n_o")).as("n"),
-          sum(col("n_o")).as("n_other")).head
-        if (!totRow.isNullAt(2) && totRow.getLong(2) > 0) rawShape
-        else {
-          // empty-fact defense: sums over zero rows are NULL; the HAVING
-          // then filters every group either way, so 0 stands in safely
-          val t0 = if (totRow.isNullAt(0)) 0L else totRow.getLong(0)
-          val n0 = if (totRow.isNullAt(1)) 0L else totRow.getLong(1)
-          val members = det.filter(col("n_a") > 0 && col("n_n") > 0 && col("n_r") > 0)
-          // unpivot the three channels in ONE generator pass (map-side; the
-          // partial rollup aggregate collapses to |channels×brands| per task)
-          val unpiv = members.select(col("p_brand"), expr(
-            "inline(array(" +
-              "struct('A' AS channel, qty_a AS qty_sum, n_a AS nn), " +
-              "struct('N' AS channel, qty_n AS qty_sum, n_n AS nn), " +
-              "struct('R' AS channel, qty_r AS qty_sum, n_r AS nn)))"))
-          unpiv.rollup(col("channel"), col("p_brand"))
-            .agg(sum(col("qty_sum")).as("volume"), sum(col("nn")).as("n_rows"))
-            .filter(col("volume") * lit(n0) > lit(t0) * 950)
-            .select(col("channel"), col("p_brand"), col("volume"), col("n_rows"))
-            .orderBy(col("channel").asc_nulls_first, col("p_brand").asc_nulls_first)
-        }
-      case None => rawShape
-    }
+    val det3 = t(s, dir, "lineitem")
+      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+      .groupBy(col("l_partkey"), col("l_returnflag").as("channel"), col("p_brand"))
+      .agg(sum(floor(col("l_quantity")).cast("long")).as("qty_sum"),
+        count(lit(1)).as("n"))
+    val cross = det3.filter(col("channel").isin("A", "N", "R"))
+      .groupBy("l_partkey").agg(count(lit(1)).as("nch"))
+      .filter(col("nch") === 3).select("l_partkey")
+    val tot = det3.agg(sum(col("qty_sum")).as("t"), sum(col("n")).as("n"))
+    det3.join(cross, Seq("l_partkey"), "left_semi")
+      .rollup(col("channel"), col("p_brand"))
+      .agg(sum(col("qty_sum")).as("volume"), sum(col("n")).as("n_rows"))
+      .toDF("channel", "p_brand", "volume", "n_rows")
+      .crossJoin(broadcast(tot)) // 1-row totals, never a real cartesian
+      .filter(col("volume") * col("n") > col("t") * 950)
+      .select("channel", "p_brand", "volume", "n_rows")
+      .orderBy(col("channel").asc_nulls_first, col("p_brand").asc_nulls_first)
   }
 
   // --------------------------------------------------------------- Q23 shape
@@ -550,33 +497,21 @@ object TpcdsQueries {
       col("l_partkey"), col("o_custkey"), col("o_orderdate"),
       floor(col("l_quantity")).cast("long").as("qty"),
       dec(col("l_extendedprice")).as("price"))
-    // Durable-rollup fast paths (r15): the freq CTE's COUNT(DISTINCT date)
-    // is a plain row count over the (part, 1997-date) finest-level state,
-    // and the best-customer CTE reads the per-cust quantity state — two of
-    // the three full fact joins disappear (the final 1998Q1 pass remains).
-    // Oracle-gated by tpcds_q23_rollup.
-    val freq = graft.Rollups.visibleDf(s, dir, graft.Rollups.Dates1997ByPartkey)
-      .map(_.groupBy("l_partkey").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= 4).select("l_partkey"))
-      .getOrElse(lo.filter(year(col("o_orderdate")) === 1997)
-        .groupBy("l_partkey").agg(countDistinct(col("o_orderdate")).as("d"))
-        .filter(col("d") >= 4).select("l_partkey"))
-    val cust = graft.Rollups.visibleDf(s, dir, graft.Rollups.QtyByCustkey)
-      .map(_.select(col("o_custkey"), col("qty_sum").as("cq")))
-      .getOrElse(lo.groupBy("o_custkey").agg(sum(col("qty")).as("cq")))
+    val freq = lo.filter(year(col("o_orderdate")) === 1997)
+      .groupBy("l_partkey").agg(countDistinct(col("o_orderdate")).as("d"))
+      .filter(col("d") >= 4).select("l_partkey")
+    val cust = lo.groupBy("o_custkey").agg(sum(col("qty")).as("cq"))
     val best = cust
       .crossJoin(broadcast(cust.agg(max(col("cq")).as("m"))))
       .filter(col("cq") * 2 > col("m")).select("o_custkey")
-    // r15 second cut: the final 1998Q1 pass reads a (part, customer)-grain
-    // state with the date predicate pinned in its definition WHERE — the two
-    // semi joins and the final SUM/COUNT re-aggregate ~22M state rows at
-    // SF100 instead of a fifth full 600M-row fact⋈orders pass. Inline
-    // fallback = identical MatViews deltaState math (the in-bucket join).
+    // The final 1998Q1 pass at (part, customer) grain through the shared
+    // aggregate fragment ([[graft.Rollups.Price9801ByPartCust]], date
+    // predicate in its definition WHERE), computed by the MatViews
+    // deltaState math over the in-bucket join.
     val dSlice = graft.Rollups.definition(graft.Rollups.Price9801ByPartCust)
-    val finalSlice = graft.Rollups.visibleDf(s, dir, graft.Rollups.Price9801ByPartCust)
-      .getOrElse(graft.MatViews.visible(dSlice, graft.MatViews.deltaState(dSlice,
-        t(s, dir, "lineitem").join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey")))))
+    val finalSlice = graft.MatViews.visible(dSlice, graft.MatViews.deltaState(dSlice,
+      t(s, dir, "lineitem").join(t(s, dir, "orders"),
+        col("l_orderkey") === col("o_orderkey"))))
     // r16 semi-join order (guide §3): `best` is the near-max-spend set —
     // SF-invariant small (the 2·cq > max gate admits a handful of
     // customers per 150k, ~thousands at SF100) — so it broadcasts and
@@ -591,11 +526,12 @@ object TpcdsQueries {
         coalesce(sum(col("n")), lit(0L)).as("n_sales"))
   }
 
-  /** Q23 answered through the durable rollups ([[graft.Rollups.QtyByCustkey]]
-    * + [[graft.Rollups.Dates1997ByPartkey]]), computed inline by the same
-    * MatViews deltaState math the layout persists: the distinct-date count
-    * becomes a row count over the finest-level state and the best-customer
-    * quantities read the per-cust state; DuckDB recomputes the spec CTEs raw. */
+  /** Q23 answered through the aggregate fragments
+    * ([[graft.Rollups.QtyByCustkey]] + [[graft.Rollups.Dates1997ByPartkey]]),
+    * computed inline by the MatViews deltaState math: the distinct-date
+    * count becomes a row count over the finest-level state and the
+    * best-customer quantities read the per-cust state; DuckDB recomputes the
+    * spec CTEs raw. */
   val q23Rollup: Q = Q(
     "tpcds_q23_rollup",
     q23FrequentBest.oracle.get) { (s, dir) =>
@@ -1009,32 +945,20 @@ object TpcdsQueries {
        |FROM per_cust WHERE open_cents > 0 AND full_cents > 0
        |ORDER BY ratio_pct DESC, cust LIMIT 25""".stripMargin) { (s, dir) =>
     val cents = floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-    // Durable-rollup fast path (r15): per-(custkey, linestatus) non-returned
-    // cents from the layout's IVM state (Rollups.CentsByCustStatus) — the
-    // 600M-row anti-join + orderkey join + custkey aggregation collapses to
-    // a ~2|cust|-row state scan. The state's maintained input is the literal
-    // NOT-EXISTS anti-join (Rollups.keepNonReturned — the fixtures carry
-    // duplicate (orderkey, linenumber) keys with mixed flags, so no row-local
-    // predicate is equivalent); incremental upkeep rides the closed-group
-    // ingest contract guarded by the manifest's orderkey high-water mark.
-    // Oracle-gated by tpcds_q78_rollup, whose DuckDB twin runs the anti-join.
-    val perCust = graft.Rollups.visibleDf(s, dir, graft.Rollups.CentsByCustStatus)
-      .map(st => st.groupBy(col("o_custkey").as("cust"))
-        .agg(coalesce(sum(when(col("l_linestatus") === "O", col("cents_sum"))), lit(0L)).as("open_cents"),
-          coalesce(sum(when(col("l_linestatus") === "F", col("cents_sum"))), lit(0L)).as("full_cents")))
-      .getOrElse {
-        val li = t(s, dir, "lineitem")
-        val returned = li.filter(col("l_returnflag") === "R")
-          .select(col("l_orderkey").as("r_ok"), col("l_linenumber").as("r_ln"))
-        val keep = li.join(returned,
-            col("l_orderkey") === col("r_ok") && col("l_linenumber") === col("r_ln"),
-            "left_anti")
-          .select(col("l_orderkey"), col("l_linestatus"), cents.as("cents"))
-        keep.join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("o_custkey").as("cust"))
-          .agg(coalesce(sum(when(col("l_linestatus") === "O", col("cents"))), lit(0L)).as("open_cents"),
-            coalesce(sum(when(col("l_linestatus") === "F", col("cents"))), lit(0L)).as("full_cents"))
-      }
+    // The NOT EXISTS is a literal anti-join on (l_orderkey, l_linenumber):
+    // the fixtures carry duplicate keys with mixed flags, so no row-local
+    // returnflag predicate is equivalent.
+    val li = t(s, dir, "lineitem")
+    val returned = li.filter(col("l_returnflag") === "R")
+      .select(col("l_orderkey").as("r_ok"), col("l_linenumber").as("r_ln"))
+    val keep = li.join(returned,
+        col("l_orderkey") === col("r_ok") && col("l_linenumber") === col("r_ln"),
+        "left_anti")
+      .select(col("l_orderkey"), col("l_linestatus"), cents.as("cents"))
+    val perCust = keep.join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_custkey").as("cust"))
+      .agg(coalesce(sum(when(col("l_linestatus") === "O", col("cents"))), lit(0L)).as("open_cents"),
+        coalesce(sum(when(col("l_linestatus") === "F", col("cents"))), lit(0L)).as("full_cents"))
     perCust
       .filter(col("open_cents") > 0 && col("full_cents") > 0)
       .select(col("cust"), col("open_cents"), col("full_cents"),
@@ -1043,10 +967,9 @@ object TpcdsQueries {
       .limit(25)
   }
 
-  /** Q78 answered through the durable per-(cust, linestatus) rollup
-    * ([[graft.Rollups.CentsByCustStatus]]): the state is computed inline by
-    * the SAME transform + MatViews deltaState math the layout persists
-    * (keepNonReturned anti-join feeding the per-cust components), while
+  /** Q78 answered through the per-(cust, linestatus) aggregate fragment
+    * ([[graft.Rollups.CentsByCustStatus]]), computed inline by the
+    * keepNonReturned anti-join feeding the MatViews deltaState math, while
     * DuckDB runs the spec's literal NOT-EXISTS — proving the materialized
     * anti-join and the component math end to end. */
   val q78Rollup: Q = Q(
@@ -1223,19 +1146,10 @@ object TpcdsQueries {
     val qty = when(col("l_returnflag") === "R", -floor(col("l_quantity")).cast("long"))
       .otherwise(floor(col("l_quantity")).cast("long"))
     val amt = when(col("l_returnflag") === "R", -netRev).otherwise(netRev)
-    // Durable-rollup fast path (r15): the signed (brand, year) sums ARE the
-    // query's grain (Rollups.SignedByBrandYear, multi-join definition) —
-    // the state read replaces the 600M-row fact join entirely. The first
-    // cut at (part, year) grain left a 137M-state × 20M-part query-time
-    // join that dominated the remaining 17 s. Oracle-gated by
-    // tpcds_q75_rollup.
-    val agg = graft.Rollups.visibleDf(s, dir, graft.Rollups.SignedByBrandYear)
-      .map(_.select(col("p_brand"), col("yr"),
-        col("qty_sum").as("qty"), col("amt_sum").as("amt")))
-      .getOrElse(lineorder(s, dir)
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), year(col("o_orderdate")).as("yr"))
-        .agg(sum(qty).as("qty"), sum(amt).as("amt")))
+    val agg = lineorder(s, dir)
+      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+      .groupBy(col("p_brand"), year(col("o_orderdate")).as("yr"))
+      .agg(sum(qty).as("qty"), sum(amt).as("amt"))
     val c = agg.filter(col("yr") === 1997)
       .select(col("p_brand"), col("qty").as("curr_qty"), col("amt").as("curr_amt"))
     val p = agg.filter(col("yr") === 1996)
@@ -1248,11 +1162,11 @@ object TpcdsQueries {
       .orderBy("brand")
   }
 
-  /** Q75 answered through the durable (part, year) expression-key rollup
-    * ([[graft.Rollups.SignedByBrandYear]]), computed inline by the same
-    * MatViews deltaState math the layout persists — proving the derived-key
-    * grouping and the two-level signed re-summation against DuckDB's raw
-    * three-table recompute. */
+  /** Q75 answered through the (brand, year) expression-key aggregate
+    * fragment ([[graft.Rollups.SignedByBrandYear]]), computed inline by the
+    * MatViews deltaState math — proving the derived-key grouping and the
+    * two-level signed re-summation against DuckDB's raw three-table
+    * recompute. */
   val q75Rollup: Q = Q(
     "tpcds_q75_rollup",
     q75ChannelDelta.oracle.get) { (s, dir) =>
@@ -1294,26 +1208,20 @@ object TpcdsQueries {
        |  CAST(SUM(sales) - SUM(refunds) AS DOUBLE) AS profit
        |FROM det GROUP BY ROLLUP(channel, p_brand)
        |ORDER BY channel NULLS FIRST, p_brand NULLS FIRST""".stripMargin) { (s, dir) =>
-    // Durable-rollup finest level (r15): per-(brand, linenumber%3) CASE'd
-    // decimal sums ([[graft.Rollups.ProfitByBrandChannel]]) — decimal
-    // addition associates and the part join is paid at ingest, so the whole
-    // ROLLUP re-aggregates ~|brands×3| state rows. The spec's orders join
-    // is row-preserving under the declared l_orderkey FK and contributes no
-    // columns; the STATE path relies on it soundly (build/refresh verify
-    // the containment and pin the orders fingerprint —
-    // [[graft.Rollups.fkElisions]]), while the r16 INLINE fallback is
-    // spec-exact: a left-semi join on orders (o_orderkey unique ⇒ semi ≡
-    // the spec's inner join; zero-exchange on a bucketed layout).
-    val det = graft.Rollups.visibleDf(s, dir, graft.Rollups.ProfitByBrandChannel)
-      .getOrElse {
-        val d = graft.Rollups.definition(graft.Rollups.ProfitByBrandChannel)
-        val o = t(s, dir, "orders")
-        val li = t(s, dir, "lineitem")
-          .join(o, col("l_orderkey") === col("o_orderkey"), "left_semi")
-        graft.MatViews.visible(d, graft.MatViews.deltaState(d,
-          li.join(t(s, dir, "part"),
-            col("l_partkey") === col("p_partkey"))))
-      }
+    // Finest level: per-(brand, linenumber%3) CASE'd decimal sums through
+    // the shared aggregate fragment ([[graft.Rollups.ProfitByBrandChannel]]);
+    // decimal addition associates, so the ROLLUP re-aggregates them. The
+    // spec's orders join contributes no columns and runs as a left-semi
+    // join (o_orderkey unique ⇒ semi ≡ the spec's inner join;
+    // zero-exchange on a bucketed layout), so a dir with an orphan
+    // l_orderkey answers the spec SQL.
+    val d = graft.Rollups.definition(graft.Rollups.ProfitByBrandChannel)
+    val o = t(s, dir, "orders")
+    val li = t(s, dir, "lineitem")
+      .join(o, col("l_orderkey") === col("o_orderkey"), "left_semi")
+    val det = graft.MatViews.visible(d, graft.MatViews.deltaState(d,
+      li.join(t(s, dir, "part"),
+        col("l_partkey") === col("p_partkey"))))
     val channel = when(col("ch") === 0, "store")
       .when(col("ch") === 1, "web").otherwise("catalog")
     det

@@ -90,25 +90,6 @@ object TpchFullQueries {
       |    AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00')
       |GROUP BY supp_nation, cust_nation, l_year
       |ORDER BY supp_nation, cust_nation, l_year""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): per-(cust-nation, supp-nation,
-    // SHIP-year) revenue state ([[graft.Rollups.RevByNationsShipYear]]) —
-    // the nation pair is two cells of the key space and the ship-date range
-    // is year-aligned.
-    val statePath = graft.Rollups.visibleDf(s, dir, graft.Rollups.RevByNationsShipYear)
-      .map { st =>
-        val nk = t(s, dir, "nation").filter(col("n_name").isin("NATION_1", "NATION_2"))
-        val sN = broadcast(nk.select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation")))
-        val cN = broadcast(nk.select(col("n_nationkey").as("cnk"), col("n_name").as("cust_nation")))
-        st.filter(col("shipyr").isin(1996, 1997))
-          .join(sN, col("s_nationkey") === col("snk"))
-          .join(cN, col("c_nationkey") === col("cnk"))
-          .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2")
-            || (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-          .groupBy(col("supp_nation"), col("cust_nation"), col("shipyr").as("l_year"))
-          .agg(asDouble(sum(col("rev"))).as("revenue"))
-          .orderBy("supp_nation", "cust_nation", "l_year")
-      }
-    if (statePath.isDefined) statePath.get else {
     // Semi-join pre-reduction (reference: semi_join_reduction_rule.cpp): the
     // nation-pair predicate restricts both sides to 2/25 of each dim, so the
     // restricted dims broadcast INTO the fact scans — lineitem shrinks 2/25
@@ -135,7 +116,6 @@ object TpchFullQueries {
       .groupBy(col("supp_nation"), col("cust_nation"), year(col("l_shipdate")).as("l_year"))
       .agg(asDouble(sum(net)).as("revenue"))
       .orderBy("supp_nation", "cust_nation", "l_year")
-    }
   }
 
   /** Q8 — national market share within a region, by order year. */
@@ -156,29 +136,6 @@ object TpchFullQueries {
       |    AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
       |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
       |GROUP BY o_year ORDER BY o_year""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): q8 is a slice of the SSB q4 state
-    // ([[graft.Rollups.SsbProfitByNationsYearType]], which also carries the
-    // plain revenue sum) — p_type and yr are key columns, the ASIA customer
-    // filter semi-joins the broadcast region keys and the nation-share CASE
-    // resolves the supplier nationkey against the broadcast name dim.
-    val statePath = graft.Rollups.visibleDf(s, dir, graft.Rollups.SsbProfitByNationsYearType)
-      .map { st =>
-        val asiaKeys = t(s, dir, "nation")
-          .join(t(s, dir, "region").filter(col("r_name") === "ASIA"),
-            col("n_regionkey") === col("r_regionkey"))
-          .select("n_nationkey")
-        val nName = t(s, dir, "nation")
-          .select(col("n_nationkey").as("n2k"), col("n_name").as("nation"))
-        st.filter(col("p_type") === "STANDARD" && col("yr").isin(1996, 1997))
-          .join(broadcast(asiaKeys), col("c_nationkey") === col("n_nationkey"), "left_semi")
-          .join(broadcast(nName), col("s_nationkey") === col("n2k"))
-          .groupBy(col("yr").as("o_year"))
-          .agg((asDouble(sum(when(col("nation") === "NATION_5", col("rev"))
-              .otherwise(lit(0).cast("decimal(28,4)"))))
-            / asDouble(sum(col("rev")))).as("mkt_share"))
-          .orderBy("o_year")
-      }
-    if (statePath.isDefined) statePath.get else {
     // Semi-join pre-reduction (reference: semi_join_reduction_rule.cpp):
     // broadcast the p_type-restricted part and the supplier⋈nation dim into
     // the lineitem scan (map-side ~1/5 reduction, zero shuffle), and
@@ -209,7 +166,6 @@ object TpchFullQueries {
           .otherwise(lit(0).cast("decimal(28,4)"))))
         / asDouble(sum(col("volume")))).as("mkt_share"))
       .orderBy("o_year")
-    }
   }
 
   /** Q9 — product type profit by nation and year (supplycost → retailprice share). */
@@ -226,20 +182,6 @@ object TpchFullQueries {
       |    AND p_name LIKE '%blue%')
       |GROUP BY nation, o_year
       |ORDER BY nation, o_year DESC""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): per-(supp-nation, order-year) profit
-    // over the '%blue%' slice ([[graft.Rollups.ProfitBlueByNationYear]] —
-    // the part-name predicate lives in the definition WHERE); the query is
-    // a 175-row state read against the broadcast nation names.
-    val statePath = graft.Rollups.visibleDf(s, dir, graft.Rollups.ProfitBlueByNationYear)
-      .map { st =>
-        st.join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name").as("nation"))),
-            col("s_nationkey") === col("n_nationkey"))
-          .groupBy(col("nation"), col("yr").as("o_year"))
-          .agg(asDouble(sum(col("profit"))).as("sum_profit"))
-          .orderBy(col("nation"), col("o_year").desc)
-      }
-    if (statePath.isDefined) statePath.get else {
     val p = t(s, dir, "part").filter(col("p_name").like("%blue%"))
     val amount = net -
       lit(0.1).cast("decimal(2,1)") * dec(col("p_retailprice")) * dec(col("l_quantity"))
@@ -256,7 +198,6 @@ object TpchFullQueries {
       .groupBy("nation", "o_year")
       .agg(asDouble(sum(col("amount"))).as("sum_profit"))
       .orderBy(col("nation"), col("o_year").desc)
-    }
   }
 
   /** Q11 — important part values: group-by vs a scalar-subquery fraction of the
@@ -273,15 +214,8 @@ object TpchFullQueries {
       |    * CAST(0.0007 AS DECIMAL(5,4))
       |  FROM lineitem)
       |ORDER BY part_value DESC, l_partkey""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r14): a ScaleUpLayout dir carries the
-    // persisted IVM state of exactly this per-part aggregate
-    // (Rollups.LineitemByPartkey, maintained O(delta) by MatViews.merge) —
-    // the 20M-group aggregation over the full fact becomes a 20M-row scan.
-    // Fixture dirs carry no _rollup and recompute from the fact below; the
-    // rollup path is oracle-gated by tpch_q11_rollup.
     val l = t(s, dir, "lineitem")
-    val perPart = graft.Rollups.visibleDf(s, dir, graft.Rollups.LineitemByPartkey)
-      .getOrElse(l.groupBy("l_partkey").agg(sum(net).as("value_dec")))
+    val perPart = l.groupBy("l_partkey").agg(sum(net).as("value_dec"))
     // Re-sum the per-part sums instead of re-aggregating raw lineitem:
     // decimal addition is exact, so the threshold is value-identical, and the
     // two branches share an identical scan + partial-agg + exchange subtree
@@ -304,11 +238,11 @@ object TpchFullQueries {
       .sortWithinPartitions(col("part_value").desc, col("l_partkey"))
   }
 
-  /** Q11 answered through the durable per-part rollup ([[graft.Rollups]]):
-    * the per-part sums come from MatViews IVM state (deltaState → visible)
-    * built over the same fact, so this entry oracle-gates the rollup fast
-    * path q11 takes on a ScaleUpLayout dir — DuckDB recomputes the raw
-    * aggregation, proving state-derived values are value-identical. */
+  /** Q11 answered through the per-part aggregate fragment
+    * ([[graft.Rollups.LineitemByPartkey]]): the per-part sums come from
+    * MatViews IVM state (deltaState → visible) computed inline over the
+    * fact — DuckDB recomputes the raw aggregation, proving the state math
+    * value-identical. */
   val q11Rollup: Q = Q(
     "tpch_q11_rollup",
     """SELECT l_partkey, CAST(value_dec AS DOUBLE) AS part_value
@@ -343,20 +277,15 @@ object TpchFullQueries {
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |WHERE l_shipdate >= o_orderdate + INTERVAL 90 DAY
       |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
-    // Durable-rollup at RESULT grain (r15): the definition carries the
+    // Result-grain aggregate fragment whose definition carries the
     // cross-table lateness predicate ([[graft.Rollups.LateCountsByStatus]]),
-    // so a layout dir answers this from a handful of state rows; otherwise
-    // the same MatViews deltaState math runs inline over the (bucketed)
-    // orderkey join, keeping the oracle gate over the state math.
-    val det = graft.Rollups.visibleDf(s, dir, graft.Rollups.LateCountsByStatus)
-      .getOrElse {
-        val d = graft.Rollups.definition(graft.Rollups.LateCountsByStatus)
-        graft.MatViews.visible(d, graft.MatViews.deltaState(d,
-          t(s, dir, "lineitem")
-            .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))))
-      }
-    // COUNT can never be NULL; the COALESCE only normalizes nullability
-    // between the parquet state (nullable on read) and the inline aggregate
+    // computed by the MatViews deltaState math over the (bucketed) orderkey
+    // join.
+    val d = graft.Rollups.definition(graft.Rollups.LateCountsByStatus)
+    val det = graft.MatViews.visible(d, graft.MatViews.deltaState(d,
+      t(s, dir, "lineitem")
+        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))))
+    // COUNT is never NULL; the COALESCE only pins the columns non-nullable
     det.select(col("l_linestatus"),
         coalesce(col("high_line_count"), lit(0L)).as("high_line_count"),
         coalesce(col("low_line_count"), lit(0L)).as("low_line_count"))
@@ -373,16 +302,12 @@ object TpchFullQueries {
       |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
       |  GROUP BY c_custkey)
       |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): per-customer filtered order counts
-    // ([[graft.Rollups.OrderCountByCust]], the one ORDERS-based state); the
-    // left join's zero-count arm re-derives as customer ∖ state via
-    // COALESCE. Inline fallback = the same MatViews deltaState math.
-    val det = graft.Rollups.visibleDf(s, dir, graft.Rollups.OrderCountByCust)
-      .getOrElse {
-        val d13 = graft.Rollups.definition(graft.Rollups.OrderCountByCust)
-        graft.MatViews.visible(d13,
-          graft.MatViews.deltaState(d13, t(s, dir, "orders")))
-      }
+    // Per-customer filtered order counts through the shared aggregate
+    // fragment ([[graft.Rollups.OrderCountByCust]]); the left join's
+    // zero-count arm re-derives as customer ∖ state via COALESCE.
+    val d13 = graft.Rollups.definition(graft.Rollups.OrderCountByCust)
+    val det = graft.MatViews.visible(d13,
+      graft.MatViews.deltaState(d13, t(s, dir, "orders")))
     t(s, dir, "customer")
       .join(det, col("c_custkey") === col("o_custkey"), "left_outer")
       .select(coalesce(col("c_count"), lit(0L)).as("c_count"))
@@ -434,10 +359,10 @@ object TpchFullQueries {
       .filter(col("p_brand") =!= "Brand#1" && !col("p_type").like("PROMO%")
         && col("p_size").isin(1, 5, 9, 13, 17, 21, 25, 29))
     val flagged = t(s, dir, "supplier").filter(col("s_acctbal") < 0).select("s_suppkey")
-    // A distinct-(part, supplier)-pairs durable state was measured and
-    // REVERTED here (591M state rows on the 600M-row fact — no collapse,
-    // see the Rollups NOTE): the broadcast-semi-reduced direct plan is the
-    // floor for this shape on this data.
+    // A precomputed distinct-(part, supplier)-pairs state was measured and
+    // reverted here (591M state rows on the 600M-row fact — the fixture
+    // draws suppkey independently per line, so no collapse): the
+    // broadcast-semi-reduced direct plan is the floor for this shape.
     t(s, dir, "lineitem")
       .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .join(broadcast(flagged), col("l_suppkey") === col("s_suppkey"), "left_anti")
@@ -539,18 +464,13 @@ object TpchFullQueries {
     val sup = t(s, dir, "supplier")
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .select("s_suppkey", "s_name")
-    // Durable-rollup fast path (r15): the per-(order, supplier) lateness
-    // profile ([[graft.Rollups.LateByOrderSupp]]) replaces the fact-fact
-    // join + first aggregate; the EXISTS/NOT-EXISTS cascade is then a
-    // window over ~|F-order × supplier| state rows. Inline fallback = the
-    // same MatViews deltaState math over the (bucketed) orderkey join.
-    val perSupp = graft.Rollups.visibleDf(s, dir, graft.Rollups.LateByOrderSupp)
-      .getOrElse {
-        val d21 = graft.Rollups.definition(graft.Rollups.LateByOrderSupp)
-        graft.MatViews.visible(d21, graft.MatViews.deltaState(d21,
-          t(s, dir, "lineitem")
-            .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))))
-      }
+    // The per-(order, supplier) lateness profile through the shared
+    // aggregate fragment ([[graft.Rollups.LateByOrderSupp]]), computed by
+    // the MatViews deltaState math over the (bucketed) orderkey join.
+    val d21 = graft.Rollups.definition(graft.Rollups.LateByOrderSupp)
+    val perSupp = graft.MatViews.visible(d21, graft.MatViews.deltaState(d21,
+      t(s, dir, "lineitem")
+        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))))
     // r16 (guide §2.1/§2.4): the EXISTS/NOT-EXISTS cascade needs only
     // per-order AGGREGATES, not per-row window values — one hash
     // aggregation replaces the window's exchange + FULL SORT of the

@@ -39,20 +39,15 @@ object TpchQueries {
       |  AND l_shipdate > TIMESTAMP '1998-06-15 00:00:00'
       |GROUP BY l_orderkey, o_orderdate
       |ORDER BY revenue DESC, orderdate, l_orderkey LIMIT 10""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15 second cut): ALL THREE query predicates
-    // (BUILDING segment, ordered-before / shipped-after the cutoff) are
-    // pinned in the state definition's WHERE ([[graft.Rollups
-    // .RevBuildingUnshipped]], the q9 '%blue%' precedent), so on a layout
-    // dir the query is a zero-join per-order state read + top-10. Inline
-    // fallback = identical MatViews deltaState math over the join chain;
-    // Catalyst pushes the definition's single-table predicates below the
-    // joins, so the flat plan matches the old hand-written shape.
+    // Per-order revenue through the shared aggregate fragment
+    // ([[graft.Rollups.RevBuildingUnshipped]]), whose WHERE carries all three
+    // query predicates; Catalyst pushes its single-table predicates below
+    // the joins, so the plan matches the hand-written filtered join.
     val d3 = graft.Rollups.definition(graft.Rollups.RevBuildingUnshipped)
-    val perOrder = graft.Rollups.visibleDf(s, dir, graft.Rollups.RevBuildingUnshipped)
-      .getOrElse(graft.MatViews.visible(d3, graft.MatViews.deltaState(d3,
-        t(s, dir, "lineitem")
-          .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey")))))
+    val perOrder = graft.MatViews.visible(d3, graft.MatViews.deltaState(d3,
+      t(s, dir, "lineitem")
+        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))))
     perOrder
       .select(col("l_orderkey"), asDouble(col("rev")).as("revenue"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"))
@@ -108,25 +103,6 @@ object TpchQueries {
       |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
       |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
       |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin) { (s, dir) =>
-    // Durable-rollup fast path (r15): the SSB flight-3 state
-    // ([[graft.Rollups.SsbRevByNationsYearmo]]) carries q5 whole — the
-    // "local supplier" condition is the c_nationkey = s_nationkey diagonal
-    // of its key space, the date range is month-aligned, and the ASIA
-    // filter + n_name resolve through the broadcast nation⋈region dim.
-    val statePath = graft.Rollups.visibleDf(s, dir, graft.Rollups.SsbRevByNationsYearmo)
-      .map { st =>
-        val asiaN = t(s, dir, "nation")
-          .join(t(s, dir, "region").filter(col("r_name") === "ASIA"),
-            col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey"), col("n_name"))
-        st.filter(col("c_nationkey") === col("s_nationkey") &&
-            col("yrmo").between(199601, 199712))
-          .join(broadcast(asiaN), col("s_nationkey") === col("n_nationkey"))
-          .groupBy("n_name")
-          .agg(asDouble(sum(col("rev"))).as("revenue"))
-          .orderBy(col("revenue").desc, col("n_name"))
-      }
-    if (statePath.isDefined) statePath.get else {
     val c = t(s, dir, "customer")
     val o = t(s, dir, "orders")
       .filter(col("o_orderdate") >= "1996-01-01 00:00:00" && col("o_orderdate") < "1998-01-01 00:00:00")
@@ -150,7 +126,6 @@ object TpchQueries {
       .groupBy("n_name")
       .agg(asDouble(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))))).as("revenue"))
       .orderBy(col("revenue").desc, col("n_name"))
-    }
   }
 
   /** Q6 — forecasting revenue change: pure scan+filter+global agg. The filter sits
@@ -184,24 +159,20 @@ object TpchQueries {
       |GROUP BY c_custkey, c_name, n_name
       |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin) { (s, dir) =>
     // Eager aggregation: revenue is summed per o_custkey at the finest level
-    // (the state definition) before any re-aggregation — c_custkey is unique
+    // (the fragment definition) before any re-aggregation — c_custkey is unique
     // in customer, so (c_custkey, c_name, n_name) groups are 1:1 with
     // custkeys and exact-decimal addition keeps the double hash-identical.
     val n = t(s, dir, "nation")
-    // Durable-rollup fast path (r15 second cut): the state now carries q10's
-    // OWN grain — the customer join is paid at ingest, (c_name, c_nationkey)
-    // ride in the key (functionally dependent on o_custkey, the customer
-    // PK), and the year cutoff is pinned in the definition WHERE (the
-    // 1997-01-01 boundary aligns with year() >= 1997 exactly). On a layout
-    // dir the 15M-row customer⋈aggregate shuffle the first cut paid per
-    // query is gone; only the broadcast nation dim resolves at query time.
-    // Inline fallback = identical MatViews deltaState math over the chain.
+    // Per-customer returned revenue at the query's grain through the shared
+    // aggregate fragment ([[graft.Rollups.RRevByCust]]): (c_name,
+    // c_nationkey) ride in the key (functionally dependent on o_custkey, the
+    // customer PK), and the year cutoff sits in the definition WHERE (the
+    // 1997-01-01 boundary aligns with year() >= 1997 exactly).
     val d10 = graft.Rollups.definition(graft.Rollups.RRevByCust)
-    val perCust = graft.Rollups.visibleDf(s, dir, graft.Rollups.RRevByCust)
-      .getOrElse(graft.MatViews.visible(d10, graft.MatViews.deltaState(d10,
-        t(s, dir, "lineitem")
-          .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey")))))
+    val perCust = graft.MatViews.visible(d10, graft.MatViews.deltaState(d10,
+      t(s, dir, "lineitem")
+        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))))
     perCust.join(broadcast(n), col("c_nationkey") === n("n_nationkey"))
       .select(col("o_custkey").as("c_custkey"), col("c_name"), col("n_name"),
         asDouble(col("rev")).as("revenue"))
@@ -220,30 +191,17 @@ object TpchQueries {
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       |  AND l_shipdate < TIMESTAMP '1997-07-01 00:00:00'""".stripMargin) { (s, dir) =>
-    // Durable-rollup finest level (r15): per-shipdate promo/total sums over
-    // the part join ([[graft.Rollups.PromoRevByShipday]]) — the date-range
-    // filter selects ~180 state rows and the ratio re-derives from exact
-    // decimal re-sums. Without a layout the r14 direct filtered join +
-    // single aggregate runs instead (r16: the r15 inline per-shipdate
-    // decomposition added an exchange that cost −19% at sf0.1; the state
-    // math stays oracle-gated by the stateful-dir verify gate).
-    graft.Rollups.visibleDf(s, dir, graft.Rollups.PromoRevByShipday) match {
-      case Some(det) =>
-        det.filter(col("l_shipdate") >= "1997-01-01 00:00:00" &&
-            col("l_shipdate") < "1997-07-01 00:00:00")
-          .agg((lit(100.0) * asDouble(sum(col("promo_rev")))
-            / asDouble(sum(col("total_rev")))).as("promo_revenue"))
-      case None =>
-        val l = t(s, dir, "lineitem")
-          .filter(col("l_shipdate") >= "1997-01-01 00:00:00" &&
-            col("l_shipdate") < "1997-07-01 00:00:00")
-        val p = t(s, dir, "part")
-        val net = dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))
-        l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
-          .agg((lit(100.0) * asDouble(sum(when(col("p_type").like("PROMO%"), net)
-              .otherwise(lit(0).cast("decimal(18,2)"))))
-            / asDouble(sum(net))).as("promo_revenue"))
-    }
+    // Direct filtered join + single aggregate (r16: an inline per-shipdate
+    // decomposition added an exchange that cost −19% at sf0.1).
+    val l = t(s, dir, "lineitem")
+      .filter(col("l_shipdate") >= "1997-01-01 00:00:00" &&
+        col("l_shipdate") < "1997-07-01 00:00:00")
+    val p = t(s, dir, "part")
+    val net = dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))
+    l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
+      .agg((lit(100.0) * asDouble(sum(when(col("p_type").like("PROMO%"), net)
+          .otherwise(lit(0).cast("decimal(18,2)"))))
+        / asDouble(sum(net))).as("promo_revenue"))
   }
 
   /** Q18 — large volume customers: HAVING over a fact-side group-by joined back.
@@ -255,8 +213,7 @@ object TpchQueries {
     * sums) and exact-decimal addition is join-order invariant, so the
     * hash-compared doubles are bit-identical. The r12 join-first plan
     * shuffled every lineitem row into a compound-key aggregate (SF100 #1,
-    * 112 s); the r14 eager-agg + bucketed shape got to 51 s; the r15 durable
-    * state at the query's grain removes the remaining joins entirely. */
+    * 112 s); the r14 eager-agg + bucketed shape got to 51 s. */
   val q18LargeVolume: Q = Q(
     "tpch_q18_large_volume",
     """SELECT c_custkey, o_orderkey,
@@ -270,32 +227,19 @@ object TpchQueries {
       |ORDER BY total_qty DESC, o_orderkey""".stripMargin) { (s, dir) =>
     val o = t(s, dir, "orders")
     val l = t(s, dir, "lineitem")
-    // Durable-rollup fast path (r15 second cut): the state carries the
-    // per-order quantity sums AT THE QUERY'S GRAIN — (o_orderdate,
-    // o_custkey) ride in the key (o_orderkey is unique in orders, grain
-    // unchanged), so on a layout dir the query is a ZERO-JOIN state read:
-    // the orders join was paid at ingest, and the customer join contributes
-    // only c_custkey = o_custkey (row-preserving under the declared FK; the
-    // oracle re-runs the spec WITH the join, so an FK violation fails
-    // loudly). The state is written ordered by qty_dec descending, so the
-    // >250 HAVING filter (~1.5 % selective) skips all but the head parquet
-    // row groups via min/max stats. Inline fallback = identical MatViews
-    // math over the in-bucket join (zero-exchange on a bucketed layout).
+    // Per-order quantity sums through the shared aggregate fragment
+    // ([[graft.Rollups.QtyDecByOrder]]; (o_orderdate, o_custkey) ride in the
+    // key, o_orderkey is unique in orders) over the in-bucket join
+    // (zero-exchange on a bucketed layout). Spec-exact: after the ~1.5 %-
+    // selective HAVING filter it left-semi joins customer (c_custkey unique
+    // ⇒ semi ≡ the spec's inner join), so a dir with an orphan o_custkey
+    // answers the spec SQL.
     val d18 = graft.Rollups.definition(graft.Rollups.QtyDecByOrder)
-    // r16: the INLINE fallback is spec-exact — after the ~1.5 %-selective
-    // HAVING filter it left-semi joins customer (c_custkey unique ⇒ semi ≡
-    // the spec's inner join), so an FK-violating dir diverges nowhere. The
-    // state path stays zero-join: build/refresh verify the FK containment
-    // and the customer fingerprint is pinned ([[graft.Rollups.fkElisions]]).
-    val perOrder = graft.Rollups.visibleDf(s, dir, graft.Rollups.QtyDecByOrder)
-      .map(_.filter(col("qty_dec") > 250))
-      .getOrElse {
-        val c = t(s, dir, "customer")
-        graft.MatViews.visible(d18, graft.MatViews.deltaState(d18,
-            l.join(o, l("l_orderkey") === o("o_orderkey"))))
-          .filter(col("qty_dec") > 250)
-          .join(c, col("o_custkey") === c("c_custkey"), "left_semi")
-      }
+    val c = t(s, dir, "customer")
+    val perOrder = graft.MatViews.visible(d18, graft.MatViews.deltaState(d18,
+      l.join(o, l("l_orderkey") === o("o_orderkey"))))
+      .filter(col("qty_dec") > 250)
+      .join(c, col("o_custkey") === c("c_custkey"), "left_semi")
     perOrder
       .select(col("o_custkey").as("c_custkey"), col("l_orderkey").as("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),

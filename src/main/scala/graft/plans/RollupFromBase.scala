@@ -51,8 +51,7 @@ class RollupFromBase(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (spark.sessionState.conf
-          .getConfString("spark.graft.rollupFromBase", "true") != "true" ||
-        sys.env.get("SPARK_GRAFT_NO_RFB").contains("1")) plan // bench A/B switch
+          .getConfString("spark.graft.rollupFromBase", "true") != "true") plan
     else plan.transformUp { case a: Aggregate => tryRewrite(a).getOrElse(a) }
 
   private def associative(ae: AggregateExpression, base: LogicalPlan): Boolean =

@@ -346,11 +346,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("tpcds q14: flat path plans lazily — constructing it runs NO Spark job") {
-    // r16: without a layout the raw shape is one lazy plan; the r15 flat
-    // path ran a full fact⋈part aggregation EAGERLY inside a `.head`
-    // flag-domain guard before the query executed the same aggregation
-    // again (guide §5 "no driver actions in query paths"). The guard now
-    // only ever reads a persisted state (RollupSpec covers that branch).
+    // r16: the raw shape is one lazy plan; the r15 flat path ran a full
+    // fact⋈part aggregation EAGERLY inside a `.head` flag-domain guard
+    // before the query executed the same aggregation again (guide §5 "no
+    // driver actions in query paths").
     // construction-time jobs that are NOT the guard: the first read of a
     // table in a session infers its parquet schema in a Spark job. A
     // known-lazy body over the SAME two tables (lineitem ⋈ part) warms
