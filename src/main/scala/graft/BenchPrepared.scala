@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Prepared-statement benchmark mode — the counterpart of the reference's
   * `--use_prepared_statements` flag (reference: src/benchmark/tpch_benchmark

@@ -4,7 +4,6 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 /** PostgreSQL wire-protocol entry point — the reference's second front door

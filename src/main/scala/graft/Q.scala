@@ -26,8 +26,15 @@ object Q {
   * order-dependent, and Spark's partial aggregation order differs from DuckDB's
   * sequential order — so raw double sums hash-mismatch in the last ulp. We instead
   * aggregate exact decimals (both engines sum decimals exactly, any order) and cast
-  * the final result back to double: bit-identical on both sides, and the decimal
-  * arithmetic stays inside whole-stage codegen. */
+  * the final result back to double: bit-identical on both sides.
+  *
+  * Cost: the casts compile into whole-stage code, but the decimal work is not
+  * primitive. The optimizer turns `dec`/`dec4` into
+  * `graft.plans.ExactDoubleToDecimal`, which makes the unscaled long with one
+  * multiply and checks it exactly; only values that fail the check take
+  * Spark's `Double.toString` → `BigDecimal` path. Decimal multiplies still go
+  * through `java.math.BigDecimal`, and a `sum` over DECIMAL(18, 2) widens to
+  * DECIMAL(28, 2), which the hash aggregate keeps as variable-length bytes. */
 object Det {
   /** Exact 2-decimal view of a money/quantity double. */
   def dec(c: Column): Column = c.cast(DecimalType(18, 2))

@@ -300,7 +300,9 @@ object CurationQueries {
          |FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
          |GROUP BY d.doc_id
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-      val pairs = DedupQueries.dedupMinhashLsh.run(s, dir)
+      // CC reads the edges as a set: the unsorted pairs, not the registry
+      // entry's ORDER BY (which would range-partition and sort them)
+      val pairs = DedupQueries.minhashLshPairs(s, dir)
       val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .localCheckpoint(true)

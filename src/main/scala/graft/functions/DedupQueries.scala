@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication over the `documents` table: exact (fingerprint group-by),
@@ -227,6 +226,23 @@ object DedupQueries {
         .as(Seq("band_idx", "band_key")))
   }
 
+  /** MinHash + LSH candidate pairs (doc_a < doc_b) sharing ≥1 of BANDS band
+    * keys, in no particular order. Both join sides read one band stage: the
+    * band rows are hash-partitioned on (band_idx, band_key) before the
+    * self-join, which then needs no shuffle of its own, and the two
+    * identical exchanges below it are one reused exchange, so each
+    * document's signature is computed once per query. */
+  private[graft] def minhashLshPairs(s: SparkSession, dir: String): DataFrame = {
+    val bands = bandKeysOf(docs(s, dir)).repartition(col("band_idx"), col("band_key"))
+    bands.as("a")
+      .join(bands.as("b"),
+        col("a.band_idx") === col("b.band_idx")
+          && col("a.band_key") === col("b.band_key")
+          && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+  }
+
   /** MinHash + LSH banding: candidate pairs sharing ≥1 of BANDS band keys. */
   val dedupMinhashLsh: Q = {
     val sigList = (0 until K).map(i => minhashSigSql("hsg", i)).mkString("[", ",\n       |   ", "]")
@@ -244,15 +260,7 @@ object DedupQueries {
          |FROM bands a JOIN bands b
          |  ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
          |GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      val bands = bandKeysOf(docs(s, dir))
-      bands.as("a")
-        .join(bands.as("b"),
-          col("a.band_idx") === col("b.band_idx")
-            && col("a.band_key") === col("b.band_key")
-            && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-        .orderBy("doc_a", "doc_b")
+      minhashLshPairs(s, dir).orderBy("doc_a", "doc_b")
     }
   }
 

@@ -1,8 +1,6 @@
 package graft.functions
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Multimodal columns on REAL in-container codecs: opaque `binary` payloads +
   * typed metadata + per-partition batched decode — the schema/partitioning

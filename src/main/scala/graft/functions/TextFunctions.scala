@@ -7,8 +7,9 @@ import org.apache.spark.sql.{functions => F}
   * shingling, portable 64-bit hashing, MinHash signatures, SimHash, language-ID
   * markers, quality ratios, document fingerprints.
   *
-  * Everything here is a pure Catalyst `Column` expression (no UDFs) so it stays
-  * inside whole-stage codegen, and every primitive has a DuckDB-SQL twin
+  * Everything here is a pure Catalyst `Column` expression (no UDFs); the
+  * MinHash chain runs on native kernels from `graft.plans` (see
+  * [[tokenHashes]]), and every primitive has a DuckDB-SQL twin
   * (`*Sql` methods) generated from the SAME constants — that twin is what the
   * correctness oracle executes, so Spark and oracle can never drift.
   *
@@ -135,8 +136,10 @@ object TextFunctions {
 
   // ------------------------------------------------------------ MinHash
 
-  /** One md5 per TOKEN — the base layer for integer shingle keys below. */
-  def tokenHashes(ws: Column): Column = F.transform(ws, w => hash64(w, "mh"))
+  /** One md5 per TOKEN — the base layer for integer shingle keys below:
+    * `transform(ws, w -> hash64(w, 'mh'))`, computed by the native kernel
+    * `graft_hash60_array` (graft.plans.Hash60Array). */
+  def tokenHashes(ws: Column): Column = F.call_function("graft_hash60_array", ws, F.lit("mh"))
   def tokenHashesSql(ws: String): String = s"[${hash64Sql("w", "mh")} for w in $ws]"
 
   // Two independent 31-bit polynomial lanes packed into one 62-bit key.
@@ -154,18 +157,13 @@ object TextFunctions {
     * pays. Consumers treat shingle identity opaquely (join/distinct/minhash),
     * so an integer key is a drop-in for the space-joined string.
     * Short docs (<n tokens) collapse to one whole-text key, mirroring
-    * [[shingles]]; that branch only evaluates on such docs. */
-  def shingleKeys(ws: Column, th: Column, n: Int): Column = {
-    def lane(i: Column, a: Long): Column =
-      (0 until n).foldLeft(F.lit(0L)) { (acc, o) =>
-        (acc * a + F.element_at(th, i + o) % MH_P) % MH_P
-      }
-    val grams = F.transform(
-      F.sequence(F.lit(1), F.size(th) - (n - 1)),
-      i => lane(i, SK_A1) * 2147483648L + lane(i, SK_A2))
-    F.when(F.size(th) >= n, F.array_distinct(grams))
-      .otherwise(F.array(hash64(F.concat_ws(" ", ws), "mh")))
-  }
+    * [[shingles]]. Key order is first occurrence, as `array_distinct`
+    * keeps it. Computed by the native kernel `graft_shingle_keys`
+    * (graft.plans.PolyShingleKeys); [[shingleKeysSql]] spells out the same
+    * arithmetic for DuckDB. */
+  def shingleKeys(ws: Column, th: Column, n: Int): Column =
+    F.call_function("graft_shingle_keys", ws, th, F.lit(n), F.lit(SK_A1), F.lit(SK_A2),
+      F.lit(MH_P), F.lit("mh"))
   def shingleKeysSql(ws: String, th: String, n: Int): String = {
     def lane(a: Long): String =
       (0 until n).foldLeft("0") { (acc, o) =>
@@ -186,12 +184,16 @@ object TextFunctions {
   }
 
   /** MinHash signature: k affine min-hashes over the PRE-HASHED shingle array
-    * (`shingleKeys` above) — pure integer arithmetic, codegen-friendly. */
-  def minhashSig(hsg: Column, k: Int): Seq[Column] =
-    (0 until k).map { i =>
-      val (a, b) = mhFam(i)
-      F.array_min(F.transform(hsg, h => ((h % MH_P) * a + b) % MH_P)).as(s"h$i")
-    }
+    * (`shingleKeys` above), as columns `h0 … h{k-1}`. Value i is
+    * `array_min(transform(hsg, h -> ((h % p) * a_i + b_i) % p))`; all k come
+    * from one `graft_minhash` kernel (graft.plans.MinHashSignature) that
+    * makes one pass over the keys. The k columns read one shared array
+    * expression, which subexpression elimination evaluates once per row. */
+  def minhashSig(hsg: Column, k: Int): Seq[Column] = {
+    val fams = (0 until k).flatMap { i => val (a, b) = mhFam(i); Seq(F.lit(a), F.lit(b)) }
+    val sig = F.call_function("graft_minhash", hsg +: F.lit(MH_P) +: fams: _*)
+    (0 until k).map(i => sig.getItem(i).as(s"h$i"))
+  }
   def minhashSigSql(hsg: String, i: Int): String = {
     val (a, b) = mhFam(i)
     s"list_min([((s % $MH_P) * $a + $b) % $MH_P for s in $hsg])"

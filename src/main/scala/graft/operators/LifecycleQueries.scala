@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Catalog, Pipeline, Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** SQL-lifecycle coverage: DML with snapshot semantics, views, prepared
   * statements, meta tables — the Catalog/Pipeline façade exercised end-to-end
@@ -127,7 +127,6 @@ object LifecycleQueries {
       |    (9001, 'NEW_SUPP', 0, 50.0)) v(s_suppkey, s_name, s_nationkey, s_acctbal)
       |) ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.col
     val cat = new Catalog(s)
     cat.register("supplier_mw", Tables.df(s, dir, "supplier"))
     val src = s.createDataFrame(

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Catalog, Pipeline, Q}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Oracle-checkable probes of the meta-table surface (reference:
   * src/lib/utils/meta_tables/ — 13 virtual tables). Each query goes through

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{Det, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** TPC-C — the reference's OLTP suite (reference: src/benchmark/

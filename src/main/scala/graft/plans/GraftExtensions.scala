@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst extension point for graft's native expressions — the Spark-idiomatic
   * counterpart of the reference registering operators with its LQP translator
@@ -32,33 +33,68 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // last: turns >=1024-element literal IN lists into broadcast semi joins;
     // running after the others keeps their Filter pattern-matches intact
     ext.injectPostHocResolutionRule(session => new InListToJoin(session))
+    // optimizer, not post-hoc: analysis and the rules above keep seeing the
+    // plain Cast, only execution gets the exact fast kernel
+    ext.injectOptimizerRule(_ => new ExactDoubleToDecimalRule)
     ext.injectFunction((
       FunctionIdentifier("graft_vec_dot"),
       new ExpressionInfo(classOf[FloatVectorDot].getName, "graft_vec_dot"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+      (args: Seq[Expression]) => {
         require(args.length == 2, s"graft_vec_dot expects 2 arguments, got ${args.length}")
         FloatVectorDot(args.head, args(1))
       }))
     ext.injectFunction((
       FunctionIdentifier("graft_vec_dotl"),
       new ExpressionInfo(classOf[LongVectorDot].getName, "graft_vec_dotl"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+      (args: Seq[Expression]) => {
         require(args.length == 2, s"graft_vec_dotl expects 2 arguments, got ${args.length}")
         LongVectorDot(args.head, args(1))
       }))
     ext.injectFunction((
       FunctionIdentifier("graft_adc_sum"),
       new ExpressionInfo(classOf[AdcLookupSum].getName, "graft_adc_sum"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+      (args: Seq[Expression]) => {
         require(args.length == 2, s"graft_adc_sum expects 2 arguments, got ${args.length}")
         AdcLookupSum(args.head, args(1))
       }))
     ext.injectFunction((
       FunctionIdentifier("graft_dbits"),
       new ExpressionInfo(classOf[DoubleOrderBits].getName, "graft_dbits"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+      (args: Seq[Expression]) => {
         require(args.length == 1, s"graft_dbits expects 1 argument, got ${args.length}")
         DoubleOrderBits(args.head)
       }))
+    // MinHash chain kernels (graft.functions.TextFunctions); their scalar
+    // parameters arrive as literal arguments
+    ext.injectFunction((
+      FunctionIdentifier("graft_hash60_array"),
+      new ExpressionInfo(classOf[Hash60Array].getName, "graft_hash60_array"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2, s"graft_hash60_array expects 2 arguments, got ${args.length}")
+        Hash60Array(args.head, constant[UTF8String](args(1)).toString)
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_shingle_keys"),
+      new ExpressionInfo(classOf[PolyShingleKeys].getName, "graft_shingle_keys"),
+      (args: Seq[Expression]) => {
+        require(args.length == 7, s"graft_shingle_keys expects 7 arguments, got ${args.length}")
+        PolyShingleKeys(args.head, args(1), constant[Int](args(2)), constant[Long](args(3)),
+          constant[Long](args(4)), constant[Long](args(5)), constant[UTF8String](args(6)).toString)
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_minhash"),
+      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
+      (args: Seq[Expression]) => {
+        require(args.length >= 4 && args.length % 2 == 0,
+          s"graft_minhash expects (keys, modulus, a0, b0, a1, b1, ...), got ${args.length} arguments")
+        val fams = args.drop(2).map(constant[Long]).grouped(2).map(ab => (ab(0), ab(1))).toSeq
+        MinHashSignature(args.head, fams, constant[Long](args(1)))
+      }))
+  }
+
+  /** Value of a constant argument (a literal in every caller). */
+  private def constant[T](e: Expression): T = {
+    require(e.foldable, s"expected a constant argument, got ${e.sql}")
+    e.eval().asInstanceOf[T]
   }
 }

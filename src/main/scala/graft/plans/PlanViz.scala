@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Graphviz DOT rendering of query plans — the counterpart of the reference's

@@ -12,7 +12,6 @@ import java.nio.file.{Files, Paths}
   * bucketing shuffle once at ingest. */
 class BucketedLayoutSpec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
-  import spark.implicits._
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-buckspec").toString

@@ -92,7 +92,6 @@ class PlanSpec extends AnyFunSuite {
     // the SMJ would stall on that partition — AQE must mark it skewed and
     // split it. Thresholds lowered so the tiny fixture triggers the same
     // re-plan a hot key triggers at 100 TB.
-    import spark.implicits._
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.autoBroadcastJoinThreshold",
@@ -161,6 +160,37 @@ class PlanSpec extends AnyFunSuite {
     val p = planOf("dedup_minhash_lsh")
     assert(!p.contains("CartesianProduct"),
       "LSH candidate generation must join on band buckets, never cross-join")
+  }
+
+  test("dedup LSH: both join sides read ONE signature stage (exchange reused)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val df = SparkEntry.queries("dedup_minhash_lsh")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    // walks the final adaptive plan through its query stages; a reused
+    // exchange is a leaf, so a stage read twice is counted once
+    val sigNodes = helper.collect(plan) {
+      case p: SparkPlan if p.expressions.exists(_.exists(_.isInstanceOf[plans.MinHashSignature])) => p
+    }
+    assert(sigNodes.size == 1, s"signatures must be computed in one stage:\n$plan")
+    assert(helper.collect(plan) { case r: ReusedExchangeExec => r }.nonEmpty,
+      s"the second join side must reuse the band exchange:\n$plan")
+  }
+
+  test("pricing summary: no double→decimal Cast survives optimization") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    val opt = SparkEntry.queries("agg_pricing_summary")(spark, sf).queryExecution.optimizedPlan
+    val exprs = opt.collect { case p => p.expressions }.flatten
+    val casts = exprs.flatMap(_.collect {
+      case c: Cast if c.child.dataType == DoubleType && c.dataType.isInstanceOf[DecimalType] => c
+    })
+    assert(casts.isEmpty, s"double→decimal casts left:\n${casts.mkString("\n")}")
+    assert(exprs.exists(_.exists(_.isInstanceOf[plans.ExactDoubleToDecimal])),
+      s"Det.dec must run on the exact fast kernel:\n$opt")
   }
 
   test("simhash pairs: pigeonhole half-key equi join, no all-pairs scan") {

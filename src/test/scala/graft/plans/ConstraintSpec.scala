@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{Catalog, Pipeline, SparkTestBase, Tables}
+import graft.{Catalog, Pipeline, SparkTestBase}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Key constraints: DDL round-trip into metadata, and the UCC-driven rewrite —

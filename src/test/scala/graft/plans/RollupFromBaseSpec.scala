@@ -12,7 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * non-re-mergeable shape. */
 class RollupFromBaseSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  import spark.implicits._
 
   private def withData[A](f: => A): A = {
     spark.range(1000)
