@@ -30,12 +30,11 @@ object BenchLayout {
       SparkSession.builder().master("local[32]").appName("graft-bench-layout"),
       shufflePartitions = 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val partCols = Map("lineitem" -> "l_returnflag", "orders" -> "o_orderpriority")
     val singleFile = Set("region", "nation") // tiny dims: splitting buys nothing
     Tables.names.foreach { t =>
       val df = Tables.df(spark, src, t)
       val out = s"$dst/$t.parquet"
-      partCols.get(t) match {
+      ScaleUpLayout.partCols.get(t) match {
         // round-robin spread BEFORE the hive write: each of the N tasks
         // emits one file per partition value, so the fact lands as
         // N × |values| splittable files instead of one per value

@@ -35,6 +35,11 @@ object GraftSession {
     * ~3 MB more on the TPC-C mix. */
   val CodegenCacheEntries = 512
 
+  /** AQE's initial partition count per shuffle partition
+    * (`spark.sql.adaptive.coalescePartitions.initialPartitionNum` =
+    * `shufflePartitions` × this); see the comment in [[tuned]]. */
+  private val InitialPartitionsMultiplier = 32
+
   /** Conf shared by every entry point (Verify, Bench, tests, user sessions). */
   def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -53,8 +58,7 @@ object GraftSession {
       // is exactly the config you'd ship: initial count ≫ cores, AQE sizes
       // the real parallelism per stage from map output statistics.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shufflePartitions *
-          sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS_MULT", "32").toInt).toString)
+        (shufflePartitions * InitialPartitionsMultiplier).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")

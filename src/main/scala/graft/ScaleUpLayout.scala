@@ -1,14 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** One-pass fixture → PRODUCTION-LAYOUT scale-up: [[ScaleUp]]'s key-offset
-  * replication fused with [[BenchLayout]]'s hive-partitioned multi-file write,
+/** One-pass fixture → PRODUCTION-LAYOUT scale-up: deterministic N×
+  * key-offset replication fused with the hive-partitioned multi-file write,
   * so decade-scale datasets (SF100 ≈ 100 GB from the sf0.1 fixture at
   * factor 1000) materialize WITHOUT an intermediate flat copy — at these
   * sizes the flat+relayout route would double disk and add a full
   * read/write cycle.
+  *
+  * TPC-H-style scaling: region/nation stay fixed; every other table is
+  * replicated N× with key-space offsets (copy k shifts each key by
+  * k × (domain max + 1), the stride taken from the key's home table), so
+  * per-key cardinalities — lines per order, orders per customer, docs per
+  * source — are PRESERVED, joins stay key-correct across copies, and the
+  * result is exactly "the same shop, N× the history".
   *
   * Parallelism discipline: the copy fan-out (broadcast nested-loop against
   * the copy indices) preserves the stream side's partitioning, so we
@@ -30,7 +38,60 @@ import java.nio.file.{Files, Paths}
   */
 object ScaleUpLayout {
 
-  private val partCols = Map("lineitem" -> "l_returnflag", "orders" -> "o_orderpriority")
+  /** key column -> (home table, home column) for stride computation */
+  private val keyHome: Map[String, (String, String)] = Map(
+    "custkey" -> ("customer", "c_custkey"),
+    "suppkey" -> ("supplier", "s_suppkey"),
+    "partkey" -> ("part", "p_partkey"),
+    "orderkey" -> ("orders", "o_orderkey"),
+    "event_id" -> ("events", "event_id"),
+    "user_id" -> ("events", "user_id"),
+    "doc_id" -> ("documents", "doc_id"),
+    "vec_id" -> ("embeddings", "vec_id"))
+
+  /** table -> columns to offset, tagged with their key domain */
+  private val offsetCols: Map[String, Seq[(String, String)]] = Map(
+    "customer" -> Seq("c_custkey" -> "custkey"),
+    "supplier" -> Seq("s_suppkey" -> "suppkey"),
+    "part" -> Seq("p_partkey" -> "partkey"),
+    "orders" -> Seq("o_orderkey" -> "orderkey", "o_custkey" -> "custkey"),
+    "lineitem" -> Seq("l_orderkey" -> "orderkey", "l_partkey" -> "partkey",
+      "l_suppkey" -> "suppkey"),
+    "events" -> Seq("event_id" -> "event_id", "user_id" -> "user_id"),
+    "documents" -> Seq("doc_id" -> "doc_id"),
+    "embeddings" -> Seq("vec_id" -> "vec_id"))
+
+  /** stride = domain max + 1, from each key's home table */
+  private def keyStrides(spark: SparkSession, src: String): Map[String, Long] =
+    keyHome.map { case (domain, (tbl, c)) =>
+      domain -> (Tables.df(spark, src, tbl).agg(max(col(c).cast("long")))
+        .collect()(0).getLong(0) + 1L)
+    }
+
+  /** The key-offsetting fan-out itself, on an already-partitioned `df` —
+    * the broadcast of `factor` copy indices preserves the stream side's
+    * partitioning, so callers size write parallelism by repartitioning the
+    * SMALL source (cheap) instead of shuffling the scaled output. `name`
+    * must be a key of [[offsetCols]]. */
+  private def scaleDf(spark: SparkSession, df: DataFrame, name: String,
+                      factor: Int, strides: Map[String, Long]): DataFrame = {
+    val copies = broadcast(spark.range(factor.toLong).toDF("copy_k"))
+    val keyed = offsetCols(name).toMap
+    df.crossJoin(copies).select(df.columns.map { c =>
+      keyed.get(c) match {
+        case Some(domain) =>
+          val t = df.schema(c).dataType
+          (col(c).cast("long") + col("copy_k") * lit(strides(domain)))
+            .cast(t).as(c)
+        case None => col(c)
+      }
+    }.toIndexedSeq: _*)
+  }
+
+  /** Hive partition column per fact: low-cardinality flags, so every
+    * returnflag/priority predicate prunes statically. [[BenchLayout]] writes
+    * the same scheme. */
+  private[graft] val partCols = Map("lineitem" -> "l_returnflag", "orders" -> "o_orderpriority")
   /** distinct partition values per hive-partitioned table (returnflag A/N/R;
     * five order priorities) — each write task emits one file per value */
   private val partVals = Map("lineitem" -> 3, "orders" -> 5)
@@ -45,23 +106,16 @@ object ScaleUpLayout {
     }
   }
 
-  /** The fused scale-and-write pass, with an optional per-table row transform
-    * applied AFTER key offsetting (so a transform sees final key values) —
-    * [[SkewLayout]] plugs its JCC-H-style distribution rewrites in here to
-    * materialize a skewed decade without an intermediate uniform copy. */
-  def writeScaled(spark: org.apache.spark.sql.SparkSession, src: String, dst: String,
-                  factor: Int,
-                  transform: Map[String, org.apache.spark.sql.DataFrame =>
-                    org.apache.spark.sql.DataFrame] = Map.empty): Unit = {
-    val strides = ScaleUp.keyStrides(spark, src)
+  /** The fused scale-and-write pass. */
+  private def writeScaled(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
+    val strides = keyStrides(spark, src)
     val target = 128L << 20
     Tables.names.foreach { t =>
       val df = Tables.df(spark, src, t)
       val out = s"$dst/$t.parquet"
-      val tf = transform.getOrElse(t, identity[org.apache.spark.sql.DataFrame] _)
-      if (!ScaleUp.offsetCols.contains(t)) {
+      if (!offsetCols.contains(t)) {
         // fixed dims (region/nation): single file
-        tf(df).coalesce(1).write.mode("overwrite").parquet(out)
+        df.coalesce(1).write.mode("overwrite").parquet(out)
       } else {
         val scaledBytes = dirBytes(s"$src/$t.parquet") * factor
         val vals = partVals.getOrElse(t, 1).toLong
@@ -77,7 +131,7 @@ object ScaleUpLayout {
           math.min(target, scaledBytes / math.max(1L, 2L * cores * vals)))
         val srcParts = math.max(1, math.min(256,
           (scaledBytes / (fileTarget * vals)).toInt))
-        val scaled = tf(ScaleUp.scaleDf(spark, df.repartition(srcParts), t, factor, strides))
+        val scaled = scaleDf(spark, df.repartition(srcParts), t, factor, strides)
         partCols.get(t) match {
           case Some(c) => scaled.write.mode("overwrite").partitionBy(c).parquet(out)
           case None    => scaled.write.mode("overwrite").parquet(out)
@@ -109,9 +163,8 @@ object ScaleUpLayout {
     * exactly what a 1000-executor scan wants; scan-only queries are NOT
     * capped at the bucket count because Spark's auto-bucketed-scan rule
     * splits files normally when no operator needs the bucket partitioning. */
-  def bucketFacts(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def bucketFacts(spark: SparkSession, dir: String,
                   buckets0: Int = 0): Int = {
-    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.StructType
     import java.nio.charset.StandardCharsets.UTF_8
     val liBytes = dirBytes(s"$dir/lineitem.parquet")

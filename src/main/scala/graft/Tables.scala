@@ -79,10 +79,10 @@ object Tables {
     * hash-bucketed copy of the table as an EXTERNAL catalog table (bucket
     * metadata lives in the catalog, not in parquet, so a fresh session must
     * replay the DDL before the zero-exchange bucketed join kicks in). The
-    * driver's fixture dirs carry no manifest and fall through to the flat
-    * path unchanged; `SPARK_GRAFT_FLAT=1` makes every table read its flat
-    * files even where `_layout/` carries a bucketed copy (the bucketed-vs-
-    * flat A/B switch). At 100 TB this is the production
+    * driver's fixture dirs carry no manifest, and a dir whose manifest is
+    * stale (see [[bucketedFresh]]), fall through to the flat path unchanged;
+    * the path is chosen from the directory alone (moving `_layout/` aside
+    * reads the flat files). At 100 TB this is the production
     * co-location story: both fact tables bucketed by orderkey join and
     * pre-aggregate with ZERO data-sized exchanges, paying the partitioning
     * shuffle once at ingest instead of once per query (the durable-storage
@@ -91,7 +91,7 @@ object Tables {
   private def bucketed(spark: SparkSession, dir: String, name: String): Option[DataFrame] = {
     import java.nio.file.{Files, Paths}
     val ddlPath = Paths.get(dir, "_layout", s"$name.sql")
-    if (!Files.exists(ddlPath) || sys.env.get("SPARK_GRAFT_FLAT").contains("1")) None
+    if (!Files.exists(ddlPath)) None
     else if (!bucketedFresh(dir, name)) None
     else {
       val script = new String(Files.readAllBytes(ddlPath), java.nio.charset.StandardCharsets.UTF_8)

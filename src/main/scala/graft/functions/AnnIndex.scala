@@ -105,9 +105,9 @@ object AnnIndex {
     * tiers keep their fixed test-scale NLIST=8 — at 2M rows that leaves
     * ~250k-row cells and a probe that cannot beat a linear scan, which is a
     * test-scale artifact, not a design: this tier is the layout a 100 TB
-    * store actually needs, and its retrieval quality is measured by
-    * [[graft.AnnRecall]] (recall vs exact ground truth) rather than
-    * inherited from a row-identical twin. */
+    * store actually needs, and its retrieval quality is measured against
+    * exact ground truth at 2M rows (bench_evidence/BENCH_r12_ann_2m.json)
+    * rather than inherited from a row-identical twin. */
   private def scaledNlist(n: Long): Int =
     math.max(8, math.min(2048, math.sqrt(n.toDouble).toInt))
 

@@ -48,7 +48,8 @@ object AnnIndexQueries {
     * cosine top-k. Training is deterministic, so the stored index must answer
     * row-identically — which makes "the scaled index answers exactly what the
     * scaled derivation defines" the gated property (recall quality vs exact
-    * ground truth is measured separately by [[graft.AnnRecall]]). */
+    * ground truth is measured separately, at 2M rows in
+    * bench_evidence/BENCH_r12_ann_2m.json). */
   val annIvfScaledProbe: Q = {
     import SimilarityQueries.{DIM, KM_ITERS, NQUERY, TOPK, cosLSql, quantizeSql}
     val meanList = (1 to DIM)

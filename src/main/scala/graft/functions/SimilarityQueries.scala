@@ -753,10 +753,6 @@ object SimilarityQueries {
     ivfPqAdcRanked(s, dir, TOPK)
   }
 
-  /** The IVFPQ ADC ranking with a caller-chosen cutoff — the gated query is
-    * `topK = TOPK`; `AnnRecall` pulls a WIDER shortlist (e.g. 100) and
-    * re-ranks it exactly on the raw vectors: the standard two-stage recall
-    * recovery once pure-ADC precision (M code bytes) saturates at large N. */
   /** IVFPQ corpus-side state from the quantized store: trained-free coarse
     * centroids, the residual PQ codebook, and the encoded corpus
     * (n_id, ncell, codes[M]). Shared by the inline [[ivfPqAdcRanked]] and the
@@ -848,6 +844,11 @@ object SimilarityQueries {
       .orderBy("q_id", "rk")
   }
 
+  /** The IVFPQ ADC ranking with a caller-chosen cutoff — the gated query is
+    * `topK = TOPK`; a WIDER shortlist (e.g. 100) re-ranked exactly on the raw
+    * vectors is the standard two-stage recall recovery once pure-ADC
+    * precision (M code bytes) saturates at large N (measured as
+    * `ann_ivfpq_rerank_topk` in bench_evidence/BENCH_r12_ann_2m.json). */
   private[graft] def ivfPqAdcRanked(
       s: org.apache.spark.sql.SparkSession, dir: String, topK: Int): DataFrame = {
     val quant = emb(s, dir).select(col("vec_id"), quantize(col("embedding")).as("qe"))

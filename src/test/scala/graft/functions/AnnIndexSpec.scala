@@ -35,8 +35,8 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("scaled IVF tier: deterministic full top-k from cell-pruned probes") {
-    // no inline twin (nlist≈√N is index-only; its recall is measured at
-    // scale by graft.AnnRecall) — the spec pins the structural contracts:
+    // no inline twin (nlist≈√N is index-only; its recall at 2M rows is in
+    // bench_evidence/BENCH_r12_ann_2m.json) — the spec pins the structural contracts:
     // TOPK rows per query, valid neighbor ids, repeat-probe determinism
     val a = canon(AnnIndex.probeIvfScaled(spark, sf, idx))
     val b = canon(AnnIndex.probeIvfScaled(spark, sf, idx))

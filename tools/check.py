@@ -22,7 +22,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     import os
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):  # Spark-written dir (e.g. ScaleUp output)
+        if os.path.isdir(p):  # Spark-written dir (e.g. ScaleUpLayout output)
             p = f"{p}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
