@@ -41,7 +41,8 @@ object BenchFile {
     val sqlDir = sys.env.getOrElse("SPARK_GRAFT_SQL_DIR", "bench_queries")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = GraftSession.create("local[32]", shufflePartitions = 32)
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = GraftSession.create(s"local[$cores]", shufflePartitions = cores)
     spark.sparkContext.setLogLevel("ERROR")
     runAll(spark, sqlDir, sfDir) // warmup
     val timed = (1 to nRuns).map(_ => runAll(spark, sqlDir, sfDir))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Materialize a fixture scale-factor directory as the PRODUCTION layout the
   * engine is designed around, so Bench can run against real multi-file scans
   * instead of the driver's single-row-group files:
@@ -26,9 +24,8 @@ object BenchLayout {
     // so an 8-vs-32-core bench can discriminate (the fixture's single-row-
     // group files cap every scan stage at ONE task regardless of cores)
     val files = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = GraftSession.tuned(
-      SparkSession.builder().master("local[32]").appName("graft-bench-layout"),
-      shufflePartitions = 32).getOrCreate()
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = GraftSession.create(s"local[$cores]", shufflePartitions = cores)
     spark.sparkContext.setLogLevel("ERROR")
     val singleFile = Set("region", "nation") // tiny dims: splitting buys nothing
     Tables.names.foreach { t =>

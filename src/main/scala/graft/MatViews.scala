@@ -228,7 +228,7 @@ object MatViews {
   /** Aggregate `rows` (a delta or the whole base) to state-component form.
     * `sign` −1 turns a delete-delta into subtractable components (min/max
     * forbidden there — callers check [[MatViewDef.hasMinMax]] first). */
-  def deltaState(d: MatViewDef, rows: DataFrame, sign: Int = 1): DataFrame = {
+  private[graft] def deltaState(d: MatViewDef, rows: DataFrame, sign: Int = 1): DataFrame = {
     require(sign == 1 || !d.hasMinMax, "negative delta undefined for MIN/MAX")
     val comps = componentAggs(d, sign)
     // expression keys compute their derived column per delta row here; the
@@ -279,7 +279,7 @@ object MatViews {
   }
 
   /** The user-visible rows of the view itself. */
-  def visible(d: MatViewDef, state: DataFrame): DataFrame =
+  private[graft] def visible(d: MatViewDef, state: DataFrame): DataFrame =
     state.select((d.keys.map(col) ++ d.aggs.map(a => aggExpr(a).as(a.alias))): _*)
 
   // ------------------------------------------------------- query rewrite
@@ -316,7 +316,7 @@ object MatViews {
   /** The defining FROM clause's rows for `d`, resolving each table through
     * `tableOf` — optionally substituting `delta` for the single table named
     * `changed` (the Δ(A⋈B⋈C) single-table-delta rule). */
-  def joinedRows(d: MatViewDef, tableOf: String => DataFrame,
+  private[graft] def joinedRows(d: MatViewDef, tableOf: String => DataFrame,
       changed: String = "", delta: DataFrame = null): DataFrame = {
     def resolve(t: String): DataFrame =
       if (changed.nonEmpty && t.equalsIgnoreCase(changed)) delta else tableOf(t)

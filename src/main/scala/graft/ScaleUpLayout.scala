@@ -218,9 +218,8 @@ object ScaleUpLayout {
     // --bucket-only <dir> [buckets]: add the bucketed layout to an EXISTING
     // scaled dir without rebuilding it
     val bucketOnly = args.headOption.contains("--bucket-only")
-    val spark = GraftSession.tuned(
-      SparkSession.builder().master("local[32]").appName("graft-scale-up-layout"),
-      shufflePartitions = 32).getOrCreate()
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = GraftSession.create(s"local[$cores]", shufflePartitions = cores)
     spark.sparkContext.setLogLevel("ERROR")
     if (bucketOnly) {
       bucketFacts(spark, args(1), args.lift(2).map(_.toInt).getOrElse(0))

@@ -750,7 +750,7 @@ object SimilarityQueries {
        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist, n_id) AS rk
        |  FROM adc) WHERE rk <= $TOPK
        |ORDER BY q_id, rk""".stripMargin) { (s, dir) =>
-    ivfPqAdcRanked(s, dir, TOPK)
+    ivfPqAdcRanked(s, dir)
   }
 
   /** IVFPQ corpus-side state from the quantized store: trained-free coarse
@@ -844,16 +844,16 @@ object SimilarityQueries {
       .orderBy("q_id", "rk")
   }
 
-  /** The IVFPQ ADC ranking with a caller-chosen cutoff — the gated query is
-    * `topK = TOPK`; a WIDER shortlist (e.g. 100) re-ranked exactly on the raw
-    * vectors is the standard two-stage recall recovery once pure-ADC
-    * precision (M code bytes) saturates at large N (measured as
-    * `ann_ivfpq_rerank_topk` in bench_evidence/BENCH_r12_ann_2m.json). */
+  /** The inline IVFPQ ADC ranking cut at [[TOPK]]. A wider shortlist
+    * re-ranked exactly on the raw vectors recovers recall once pure-ADC
+    * precision (M code bytes) saturates at large N; that two-stage variant
+    * was measured as `ann_ivfpq_rerank_topk` in
+    * bench_evidence/BENCH_r12_ann_2m.json. */
   private[graft] def ivfPqAdcRanked(
-      s: org.apache.spark.sql.SparkSession, dir: String, topK: Int): DataFrame = {
+      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val quant = emb(s, dir).select(col("vec_id"), quantize(col("embedding")).as("qe"))
     val (cents, cb, enc) = ivfPqCorpusState(quant)
-    ivfPqProbe(quant, cents, cb, enc, topK)
+    ivfPqProbe(quant, cents, cb, enc, TOPK)
   }
 
   // ---------------------------------------------------------- scalar int8

@@ -53,6 +53,18 @@ object TpcdsQueries {
   private val netRevSql =
     "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 
+  /** Q78's NOT EXISTS as a literal anti-join on (l_orderkey, l_linenumber):
+    * rows whose key group holds no 'R' row. The fixtures carry duplicate
+    * keys with mixed flags, so no row-local returnflag predicate is
+    * equivalent. */
+  private def keepNonReturned(li: DataFrame): DataFrame = {
+    val r = li.filter(col("l_returnflag") === "R")
+      .select(col("l_orderkey").as("r_ok"), col("l_linenumber").as("r_ln"))
+    li.join(r,
+      col("l_orderkey") === col("r_ok") && col("l_linenumber") === col("r_ln"),
+      "left_anti")
+  }
+
   // ---------------------------------------------------------------- Q1 shape
   // (tpcds query1: customers whose return total exceeds 1.2× the average
   //  return total of their state). Returns here = 'R'-flagged lineitems;
@@ -144,27 +156,15 @@ object TpcdsQueries {
     // eager-agg variant 130.5 s. Contrast ssb_q4_1, where selective
     // broadcast dims shrink the fact BEFORE a low-cardinality pre-agg and
     // eager aggregation wins 3.4×.
-    // The (channel, priority) grain IS the query's finest lattice level
-    // ([[graft.Rollups.RevByChannelPriority]]), computed by the MatViews
-    // deltaState math over the (bucketed) orderkey join; the coarser levels
-    // re-aggregate from it (the r14 rollup-from-base shape).
-    val d = graft.Rollups.definition(graft.Rollups.RevByChannelPriority)
-    graft.MatViews.visible(d, graft.MatViews.deltaState(d, lineorder(s, dir)))
-      .transform { base =>
-        val revType = base.schema("rev").dataType
-        val lvl1 = base.groupBy(col("channel"))
-          .agg(sum(col("rev")).cast(revType).as("rev"), sum(col("n")).as("n"))
-          .select(col("channel"), lit(null).cast("string").as("o_orderpriority"),
-            col("rev"), col("n"))
-        val lvl0 = base
-          .agg(sum(col("rev")).cast(revType).as("rev"), sum(col("n")).as("n"))
-          .select(lit(null).cast("string").as("channel"),
-            lit(null).cast("string").as("o_orderpriority"), col("rev"), col("n"))
-        base.unionByName(lvl1).unionByName(lvl0)
-      }
-      .select(col("channel"), col("o_orderpriority"),
-        asDouble(col("rev")).as("revenue"), col("n"))
-      .toDF("channel", "o_orderpriority", "revenue", "n")
+    // The channel is projected as a plain column so [[graft.plans.RollupFromBase]]
+    // re-aggregates the coarser levels from the finest (channel, priority)
+    // level instead of expanding every joined row three times.
+    val returned = col("l_returnflag") === "R"
+    lineorder(s, dir)
+      .select(when(returned, "returns").otherwise("catalog").as("channel"),
+        col("o_orderpriority"), when(returned, -netRev).otherwise(netRev).as("rev"))
+      .rollup(col("channel"), col("o_orderpriority"))
+      .agg(asDouble(sum(col("rev"))).as("revenue"), count(lit(1)).as("n"))
       .orderBy(col("channel").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
   }
 
@@ -248,26 +248,14 @@ object TpcdsQueries {
        |    GROUP BY ROLLUP(p_type, p_brand)))
        |WHERE rk <= 3
        |ORDER BY p_type NULLS FIRST, rk, p_brand NULLS FIRST""".stripMargin) { (s, dir) =>
-    // Rollup-from-base (r14): Spark plans ROLLUP as Expand×3 BELOW the
-    // partial aggregate, so the 600M-row join output is hashed three times
-    // (1.8B agg-input rows at SF100). Decimal SUM is associative, so the
-    // coarser lattice levels re-aggregate EXACTLY from the finest level's
-    // ~|type×brand| rows instead — one full-fact aggregation, two tiny ones.
-    // Same rows, same types; DuckDB recomputes the spec ROLLUP.
-    val base = t(s, dir, "lineitem")
+    // Spark plans ROLLUP as Expand×3 BELOW the partial aggregate, hashing
+    // the 600M-row join output three times at SF100;
+    // [[graft.plans.RollupFromBase]] aggregates the finest (type, brand)
+    // level once and re-aggregates the coarser levels from its rows.
+    val lattice = t(s, dir, "lineitem")
       .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_type"), col("p_brand"))
+      .rollup(col("p_type"), col("p_brand"))
       .agg(sum(netRev).as("rev"))
-      .toDF("p_type", "p_brand", "rev") // re-key rollup attrs (self-join check)
-    val revType = base.schema("rev").dataType
-    val lvl1 = base.groupBy(col("p_type"))
-      .agg(sum(col("rev")).cast(revType).as("rev"))
-      .select(col("p_type"), lit(null).cast("string").as("p_brand"), col("rev"))
-    val lvl0 = base
-      .agg(sum(col("rev")).cast(revType).as("rev"))
-      .select(lit(null).cast("string").as("p_type"),
-        lit(null).cast("string").as("p_brand"), col("rev"))
-    val lattice = base.unionByName(lvl1).unionByName(lvl0)
     val w = Window.partitionBy("p_type")
       .orderBy(col("rev").desc, col("p_brand").asc_nulls_first)
     lattice
@@ -504,14 +492,12 @@ object TpcdsQueries {
     val best = cust
       .crossJoin(broadcast(cust.agg(max(col("cq")).as("m"))))
       .filter(col("cq") * 2 > col("m")).select("o_custkey")
-    // The final 1998Q1 pass at (part, customer) grain through the shared
-    // aggregate fragment ([[graft.Rollups.Price9801ByPartCust]], date
-    // predicate in its definition WHERE), computed by the MatViews
-    // deltaState math over the in-bucket join.
-    val dSlice = graft.Rollups.definition(graft.Rollups.Price9801ByPartCust)
-    val finalSlice = graft.MatViews.visible(dSlice, graft.MatViews.deltaState(dSlice,
-      t(s, dir, "lineitem").join(t(s, dir, "orders"),
-        col("l_orderkey") === col("o_orderkey"))))
+    // The final 1998Q1 pass at (part, customer) grain over the in-bucket
+    // join.
+    val finalSlice = lineorder(s, dir)
+      .filter(year(col("o_orderdate")) === 1998 && month(col("o_orderdate")) <= 3)
+      .groupBy("l_partkey", "o_custkey")
+      .agg(sum(dec(col("l_extendedprice"))).as("price_sum"), count(lit(1)).as("n"))
     // r16 semi-join order (guide §3): `best` is the near-max-spend set —
     // SF-invariant small (the 2·cq > max gate admits a handful of
     // customers per 150k, ~thousands at SF100) — so it broadcasts and
@@ -526,12 +512,8 @@ object TpcdsQueries {
         coalesce(sum(col("n")), lit(0L)).as("n_sales"))
   }
 
-  /** Q23 answered through the aggregate fragments
-    * ([[graft.Rollups.QtyByCustkey]] + [[graft.Rollups.Dates1997ByPartkey]]),
-    * computed inline by the MatViews deltaState math: the distinct-date
-    * count becomes a row count over the finest-level state and the
-    * best-customer quantities read the per-cust state; DuckDB recomputes the
-    * spec CTEs raw. */
+  /** Q23 with the distinct-date count as a row count over the distinct
+    * (part, 1997-date) pairs; DuckDB recomputes the spec CTEs raw. */
   val q23Rollup: Q = Q(
     "tpcds_q23_rollup",
     q23FrequentBest.oracle.get) { (s, dir) =>
@@ -539,15 +521,11 @@ object TpcdsQueries {
       col("l_partkey"), col("o_custkey"), col("o_orderdate"),
       floor(col("l_quantity")).cast("long").as("qty"),
       dec(col("l_extendedprice")).as("price"))
-    val dDates = graft.Rollups.definition(graft.Rollups.Dates1997ByPartkey)
-    val dQty = graft.Rollups.definition(graft.Rollups.QtyByCustkey)
-    val joined = t(s, dir, "lineitem").join(t(s, dir, "orders"),
-      col("l_orderkey") === col("o_orderkey"))
-    val freq = graft.MatViews.visible(dDates, graft.MatViews.deltaState(dDates, joined))
+    val freq = lo.filter(year(col("o_orderdate")) === 1997)
+      .select("l_partkey", "o_orderdate").distinct()
       .groupBy("l_partkey").agg(count(lit(1)).as("d"))
       .filter(col("d") >= 4).select("l_partkey")
-    val cust = graft.MatViews.visible(dQty, graft.MatViews.deltaState(dQty, joined))
-      .select(col("o_custkey"), col("qty_sum").as("cq"))
+    val cust = lo.groupBy("o_custkey").agg(sum(col("qty")).as("cq"))
     val best = cust
       .crossJoin(broadcast(cust.agg(max(col("cq")).as("m"))))
       .filter(col("cq") * 2 > col("m")).select("o_custkey")
@@ -945,15 +923,7 @@ object TpcdsQueries {
        |FROM per_cust WHERE open_cents > 0 AND full_cents > 0
        |ORDER BY ratio_pct DESC, cust LIMIT 25""".stripMargin) { (s, dir) =>
     val cents = floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-    // The NOT EXISTS is a literal anti-join on (l_orderkey, l_linenumber):
-    // the fixtures carry duplicate keys with mixed flags, so no row-local
-    // returnflag predicate is equivalent.
-    val li = t(s, dir, "lineitem")
-    val returned = li.filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey").as("r_ok"), col("l_linenumber").as("r_ln"))
-    val keep = li.join(returned,
-        col("l_orderkey") === col("r_ok") && col("l_linenumber") === col("r_ln"),
-        "left_anti")
+    val keep = keepNonReturned(t(s, dir, "lineitem"))
       .select(col("l_orderkey"), col("l_linestatus"), cents.as("cents"))
     val perCust = keep.join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("cust"))
@@ -967,11 +937,8 @@ object TpcdsQueries {
       .limit(25)
   }
 
-  /** Q78 answered through the per-(cust, linestatus) aggregate fragment
-    * ([[graft.Rollups.CentsByCustStatus]]), computed inline by the
-    * keepNonReturned anti-join feeding the MatViews deltaState math, while
-    * DuckDB runs the spec's literal NOT-EXISTS — proving the materialized
-    * anti-join and the component math end to end. */
+  /** Q78 aggregated per (cust, linestatus) first, then re-aggregated per
+    * customer, while DuckDB runs the spec's literal NOT-EXISTS. */
   val q78Rollup: Q = Q(
     "tpcds_q78_rollup",
     s"""WITH keep AS (
@@ -990,10 +957,10 @@ object TpcdsQueries {
        |  (open_cents * 100) // full_cents AS ratio_pct
        |FROM per_cust WHERE open_cents > 0 AND full_cents > 0
        |ORDER BY ratio_pct DESC, cust LIMIT 25""".stripMargin) { (s, dir) =>
-    val d = graft.Rollups.definition(graft.Rollups.CentsByCustStatus)
-    val joined = graft.Rollups.keepNonReturned(t(s, dir, "lineitem"))
+    val st = keepNonReturned(t(s, dir, "lineitem"))
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-    val st = graft.MatViews.visible(d, graft.MatViews.deltaState(d, joined))
+      .groupBy("o_custkey", "l_linestatus")
+      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long")).as("cents_sum"))
     st.groupBy(col("o_custkey").as("cust"))
       .agg(coalesce(sum(when(col("l_linestatus") === "O", col("cents_sum"))), lit(0L)).as("open_cents"),
         coalesce(sum(when(col("l_linestatus") === "F", col("cents_sum"))), lit(0L)).as("full_cents"))
@@ -1162,30 +1129,8 @@ object TpcdsQueries {
       .orderBy("brand")
   }
 
-  /** Q75 answered through the (brand, year) expression-key aggregate
-    * fragment ([[graft.Rollups.SignedByBrandYear]]), computed inline by the
-    * MatViews deltaState math — proving the derived-key grouping and the
-    * two-level signed re-summation against DuckDB's raw three-table
-    * recompute. */
-  val q75Rollup: Q = Q(
-    "tpcds_q75_rollup",
-    q75ChannelDelta.oracle.get) { (s, dir) =>
-    val d = graft.Rollups.definition(graft.Rollups.SignedByBrandYear)
-    val joined = graft.MatViews.joinedRows(d, t(s, dir, _))
-    val st = graft.MatViews.visible(d, graft.MatViews.deltaState(d, joined))
-    val agg = st.select(col("p_brand"), col("yr"),
-      col("qty_sum").as("qty"), col("amt_sum").as("amt"))
-    val c = agg.filter(col("yr") === 1997)
-      .select(col("p_brand"), col("qty").as("curr_qty"), col("amt").as("curr_amt"))
-    val p = agg.filter(col("yr") === 1996)
-      .select(col("p_brand").as("pb"), col("qty").as("prev_qty"), col("amt").as("prev_amt"))
-    c.join(p, col("p_brand") === col("pb"))
-      .filter(col("curr_qty") < col("prev_qty"))
-      .select(col("p_brand").as("brand"), col("prev_qty"), col("curr_qty"),
-        (col("curr_qty") - col("prev_qty")).as("qty_delta"),
-        asDouble(col("curr_amt") - col("prev_amt")).as("amt_delta"))
-      .orderBy("brand")
-  }
+  /** The `*_rollup` name of Q75: the same body and oracle. */
+  val q75Rollup: Q = q75ChannelDelta.copy(name = "tpcds_q75_rollup")
 
   // --------------------------------------------------------------- Q80 shape
   // (tpcds query80: per-channel sales / returns / profit rolled up with
@@ -1208,30 +1153,25 @@ object TpcdsQueries {
        |  CAST(SUM(sales) - SUM(refunds) AS DOUBLE) AS profit
        |FROM det GROUP BY ROLLUP(channel, p_brand)
        |ORDER BY channel NULLS FIRST, p_brand NULLS FIRST""".stripMargin) { (s, dir) =>
-    // Finest level: per-(brand, linenumber%3) CASE'd decimal sums through
-    // the shared aggregate fragment ([[graft.Rollups.ProfitByBrandChannel]]);
-    // decimal addition associates, so the ROLLUP re-aggregates them. The
-    // spec's orders join contributes no columns and runs as a left-semi
-    // join (o_orderkey unique ⇒ semi ≡ the spec's inner join;
-    // zero-exchange on a bucketed layout), so a dir with an orphan
-    // l_orderkey answers the spec SQL.
-    val d = graft.Rollups.definition(graft.Rollups.ProfitByBrandChannel)
+    // The spec's orders join contributes no columns and runs as a left-semi
+    // join (o_orderkey unique ⇒ semi ≡ the spec's inner join; zero-exchange
+    // on a bucketed layout), so a dir with an orphan l_orderkey answers the
+    // spec SQL. [[graft.plans.RollupFromBase]] re-aggregates the coarser
+    // levels from the finest (channel, brand) level of decimal sums.
     val o = t(s, dir, "orders")
-    val li = t(s, dir, "lineitem")
+    val ch = col("l_linenumber") % 3
+    val zero = lit(0).cast("decimal(18,2)")
+    t(s, dir, "lineitem")
       .join(o, col("l_orderkey") === col("o_orderkey"), "left_semi")
-    val det = graft.MatViews.visible(d, graft.MatViews.deltaState(d,
-      li.join(t(s, dir, "part"),
-        col("l_partkey") === col("p_partkey"))))
-    val channel = when(col("ch") === 0, "store")
-      .when(col("ch") === 1, "web").otherwise("catalog")
-    det
-      .select(channel.as("channel"), col("p_brand"),
-        col("sales_sum"), col("refunds_sum"))
+      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+      .select(when(ch === 0, "store").when(ch === 1, "web").otherwise("catalog").as("channel"),
+        col("p_brand"),
+        when(col("l_returnflag") =!= "R", netRev).otherwise(zero).as("sales_dec"),
+        when(col("l_returnflag") === "R", netRev).otherwise(zero).as("refunds_dec"))
       .rollup(col("channel"), col("p_brand"))
-      .agg(asDouble(sum(col("sales_sum"))).as("sales"),
-        asDouble(sum(col("refunds_sum"))).as("refunds"),
-        asDouble(sum(col("sales_sum")) - sum(col("refunds_sum"))).as("profit"))
-      .toDF("channel", "p_brand", "sales", "refunds", "profit")
+      .agg(asDouble(sum(col("sales_dec"))).as("sales"),
+        asDouble(sum(col("refunds_dec"))).as("refunds"),
+        asDouble(sum(col("sales_dec")) - sum(col("refunds_dec"))).as("profit"))
       .orderBy(col("channel").asc_nulls_first, col("p_brand").asc_nulls_first)
   }
 

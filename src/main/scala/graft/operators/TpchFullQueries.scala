@@ -238,34 +238,8 @@ object TpchFullQueries {
       .sortWithinPartitions(col("part_value").desc, col("l_partkey"))
   }
 
-  /** Q11 answered through the per-part aggregate fragment
-    * ([[graft.Rollups.LineitemByPartkey]]): the per-part sums come from
-    * MatViews IVM state (deltaState → visible) computed inline over the
-    * fact — DuckDB recomputes the raw aggregation, proving the state math
-    * value-identical. */
-  val q11Rollup: Q = Q(
-    "tpch_q11_rollup",
-    """SELECT l_partkey, CAST(value_dec AS DOUBLE) AS part_value
-      |FROM (
-      |  SELECT l_partkey,
-      |    SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS value_dec
-      |  FROM lineitem GROUP BY l_partkey)
-      |WHERE value_dec > (
-      |  SELECT SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))))
-      |    * CAST(0.0007 AS DECIMAL(5,4))
-      |  FROM lineitem)
-      |ORDER BY part_value DESC, l_partkey""".stripMargin) { (s, dir) =>
-    val d = graft.Rollups.definition(graft.Rollups.LineitemByPartkey)
-    val perPart = graft.MatViews.visible(d,
-      graft.MatViews.deltaState(d, t(s, dir, "lineitem")))
-    val threshold = perPart
-      .agg((sum(col("value_dec")) * lit(0.0007).cast("decimal(5,4)")).as("thr"))
-    perPart.join(broadcast(threshold))
-      .filter(col("value_dec") > col("thr"))
-      .select(col("l_partkey"), asDouble(col("value_dec")).as("part_value"))
-      .repartition(1)
-      .sortWithinPartitions(col("part_value").desc, col("l_partkey"))
-  }
+  /** The `*_rollup` name of Q11: the same body and oracle. */
+  val q11Rollup: Q = q11ImportantParts.copy(name = "tpch_q11_rollup")
 
   /** Q12 — shipping-priority classes for late lines (shipmode → linestatus,
     * commit/receipt lateness → shipped ≥90 days after order). */
@@ -277,18 +251,13 @@ object TpchFullQueries {
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |WHERE l_shipdate >= o_orderdate + INTERVAL 90 DAY
       |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
-    // Result-grain aggregate fragment whose definition carries the
-    // cross-table lateness predicate ([[graft.Rollups.LateCountsByStatus]]),
-    // computed by the MatViews deltaState math over the (bucketed) orderkey
-    // join.
-    val d = graft.Rollups.definition(graft.Rollups.LateCountsByStatus)
-    val det = graft.MatViews.visible(d, graft.MatViews.deltaState(d,
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))))
-    // COUNT is never NULL; the COALESCE only pins the columns non-nullable
-    det.select(col("l_linestatus"),
-        coalesce(col("high_line_count"), lit(0L)).as("high_line_count"),
-        coalesce(col("low_line_count"), lit(0L)).as("low_line_count"))
+    val urgent = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    t(s, dir, "lineitem")
+      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .filter(col("l_shipdate") >= col("o_orderdate") + expr("INTERVAL 90 DAY"))
+      .groupBy("l_linestatus")
+      .agg(count(when(urgent, 1)).as("high_line_count"),
+        count(when(!urgent, 1)).as("low_line_count"))
       .orderBy("l_linestatus")
   }
 
@@ -302,12 +271,12 @@ object TpchFullQueries {
       |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
       |  GROUP BY c_custkey)
       |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin) { (s, dir) =>
-    // Per-customer filtered order counts through the shared aggregate
-    // fragment ([[graft.Rollups.OrderCountByCust]]); the left join's
-    // zero-count arm re-derives as customer ∖ state via COALESCE.
-    val d13 = graft.Rollups.definition(graft.Rollups.OrderCountByCust)
-    val det = graft.MatViews.visible(d13,
-      graft.MatViews.deltaState(d13, t(s, dir, "orders")))
+    // Per-customer filtered order counts; the left join's zero-count arm
+    // re-derives as customer ∖ det via COALESCE.
+    val det = t(s, dir, "orders")
+      .filter(col("o_orderpriority") =!= "5-LOW")
+      .groupBy("o_custkey")
+      .agg(count(col("o_orderkey")).as("c_count"))
     t(s, dir, "customer")
       .join(det, col("c_custkey") === col("o_custkey"), "left_outer")
       .select(coalesce(col("c_count"), lit(0L)).as("c_count"))
@@ -464,13 +433,16 @@ object TpchFullQueries {
     val sup = t(s, dir, "supplier")
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .select("s_suppkey", "s_name")
-    // The per-(order, supplier) lateness profile through the shared
-    // aggregate fragment ([[graft.Rollups.LateByOrderSupp]]), computed by
-    // the MatViews deltaState math over the (bucketed) orderkey join.
-    val d21 = graft.Rollups.definition(graft.Rollups.LateByOrderSupp)
-    val perSupp = graft.MatViews.visible(d21, graft.MatViews.deltaState(d21,
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))))
+    // The per-(order, supplier) lateness profile over F-status orders:
+    // supp_late (MAX of the 60-day lateness flag) and late_lines (its SUM),
+    // over the (bucketed) orderkey join.
+    val late = when(col("l_shipdate") >= col("o_orderdate") + expr("INTERVAL 60 DAY"), 1)
+      .otherwise(0)
+    val perSupp = t(s, dir, "lineitem")
+      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .filter(col("o_orderstatus") === "F")
+      .groupBy("l_orderkey", "l_suppkey")
+      .agg(max(late).as("supp_late"), sum(late).as("late_lines"))
     // r16 (guide §2.1/§2.4): the EXISTS/NOT-EXISTS cascade needs only
     // per-order AGGREGATES, not per-row window values — one hash
     // aggregation replaces the window's exchange + FULL SORT of the

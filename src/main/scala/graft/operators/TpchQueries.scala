@@ -39,15 +39,16 @@ object TpchQueries {
       |  AND l_shipdate > TIMESTAMP '1998-06-15 00:00:00'
       |GROUP BY l_orderkey, o_orderdate
       |ORDER BY revenue DESC, orderdate, l_orderkey LIMIT 10""".stripMargin) { (s, dir) =>
-    // Per-order revenue through the shared aggregate fragment
-    // ([[graft.Rollups.RevBuildingUnshipped]]), whose WHERE carries all three
-    // query predicates; Catalyst pushes its single-table predicates below
-    // the joins, so the plan matches the hand-written filtered join.
-    val d3 = graft.Rollups.definition(graft.Rollups.RevBuildingUnshipped)
-    val perOrder = graft.MatViews.visible(d3, graft.MatViews.deltaState(d3,
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))))
+    // Per-order revenue with all three query predicates in one filter;
+    // Catalyst pushes the single-table ones below the joins.
+    val perOrder = t(s, dir, "lineitem")
+      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .filter(col("c_mktsegment") === "BUILDING" &&
+        col("o_orderdate") < "1998-06-15 00:00:00" &&
+        col("l_shipdate") > "1998-06-15 00:00:00")
+      .groupBy("l_orderkey", "o_orderdate")
+      .agg(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("rev"))
     perOrder
       .select(col("l_orderkey"), asDouble(col("rev")).as("revenue"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"))
@@ -163,16 +164,15 @@ object TpchQueries {
     // in customer, so (c_custkey, c_name, n_name) groups are 1:1 with
     // custkeys and exact-decimal addition keeps the double hash-identical.
     val n = t(s, dir, "nation")
-    // Per-customer returned revenue at the query's grain through the shared
-    // aggregate fragment ([[graft.Rollups.RRevByCust]]): (c_name,
+    // Per-customer returned revenue at the query's grain: (c_name,
     // c_nationkey) ride in the key (functionally dependent on o_custkey, the
-    // customer PK), and the year cutoff sits in the definition WHERE (the
-    // 1997-01-01 boundary aligns with year() >= 1997 exactly).
-    val d10 = graft.Rollups.definition(graft.Rollups.RRevByCust)
-    val perCust = graft.MatViews.visible(d10, graft.MatViews.deltaState(d10,
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))))
+    // customer PK); the 1997-01-01 cutoff is year() >= 1997 exactly.
+    val perCust = t(s, dir, "lineitem")
+      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .filter(col("l_returnflag") === "R" && year(col("o_orderdate")) >= 1997)
+      .groupBy("o_custkey", "c_name", "c_nationkey")
+      .agg(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("rev"))
     perCust.join(broadcast(n), col("c_nationkey") === n("n_nationkey"))
       .select(col("o_custkey").as("c_custkey"), col("c_name"), col("n_name"),
         asDouble(col("rev")).as("revenue"))
@@ -227,17 +227,16 @@ object TpchQueries {
       |ORDER BY total_qty DESC, o_orderkey""".stripMargin) { (s, dir) =>
     val o = t(s, dir, "orders")
     val l = t(s, dir, "lineitem")
-    // Per-order quantity sums through the shared aggregate fragment
-    // ([[graft.Rollups.QtyDecByOrder]]; (o_orderdate, o_custkey) ride in the
-    // key, o_orderkey is unique in orders) over the in-bucket join
-    // (zero-exchange on a bucketed layout). Spec-exact: after the ~1.5 %-
-    // selective HAVING filter it left-semi joins customer (c_custkey unique
-    // ⇒ semi ≡ the spec's inner join), so a dir with an orphan o_custkey
-    // answers the spec SQL.
-    val d18 = graft.Rollups.definition(graft.Rollups.QtyDecByOrder)
+    // Per-order quantity sums ((o_orderdate, o_custkey) ride in the key,
+    // o_orderkey is unique in orders) over the in-bucket join (zero-exchange
+    // on a bucketed layout). Spec-exact: after the ~1.5 %-selective HAVING
+    // filter it left-semi joins customer (c_custkey unique ⇒ semi ≡ the
+    // spec's inner join), so a dir with an orphan o_custkey answers the spec
+    // SQL.
     val c = t(s, dir, "customer")
-    val perOrder = graft.MatViews.visible(d18, graft.MatViews.deltaState(d18,
-      l.join(o, l("l_orderkey") === o("o_orderkey"))))
+    val perOrder = l.join(o, l("l_orderkey") === o("o_orderkey"))
+      .groupBy("l_orderkey", "o_orderdate", "o_custkey")
+      .agg(sum(dec(col("l_quantity"))).as("qty_dec"))
       .filter(col("qty_dec") > 250)
       .join(c, col("o_custkey") === c("c_custkey"), "left_semi")
     perOrder

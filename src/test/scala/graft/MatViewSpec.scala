@@ -473,4 +473,109 @@ class MatViewSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("select item must be"))
   }
+
+  /** Definitions over the fixture tables with the shapes the engine's
+    * aggregates use: WHERE over joined columns, INTERVAL and TIMESTAMP
+    * literals, expression keys, CASE arguments, COUNT(x) / SUM / MAX, and
+    * a 3-table JOIN chain. */
+  private val fixtureDefs: Seq[(String, String)] = Seq(
+    "lineitem_by_partkey" ->
+      ("SELECT l_partkey, " +
+        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS value_dec " +
+        "FROM lineitem GROUP BY l_partkey"),
+    "lineitem_cents_by_cust_status" ->
+      ("SELECT o_custkey, l_linestatus, " +
+        "SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS cents_sum " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "GROUP BY o_custkey, l_linestatus"),
+    "lineitem_qty_by_custkey" ->
+      ("SELECT o_custkey, SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS qty_sum " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "GROUP BY o_custkey"),
+    "lineitem_1997_dates_by_partkey" ->
+      ("SELECT l_partkey, o_orderdate, COUNT(*) AS n " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "WHERE year(o_orderdate) = 1997 GROUP BY l_partkey, o_orderdate"),
+    "lineitem_signed_by_brand_year" ->
+      ("SELECT p_brand, year(o_orderdate) AS yr, " +
+        "SUM(CASE WHEN l_returnflag = 'R' THEN -CAST(FLOOR(l_quantity) AS BIGINT) " +
+        "ELSE CAST(FLOOR(l_quantity) AS BIGINT) END) AS qty_sum, " +
+        "SUM(CASE WHEN l_returnflag = 'R' " +
+        "THEN -(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) " +
+        "ELSE CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) END) AS amt_sum " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "JOIN part ON l_partkey = p_partkey " +
+        "GROUP BY p_brand, yr"),
+    "lineitem_profit_by_brand_channel" ->
+      ("SELECT p_brand, l_linenumber % 3 AS ch, " +
+        "SUM(CASE WHEN l_returnflag <> 'R' " +
+        "THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) " +
+        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS sales_sum, " +
+        "SUM(CASE WHEN l_returnflag = 'R' " +
+        "THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) " +
+        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS refunds_sum " +
+        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
+        "GROUP BY p_brand, ch"),
+    "lineitem_late_counts_by_status" ->
+      ("SELECT l_linestatus, " +
+        "COUNT(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 END) AS high_line_count, " +
+        "COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 END) AS low_line_count " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "WHERE l_shipdate >= o_orderdate + INTERVAL 90 DAY " +
+        "GROUP BY l_linestatus"),
+    "lineitem_rev_by_channel_priority" ->
+      ("SELECT CASE WHEN l_returnflag = 'R' THEN 'returns' ELSE 'catalog' END AS channel, " +
+        "o_orderpriority, " +
+        "SUM(CASE WHEN l_returnflag = 'R' " +
+        "THEN -(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) " +
+        "ELSE CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) END) AS rev, " +
+        "COUNT(*) AS n " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "GROUP BY channel, o_orderpriority"),
+    "lineitem_qtydec_by_order" ->
+      ("SELECT l_orderkey, o_orderdate, o_custkey, " +
+        "SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qty_dec " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "GROUP BY l_orderkey, o_orderdate, o_custkey"),
+    "orders_count_by_custkey" ->
+      ("SELECT o_custkey, COUNT(o_orderkey) AS c_count FROM orders " +
+        "WHERE o_orderpriority <> '5-LOW' GROUP BY o_custkey"),
+    "lineitem_rrev_by_customer" ->
+      ("SELECT o_custkey, c_name, c_nationkey, " +
+        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "JOIN customer ON o_custkey = c_custkey " +
+        "WHERE l_returnflag = 'R' AND year(o_orderdate) >= 1997 " +
+        "GROUP BY o_custkey, c_name, c_nationkey"),
+    "lineitem_rev_building_unshipped" ->
+      ("SELECT l_orderkey, o_orderdate, " +
+        "SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "JOIN customer ON o_custkey = c_custkey " +
+        "WHERE c_mktsegment = 'BUILDING' " +
+        "AND o_orderdate < TIMESTAMP '1998-06-15 00:00:00' " +
+        "AND l_shipdate > TIMESTAMP '1998-06-15 00:00:00' " +
+        "GROUP BY l_orderkey, o_orderdate"),
+    "lineitem_9801_price_by_part_cust" ->
+      ("SELECT l_partkey, o_custkey, " +
+        "SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS price_sum, COUNT(*) AS n " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "WHERE year(o_orderdate) = 1998 AND month(o_orderdate) <= 3 " +
+        "GROUP BY l_partkey, o_custkey"),
+    "lineitem_late_by_order_supp" ->
+      ("SELECT l_orderkey, l_suppkey, " +
+        "MAX(CASE WHEN l_shipdate >= o_orderdate + INTERVAL 60 DAY THEN 1 ELSE 0 END) AS supp_late, " +
+        "SUM(CASE WHEN l_shipdate >= o_orderdate + INTERVAL 60 DAY THEN 1 ELSE 0 END) AS late_lines " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "WHERE o_orderstatus = 'F' GROUP BY l_orderkey, l_suppkey"))
+
+  test("fixture-table definitions: each view equals its defining query, 3-table joins included") {
+    val cat = new Catalog(spark)
+    val bases = Seq("lineitem", "orders", "customer", "part")
+    bases.foreach(t => cat.register(t, Tables.df(spark, sf, t)))
+    try fixtureDefs.foreach { case (name, text) =>
+      cat.createMatView(name, text)
+      assertMatchesRecompute(cat, name, text)
+    } finally (bases ++ fixtureDefs.map(_._1)).foreach(spark.catalog.dropTempView)
+  }
 }

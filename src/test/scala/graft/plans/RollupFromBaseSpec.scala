@@ -91,4 +91,16 @@ class RollupFromBaseSpec extends AnyFunSuite {
     val (off, _, on) = offOn("SELECT a, AVG(dec_v) AS v FROM rfb_t GROUP BY ROLLUP(a)")
     assert(on === off)
   }
+
+  test("registry ROLLUP bodies (tpcds q5, q67, q80) plan every Expand over a finest-level Aggregate") {
+    for (name <- Seq("tpcds_q5_rollup_channels", "tpcds_q67_topk_rollup",
+        "tpcds_q80_channel_profit_rollup")) {
+      val plan = graft.SparkEntry.queries(name)(spark, graft.SparkTestBase.sf)
+        .queryExecution.optimizedPlan
+      val expands = plan.collect { case e: Expand => e }
+      assert(expands.nonEmpty, s"$name has no Expand:\n$plan")
+      assert(expands.forall(_.child.isInstanceOf[Aggregate]),
+        s"$name expands a join or scan instead of the finest level:\n$plan")
+    }
+  }
 }
