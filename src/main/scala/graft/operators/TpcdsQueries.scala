@@ -492,48 +492,20 @@ object TpcdsQueries {
     val best = cust
       .crossJoin(broadcast(cust.agg(max(col("cq")).as("m"))))
       .filter(col("cq") * 2 > col("m")).select("o_custkey")
-    // The final 1998Q1 pass at (part, customer) grain over the in-bucket
-    // join.
-    val finalSlice = lineorder(s, dir)
-      .filter(year(col("o_orderdate")) === 1998 && month(col("o_orderdate")) <= 3)
-      .groupBy("l_partkey", "o_custkey")
-      .agg(sum(dec(col("l_extendedprice"))).as("price_sum"), count(lit(1)).as("n"))
     // r16 semi-join order (guide §3): `best` is the near-max-spend set —
     // SF-invariant small (the 2·cq > max gate admits a handful of
     // customers per 150k, ~thousands at SF100) — so it broadcasts and
-    // prunes the slice FIRST; the freq semi join then sees a tiny left
-    // side, and its right side reuses the partitioning the d>=4
-    // aggregation already established (no second exchange of the slice).
-    finalSlice
+    // prunes the 1998Q1 slice FIRST; the freq semi join then sees a tiny
+    // left side, and its right side reuses the partitioning the d>=4
+    // aggregation already established.
+    lo.filter(year(col("o_orderdate")) === 1998 && month(col("o_orderdate")) <= 3)
       .join(broadcast(best), Seq("o_custkey"), "left_semi")
       .join(freq, Seq("l_partkey"), "left_semi")
-      .agg(asDouble(sum(col("price_sum"))).as("revenue"),
-        // COUNT(*) over an empty slice is 0, not NULL — mirror it exactly
-        coalesce(sum(col("n")), lit(0L)).as("n_sales"))
-  }
-
-  /** Q23 with the distinct-date count as a row count over the distinct
-    * (part, 1997-date) pairs; DuckDB recomputes the spec CTEs raw. */
-  val q23Rollup: Q = Q(
-    "tpcds_q23_rollup",
-    q23FrequentBest.oracle.get) { (s, dir) =>
-    val lo = lineorder(s, dir).select(
-      col("l_partkey"), col("o_custkey"), col("o_orderdate"),
-      floor(col("l_quantity")).cast("long").as("qty"),
-      dec(col("l_extendedprice")).as("price"))
-    val freq = lo.filter(year(col("o_orderdate")) === 1997)
-      .select("l_partkey", "o_orderdate").distinct()
-      .groupBy("l_partkey").agg(count(lit(1)).as("d"))
-      .filter(col("d") >= 4).select("l_partkey")
-    val cust = lo.groupBy("o_custkey").agg(sum(col("qty")).as("cq"))
-    val best = cust
-      .crossJoin(broadcast(cust.agg(max(col("cq")).as("m"))))
-      .filter(col("cq") * 2 > col("m")).select("o_custkey")
-    lo.filter(year(col("o_orderdate")) === 1998 && month(col("o_orderdate")) <= 3)
-      .join(freq, Seq("l_partkey"), "left_semi")
-      .join(best, Seq("o_custkey"), "left_semi")
       .agg(asDouble(sum(col("price"))).as("revenue"), count(lit(1)).as("n_sales"))
   }
+
+  /** The `*_rollup` name of Q23: the same body and oracle. */
+  val q23Rollup: Q = q23FrequentBest.copy(name = "tpcds_q23_rollup")
 
   // --------------------------------------------------------------- Q72 shape
   // (tpcds query72: the 3-fact inventory join — catalog_sales ⋈ inventory on
@@ -937,39 +909,8 @@ object TpcdsQueries {
       .limit(25)
   }
 
-  /** Q78 aggregated per (cust, linestatus) first, then re-aggregated per
-    * customer, while DuckDB runs the spec's literal NOT-EXISTS. */
-  val q78Rollup: Q = Q(
-    "tpcds_q78_rollup",
-    s"""WITH keep AS (
-       |  SELECT l_orderkey, l_linenumber, l_linestatus,
-       |    CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-       |  FROM lineitem a WHERE NOT EXISTS (
-       |    SELECT 1 FROM lineitem r WHERE r.l_returnflag = 'R'
-       |      AND r.l_orderkey = a.l_orderkey AND r.l_linenumber = a.l_linenumber)
-       |), per_cust AS (
-       |  SELECT o_custkey AS cust,
-       |    COALESCE(SUM(cents) FILTER (WHERE l_linestatus = 'O'), 0) AS open_cents,
-       |    COALESCE(SUM(cents) FILTER (WHERE l_linestatus = 'F'), 0) AS full_cents
-       |  FROM keep JOIN orders ON l_orderkey = o_orderkey
-       |  GROUP BY o_custkey)
-       |SELECT cust, open_cents, full_cents,
-       |  (open_cents * 100) // full_cents AS ratio_pct
-       |FROM per_cust WHERE open_cents > 0 AND full_cents > 0
-       |ORDER BY ratio_pct DESC, cust LIMIT 25""".stripMargin) { (s, dir) =>
-    val st = keepNonReturned(t(s, dir, "lineitem"))
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_custkey", "l_linestatus")
-      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long")).as("cents_sum"))
-    st.groupBy(col("o_custkey").as("cust"))
-      .agg(coalesce(sum(when(col("l_linestatus") === "O", col("cents_sum"))), lit(0L)).as("open_cents"),
-        coalesce(sum(when(col("l_linestatus") === "F", col("cents_sum"))), lit(0L)).as("full_cents"))
-      .filter(col("open_cents") > 0 && col("full_cents") > 0)
-      .select(col("cust"), col("open_cents"), col("full_cents"),
-        expr("(open_cents * 100) div full_cents").as("ratio_pct"))
-      .orderBy(col("ratio_pct").desc, col("cust"))
-      .limit(25)
-  }
+  /** The `*_rollup` name of Q78: the same body and oracle. */
+  val q78Rollup: Q = q78ChannelRatio.copy(name = "tpcds_q78_rollup")
 
   // --------------------------------------------------------------- Q39 shape
   // (tpcds query39: inventory items whose demand is VOLATILE — coefficient of
