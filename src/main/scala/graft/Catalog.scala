@@ -258,14 +258,6 @@ final class Catalog(val spark: SparkSession) {
     maintainMatViews(name, insDelta = Some(rows), delDelta = None)
   }
 
-  /** INSERT INTO ... VALUES with the target's schema enforced. */
-  def insertValues(name: String, values: Seq[Seq[Any]]): Unit = {
-    val schema = table(name).schema
-    val rows = spark.createDataFrame(
-      java.util.Arrays.asList(values.map(Row.fromSeq): _*), schema)
-    insert(name, rows)
-  }
-
   /** DELETE: anti-filter rewrite; NULL predicate = not deleted (SQL semantics). */
   def delete(name: String, cond: Column): Unit = {
     requireNotMatView(name)
@@ -338,7 +330,6 @@ final class Catalog(val spark: SparkSession) {
   private def requireNotMatView(name: String): Unit =
     require(!isMatView(name),
       s"$name is a materialized view — it is read-only; run DML on its base table")
-  def matViewNames: Seq[String] = matViewDefs.keys.toSeq.sorted
 
   def createMatView(name: String, sqlText: String): Unit = {
     val d = MatViews.parse(name, sqlText)

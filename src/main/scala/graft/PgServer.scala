@@ -35,9 +35,10 @@ import org.apache.spark.sql.types._
   * beyond-ref half of the protocol). Binary PARAMETERS are explicitly
   * rejected (Parse discards param type OIDs, so binary params cannot be
   * decoded — text params cover every client we drive). Result fetches are
-  * BOUNDED like [[Server]]: `limit(maxRows + 1)` caps driver materialization;
-  * oversized results close with a NOTICE-equivalent suffix in the command tag
-  * (the client still gets well-formed frames).
+  * BOUNDED: each result is read with `limit(maxRows + 1)`, so the driver
+  * materializes at most `maxRows + 1` rows and the extra row only tells that
+  * the result was cut; oversized results close with a NOTICE-equivalent
+  * suffix in the command tag (the client still gets well-formed frames).
   */
 final class PgServer(makePipeline: () => Pipeline, port: Int = 0, maxRows: Int = 10000) {
 

@@ -202,11 +202,12 @@ object ScaleUpLayout {
         s" CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS" +
         s" LOCATION '$path'"
       val stmts = Seq(ddl) ++ partCol.map(_ => s"MSCK REPAIR TABLE $tbl")
+      // pin first, so a DDL on disk always has its pin
       Files.createDirectories(Paths.get(dir, "_layout"))
-      Files.write(Paths.get(dir, "_layout", s"$t.sql"),
-        stmts.mkString(";\n").getBytes(UTF_8))
       Files.write(Paths.get(dir, "_layout", s"$t.fp.json"),
         s"""{"flat_fp":"$flatFp"}""".getBytes(UTF_8))
+      Files.write(Paths.get(dir, "_layout", s"$t.sql"),
+        stmts.mkString(";\n").getBytes(UTF_8))
       println(s"bucketed $t: $buckets buckets on $key" +
         partCol.fold("")(c => s", hive-partitioned by $c") +
         s" -> ${dirBytes(path) >> 20}MiB at $path")

@@ -113,8 +113,8 @@ object Tables {
     * path instead of silently serving the stale bucketed copy. Verified once
     * per (dir, table) per session — the same granularity as the catalog-table
     * registration the DDL replay already caches ([[clearLayoutCache]] resets
-    * both checks for tests). A dir with DDL but no fp file is a pre-r15
-    * layout and is served on the documented presence-trust contract. */
+    * both checks for tests). A DDL without its fp file is refused the same
+    * way: nothing proves its copy matches the flat files. */
   private val bucketedFreshCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
 
@@ -123,18 +123,16 @@ object Tables {
     val abs = Paths.get(dir).toAbsolutePath.normalize.toString
     bucketedFreshCache.getOrElseUpdate((abs, name), {
       val fpPath = Paths.get(dir, "_layout", s"$name.fp.json")
-      if (!Files.exists(fpPath)) true // pre-r15 layout: presence-trusted
-      else {
-        val pinned = Fingerprints.fromJson(
-          new String(Files.readAllBytes(fpPath), "UTF-8")).get("flat_fp")
-        val now = Fingerprints.of(s"$dir/$name.parquet")
-        val ok = pinned.contains(now)
-        if (!ok)
-          System.err.println(s"graft: REFUSING STALE bucketed layout for $name under $dir " +
-            s"(flat fingerprint moved; pinned=$pinned now=$now) — reading the flat files; " +
-            "re-run ScaleUpLayout --bucket-only to rebuild")
-        ok
-      }
+      val pinned =
+        if (!Files.exists(fpPath)) None
+        else Fingerprints.fromJson(new String(Files.readAllBytes(fpPath), "UTF-8")).get("flat_fp")
+      val now = Fingerprints.of(s"$dir/$name.parquet")
+      val ok = pinned.contains(now)
+      if (!ok)
+        System.err.println(s"graft: REFUSING STALE bucketed layout for $name under $dir " +
+          s"(flat fingerprint not pinned or moved; pinned=$pinned now=$now) — reading the flat " +
+          "files; re-run ScaleUpLayout --bucket-only to rebuild")
+      ok
     })
   }
 

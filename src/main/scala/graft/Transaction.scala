@@ -81,7 +81,6 @@ final class Transaction private[graft] (cat: Catalog) {
     stage(name, Dml.update(table(name), cond, set))
 
   def stage(name: String, df: DataFrame): Unit = { requireActive(); overlay(name) = Some(df) }
-  def stageDrop(name: String): Unit = { requireActive(); overlay(name) = None }
 
   def writeSet: Seq[String] = overlay.keys.toSeq
 

@@ -376,12 +376,13 @@ object CurationQueries {
       label.toSeq.toDF("doc_id", "label")
     } else {
       // sum over an EMPTY frame is NULL — a corpus with zero near-dup pairs
-      // must short-circuit straight to the caller's singleton fold
+      // must short-circuit straight to the caller's singleton fold. Labels
+      // only decrease, so an unchanged sum is the fixpoint; it is reached
+      // within the graph's diameter + 1 rounds, however long the chain.
       val sumRow = labels.agg(sum("label")).head
       var lastSum = if (sumRow.isNullAt(0)) 0L else sumRow.getLong(0)
       var converged = sumRow.isNullAt(0)
-      var rounds = 0
-      while (!converged && rounds < 30) {
+      while (!converged) {
         val nbrMin = edges.join(labels, edges("src") === labels("doc_id"))
           .groupBy(col("dst").as("doc_id")).agg(min("label").as("nbr"))
         labels = labels.join(nbrMin, Seq("doc_id"), "left")
@@ -391,7 +392,6 @@ object CurationQueries {
         val s2 = labels.agg(sum("label")).head.getLong(0)
         converged = s2 == lastSum
         lastSum = s2
-        rounds += 1
       }
       labels
     }

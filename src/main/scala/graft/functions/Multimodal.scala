@@ -7,9 +7,7 @@ import graft.{Q, Tables}
   * shape a 100 TB image/audio corpus needs. Every codec here does real byte
   * work through the JDK (`javax.imageio` PNG/JPEG/GIF, `javax.sound` WAV
   * PCM), exercised on real bytes by the `multimodal_*` gated queries and
-  * oracle-checked via closed-form pixel/sample facts. Deterministic stand-ins
-  * for codecs the container lacks (JPEG-XL, ffmpeg) are quarantined in
-  * [[CodecStubs]] — nothing in this object stubs.
+  * oracle-checked via closed-form pixel/sample facts.
   *
   * No reference counterpart (hyrise's five types have no BINARY,
   * reference: src/lib/all_type_variant.hpp:34-39) — this is training-data-

@@ -504,9 +504,6 @@ object TpcdsQueries {
       .agg(asDouble(sum(col("price"))).as("revenue"), count(lit(1)).as("n_sales"))
   }
 
-  /** The `*_rollup` name of Q23: the same body and oracle. */
-  val q23Rollup: Q = q23FrequentBest.copy(name = "tpcds_q23_rollup")
-
   // --------------------------------------------------------------- Q72 shape
   // (tpcds query72: the 3-fact inventory join — catalog_sales ⋈ inventory on
   //  (item, following week) with an inventory-shortfall residual, dims
@@ -909,9 +906,6 @@ object TpcdsQueries {
       .limit(25)
   }
 
-  /** The `*_rollup` name of Q78: the same body and oracle. */
-  val q78Rollup: Q = q78ChannelRatio.copy(name = "tpcds_q78_rollup")
-
   // --------------------------------------------------------------- Q39 shape
   // (tpcds query39: inventory items whose demand is VOLATILE — coefficient of
   //  variation stdev/mean > 1 — in two CONSECUTIVE months, self-joined on the
@@ -1069,9 +1063,6 @@ object TpcdsQueries {
         asDouble(col("curr_amt") - col("prev_amt")).as("amt_delta"))
       .orderBy("brand")
   }
-
-  /** The `*_rollup` name of Q75: the same body and oracle. */
-  val q75Rollup: Q = q75ChannelDelta.copy(name = "tpcds_q75_rollup")
 
   // --------------------------------------------------------------- Q80 shape
   // (tpcds query80: per-channel sales / returns / profit rolled up with
@@ -1802,8 +1793,7 @@ object TpcdsQueries {
     q51CumulativeCompare, q97OverlapCounts, q14CrossChannel, q23FrequentBest,
     q72InventoryLag, q34TicketBand, q64ResaleMargin, q95MultiSupplier,
     q11YoyGrowth, q49ReturnRatios, q93ReturnsAdjusted,
-    q31ShareShift, q54CohortSegments, q78ChannelRatio, q78Rollup,
-    q23Rollup, q75Rollup,
+    q31ShareShift, q54CohortSegments, q78ChannelRatio,
     q39InventoryCov, q17QuantityBounds,
     q2WowUnion, q75ChannelDelta, q80ChannelProfitRollup, q85BandedDemographics,
     q15OrPredicates, q25ResaleChain, q46CrossNation, q58ChannelBalance,

@@ -238,9 +238,6 @@ object TpchFullQueries {
       .sortWithinPartitions(col("part_value").desc, col("l_partkey"))
   }
 
-  /** The `*_rollup` name of Q11: the same body and oracle. */
-  val q11Rollup: Q = q11ImportantParts.copy(name = "tpch_q11_rollup")
-
   /** Q12 — shipping-priority classes for late lines (shipmode → linestatus,
     * commit/receipt lateness → shipped ≥90 days after order). */
   val q12LatePriority: Q = Q(
@@ -499,7 +496,7 @@ object TpchFullQueries {
 
   val all: Seq[Q] = Seq(
     q2MinCostSupplier, q7VolumeShipping, q8MarketShare, q9ProductProfit,
-    q11ImportantParts, q11Rollup, q12LatePriority, q13CustomerDistribution, q15TopSupplier,
+    q11ImportantParts, q12LatePriority, q13CustomerDistribution, q15TopSupplier,
     q16SupplierCount, q17SmallQuantity, q20PromotionSuppliers, q21WaitingSuppliers,
     q22SalesOpportunity)
 }

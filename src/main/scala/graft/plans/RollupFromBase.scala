@@ -104,12 +104,15 @@ class RollupFromBase(spark: SparkSession) extends Rule[LogicalPlan] {
       val aggFns = a.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae })
       if (aggFns.isEmpty || !aggFns.forall(associative(_, base))) return None
 
-      // ---- finest level: one aggregation of the base at the full key
-      val aggFnsU = aggFns.distinct
-      val partialAliases = aggFnsU.map(ae => Alias(ae, "rfb_partial")())
+      // ---- finest level: one aggregation of the base at the full key, one
+      // partial per distinct function (the same SUM written twice differs
+      // only in its resultId, which canonicalization drops)
+      val aggKeys = aggFns.map(_.canonicalized).distinct
+      val partialAliases =
+        aggKeys.map(k => Alias(aggFns.find(_.canonicalized == k).get, "rfb_partial")())
       val finest = Aggregate(srcAttrs, srcAttrs ++ partialAliases, base)
-      val partialAttr: Map[AggregateExpression, Attribute] =
-        aggFnsU.zip(partialAliases.map(_.toAttribute)).toMap
+      val partialAttr: Map[Expression, Attribute] =
+        aggKeys.zip(partialAliases.map(_.toAttribute)).toMap
 
       // ---- the SAME Expand, now over finest rows: per-set grouping values
       // are reused verbatim (source attr or NULL literal, plus the gid)
@@ -120,21 +123,23 @@ class RollupFromBase(spark: SparkSession) extends Rule[LogicalPlan] {
       val expand2 = Expand(projections2, output2, finest)
 
       // ---- merge layer: each original function re-aggregates its partial
-      def merged(ae: AggregateExpression): Expression = ae.aggregateFunction match {
-        case s: Sum =>
-          Cast(ae.copy(aggregateFunction = Sum(partialAttr(ae)), filter = None), s.dataType)
-        case _: Count =>
-          Coalesce(Seq(ae.copy(aggregateFunction = Sum(partialAttr(ae)), filter = None),
-            Literal(0L)))
-        case _: Min => ae.copy(aggregateFunction = Min(partialAttr(ae)), filter = None)
-        case _: Max => ae.copy(aggregateFunction = Max(partialAttr(ae)), filter = None)
-        case _ => ae
+      def merged(ae: AggregateExpression): Expression = {
+        val partial = partialAttr(ae.canonicalized)
+        ae.aggregateFunction match {
+          case s: Sum =>
+            Cast(ae.copy(aggregateFunction = Sum(partial), filter = None), s.dataType)
+          case _: Count =>
+            Coalesce(Seq(ae.copy(aggregateFunction = Sum(partial), filter = None), Literal(0L)))
+          case _: Min => ae.copy(aggregateFunction = Min(partial), filter = None)
+          case _: Max => ae.copy(aggregateFunction = Max(partial), filter = None)
+          case _ => ae
+        }
       }
       val mergedAes = a.aggregateExpressions.map { ne =>
         // guard on map membership: the replacement itself contains a fresh
         // AggregateExpression the traversal must not re-wrap
         ne.transformDown {
-          case ae: AggregateExpression if partialAttr.contains(ae) => merged(ae)
+          case ae: AggregateExpression if partialAttr.contains(ae.canonicalized) => merged(ae)
         }.asInstanceOf[NamedExpression]
       }
       Some(a.copy(aggregateExpressions = mergedAes, child = expand2))

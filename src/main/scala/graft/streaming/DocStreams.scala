@@ -82,28 +82,6 @@ object DocStreams {
       .select(col("doc_id"), col("corpus_id"))
   }
 
-  /** Ingest-time decontamination screen — a STREAM-STATIC join against the
-    * benchmark corpus's DISTINCT shingle set (the same constants as the batch
-    * CurationQueries.decontaminate, so screen and batch agree exactly).
-    * Emits one row per (arriving doc, matched eval shingle); thresholding to
-    * a keep/drop decision happens downstream (foreachBatch or the batch
-    * re-check), keeping the stream STATELESS — no watermark, no aggregation
-    * state, and the static side is a broadcastable set bounded by the
-    * benchmark size. */
-  def decontaminationScreen(stream: DataFrame, evalDocs: DataFrame): DataFrame = {
-    import graft.functions.DedupQueries
-    val evalSh = TextFunctions.explodeNoReeval(
-        evalDocs.select(TextFunctions.tokens(col("text")).as("ws")),
-        Seq.empty, TextFunctions.shingles(col("ws"), DedupQueries.NGRAM), "s")
-      .distinct()
-    TextFunctions.explodeNoReeval(
-        stream.select(col("doc_id"), TextFunctions.tokens(col("text")).as("ws")),
-        Seq(col("doc_id")),
-        array_distinct(TextFunctions.shingles(col("ws"), DedupQueries.NGRAM)), "s")
-      .join(evalSh, Seq("s"))
-      .select(col("doc_id"), col("s"))
-  }
-
   /** Multi-batch variant of [[source]]: stage the fixture as `nFiles`
     * parquet files and feed ONE file per trigger, so a test observes a real
     * sequence of micro-batches (the single-file source collapses to one

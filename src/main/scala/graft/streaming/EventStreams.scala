@@ -53,14 +53,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("total_value"))
 
-  /** Sliding windows (1h window, 30m slide). */
-  def slidingValue(events: DataFrame): DataFrame =
-    events
-      .withWatermark("event_ts", "1 hour")
-      .groupBy(window(col("event_ts"), "1 hour", "30 minutes"))
-      .agg(avg(col("value")).as("avg_value"))
-      .select(col("window.start").as("window_start"), col("avg_value"))
-
   /** Streaming exact dedup — the ingest-time twin of DedupQueries.dedupExact:
     * `dropDuplicates` within a watermark keeps state bounded (one entry per
     * key inside the watermark horizon, evicted past it). At 100 TB this is

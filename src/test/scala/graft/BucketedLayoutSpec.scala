@@ -105,6 +105,11 @@ class BucketedLayoutSpec extends AnyFunSuite {
     // orders was not touched: still served bucketed
     assert(Tables.df(spark, d, "orders").inputFiles.exists(_.contains("_bucketed")),
       "an untouched table keeps its bucketed copy")
+    // a DDL without its pin is refused too
+    Files.delete(Paths.get(d, "_layout", "orders.fp.json"))
+    Tables.clearLayoutCache()
+    assert(Tables.df(spark, d, "orders").inputFiles.forall(!_.contains("_bucketed")),
+      "an unpinned bucketed copy must be refused in favor of the flat files")
     // cleanup: drop catalog tables registered for this temp dir
     Seq("lineitem", "orders").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS ${Tables.bucketTableName(d, t)}")

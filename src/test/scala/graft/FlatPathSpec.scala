@@ -129,7 +129,7 @@ class FlatPathSpec extends AnyFunSuite {
       .limit(1)
     val d = dirWith(Map("lineitem" ->
       li.unionByName(victim.withColumn("l_returnflag", lit("R")))), "orders")
-    val got = operators.TpcdsQueries.q78Rollup.run(spark, d)
+    val got = operators.TpcdsQueries.q78ChannelRatio.run(spark, d)
     views(d, "q78d", "lineitem", "orders")
     val want = spec("q78d", notExists("q78d"))
     assert(canon(got) === canon(want))

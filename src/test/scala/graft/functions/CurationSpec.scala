@@ -140,6 +140,16 @@ class CurationSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(fast.nonEmpty && fast.toSeq == dist.toSeq,
       "both CC paths must produce identical min-labels")
+    // a symmetric 41-vertex path: propagation needs 40 rounds to carry
+    // label 0 to vertex 40, so a round cap below that mislabels the tail
+    import spark.implicits._
+    val path = (0L until 40L).flatMap(v => Seq((v, v + 1), (v + 1, v))).toDF("src", "dst")
+    val pathFast = CurationQueries.ccLabels(spark, path)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val pathDist = CurationQueries.ccLabels(spark, path, forceDistributed = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    assert(pathFast.toSeq == (0L to 40L).map(_ -> 0L))
+    assert(pathDist.toSeq == pathFast.toSeq, "a 40-hop chain must reach the fixpoint")
   }
 
   test("cc edge budget: dense small-vertex graph routes to the distributed path") {

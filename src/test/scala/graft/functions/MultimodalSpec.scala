@@ -4,22 +4,10 @@ import graft.{SparkTestBase, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Multimodal plumbing: the mapPartitions decode path (per-partition codec
-  * allocation) must be bit-identical to the codegen'd expression stub, and
-  * frame sampling must respect its bounds. */
+/** Multimodal codecs: each JDK codec round-trips real bytes, the decode
+  * queries match their closed forms, and frame sampling respects its bounds. */
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-
-  test("mapPartitions decode == expression decode, bit for bit") {
-    val docs = CodecStubs.attachPayload(
-      Tables.df(spark, SparkTestBase.sf, "documents").limit(100), "text")
-    val viaExpr = CodecStubs.decodeBatched(spark, docs)
-      .select(col("doc_id"), col("features"))
-    val viaPartitions = CodecStubs.decodeMapPartitions(docs)
-      .select(col("doc_id"), col("features"))
-    assert(viaExpr.join(viaPartitions, Seq("doc_id", "features"), "left_anti").count() === 0)
-    assert(viaPartitions.count() === 100)
-  }
 
   test("PngCodec round-trips REAL PNG bytes with per-pixel fidelity") {
     val codec = new Multimodal.PngCodec

@@ -173,15 +173,4 @@ class PipelineOpsSpec extends AnyFunSuite {
         s"NTILE must balance buckets, got ${byTile.toSeq}")
     }
   }
-
-  test("multimodal payload plumbing: byte counts & batched features") {
-    val docs = Tables.df(spark, sf, "documents")
-    val out = CodecStubs.decodeBatched(spark, CodecStubs.attachPayload(docs, "text"))
-    val row = out.select(col("media_meta.n_bytes"), length(col("text")),
-      size(col("features"))).collect()
-    row.foreach { r =>
-      assert(r.getInt(0) == r.getInt(1), "utf8 byte count for ascii text == char count")
-      assert(r.getInt(2) == 4, "stubbed decoder emits fixed-width features")
-    }
-  }
 }

@@ -101,6 +101,11 @@ class RollupFromBaseSpec extends AnyFunSuite {
       assert(expands.nonEmpty, s"$name has no Expand:\n$plan")
       assert(expands.forall(_.child.isInstanceOf[Aggregate]),
         s"$name expands a join or scan instead of the finest level:\n$plan")
+      if (name == "tpcds_q80_channel_profit_rollup") {
+        // profit re-uses the sales and refunds SUMs: two distinct partials
+        val partials = expands.flatMap(_.child.output).count(_.name == "rfb_partial")
+        assert(partials === 2, s"$name keeps a partial per repeated SUM:\n$plan")
+      }
     }
   }
 }
