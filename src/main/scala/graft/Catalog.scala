@@ -101,17 +101,16 @@ final class Catalog(val spark: SparkSession) {
   /** Publish a transaction's staged writes under one commit point, or report
     * the conflicting tables if any of them committed since `snapshotCid`
     * (first-committer-wins; reference: transaction_context.hpp:71-80 commit
-    * validation, RollbackReason::Conflict at types.hpp:227). `None` = drop. */
+    * validation, RollbackReason::Conflict at types.hpp:227). */
   private[graft] def commitTxn(
-      snapshotCid: Long, writes: Seq[(String, Option[DataFrame])]): Either[Seq[String], Long] =
+      snapshotCid: Long, writes: Seq[(String, DataFrame)]): Either[Seq[String], Long] =
     txnLock.synchronized {
       val conflicts = writes.map(_._1).filter(n => lastCommit.getOrElse(n, 0L) > snapshotCid)
       if (conflicts.nonEmpty) Left(conflicts)
       else {
         val cid = commitCid.incrementAndGet()
-        writes.foreach {
-          case (n, Some(df)) => publish(n, df); lastCommit.put(n, cid); recordHistory(n, cid)
-          case (n, None) => removeBinding(n); lastCommit.put(n, cid); recordHistory(n, cid)
+        writes.foreach { case (n, df) =>
+          publish(n, df); lastCommit.put(n, cid); recordHistory(n, cid)
         }
         refreshMatViewsOver(writes.map(_._1))
         logEvent("INFO", s"txn commit cid=$cid tables=${writes.map(_._1).mkString(",")}")
@@ -226,7 +225,7 @@ final class Catalog(val spark: SparkSession) {
       // hooks reattached) instead of leaving a frozen copy
       spark.read.schema("name STRING, sql STRING").json(s"$dir/matviews")
         .collect().sortBy(_.getString(0)).foreach { r =>
-          if (hasTable(r.getString(0))) dropTable(r.getString(0))
+          if (exists(r.getString(0))) dropTable(r.getString(0))
           createMatView(r.getString(0), r.getString(1))
         }
     logEvent("INFO", s"catalog loaded from $dir")
@@ -237,8 +236,6 @@ final class Catalog(val spark: SparkSession) {
 
   def exists(name: String): Boolean = tables.contains(name)
   def tableNames: Seq[String] = tables.keys.toSeq.sorted
-
-  def hasTable(name: String): Boolean = tables.contains(name)
 
   def dropTable(name: String): Unit = {
     val dependents = matViewDefs.values.filter(_.baseTables.contains(name)).map(_.name).toSeq.sorted
@@ -334,7 +331,7 @@ final class Catalog(val spark: SparkSession) {
   def createMatView(name: String, sqlText: String): Unit = {
     val d = MatViews.parse(name, sqlText)
     d.baseTables.foreach { t =>
-      require(hasTable(t), s"unknown base table: $t")
+      require(exists(t), s"unknown base table: $t")
       require(!isMatView(t),
         "materialized view over a materialized view is not supported")
     }

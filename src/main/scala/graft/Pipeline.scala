@@ -47,7 +47,9 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
   // conflict) restores the committed bindings. Temp views are per-SparkSession,
   // so a *concurrent* pipeline on the same session reads staged state early —
   // conflict DETECTION is still correct (it runs against commit CIDs, not
-  // views); only read isolation is session-shared. DDL auto-commits.
+  // views); only read isolation is session-shared. DDL auto-commits; the
+  // verbs that replace or remove a binding (ALTER TABLE, COPY, DROP TABLE)
+  // are refused while a transaction is open.
   private var activeTxn: Option[Transaction] = None
   def inTransaction: Boolean = activeTxn.exists(_.isActive)
 
@@ -423,6 +425,7 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
         invalidatePlanCache()
         StatementResult(s, Ok, None)
       } else if (upper.startsWith("DROP TABLE ")) {
+        require(!inTransaction, "DROP TABLE is auto-commit DDL; not allowed inside BEGIN")
         val rest = s.drop("DROP TABLE ".length).trim
         val (ifExists, name) =
           if (rest.toUpperCase.startsWith("IF EXISTS ")) (true, rest.drop("IF EXISTS ".length).trim)

@@ -57,30 +57,22 @@ private[graft] object Dml {
 final class Transaction private[graft] (cat: Catalog) {
   val (snapshotCid, snapshot) = cat.snapshotForTxn
 
-  // staged writes: Some(df) = new binding, None = dropped
-  private val overlay = mutable.LinkedHashMap.empty[String, Option[DataFrame]]
+  // staged writes: table name -> new binding
+  private val overlay = mutable.LinkedHashMap.empty[String, DataFrame]
   private var done = false
 
   private def requireActive(): Unit =
     require(!done, "transaction already committed or rolled back")
 
-  def table(name: String): DataFrame = overlay.get(name) match {
-    case Some(Some(df)) => df
-    case Some(None) => sys.error(s"no such table: $name (dropped in this transaction)")
-    case None => snapshot.getOrElse(name, sys.error(s"no such table: $name"))
-  }
-
-  def exists(name: String): Boolean = overlay.get(name) match {
-    case Some(o) => o.isDefined
-    case None => snapshot.contains(name)
-  }
+  def table(name: String): DataFrame =
+    overlay.getOrElse(name, snapshot.getOrElse(name, sys.error(s"no such table: $name")))
 
   def insert(name: String, rows: DataFrame): Unit = stage(name, Dml.insert(table(name), rows))
   def delete(name: String, cond: Column): Unit = stage(name, Dml.delete(table(name), cond))
   def update(name: String, cond: Column, set: Map[String, Column]): Unit =
     stage(name, Dml.update(table(name), cond, set))
 
-  def stage(name: String, df: DataFrame): Unit = { requireActive(); overlay(name) = Some(df) }
+  def stage(name: String, df: DataFrame): Unit = { requireActive(); overlay(name) = df }
 
   def writeSet: Seq[String] = overlay.keys.toSeq
 

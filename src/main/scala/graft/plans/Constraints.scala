@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualTo, ExprId, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import scala.collection.concurrent.TrieMap
 
 /** Declared key constraints, kept as optimizer metadata (the reference stores
@@ -16,9 +16,7 @@ import scala.collection.concurrent.TrieMap
   * Consequence of a FALSE declaration: uniqueness-licensed rewrites can
   * change results — [[RemoveRedundantDistinct]] keeps duplicates, and
   * [[JoinToPredicateRewrite]] surfaces the violation loudly (its scalar
-  * subquery throws "more than one row" where the join returned rows). Callers
-  * registering data-backed tables can check a declaration once with
-  * [[ConstraintRegistry.holdsFor]] before trusting it. */
+  * subquery throws "more than one row" where the join returned rows). */
 final case class KeyConstraint(
     table: String, kind: String, cols: Seq[String],
     refTable: Option[String] = None, refCols: Seq[String] = Nil)
@@ -36,16 +34,100 @@ object ConstraintRegistry {
   def uniqueKeys(table: String): Seq[Set[String]] =
     of(table).filter(c => c.kind == "PRIMARY KEY" || c.kind == "UNIQUE")
       .map(_.cols.map(_.toLowerCase).toSet)
+}
 
-  /** One-scan check that a declared unique key actually holds on `df` —
-    * opt-in validation for callers that register data they did not produce
-    * (declarations are otherwise trusted axioms, see [[KeyConstraint]]).
-    * Distributed: a single hash aggregate, no collect of data rows. */
-  def holdsFor(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Boolean = {
-    import org.apache.spark.sql.functions.{count, lit, max}
-    val top = df.groupBy(cols.map(df.col): _*).agg(count(lit(1)).as("c"))
-      .agg(max("c")).head
-    top.isNullAt(0) || top.getLong(0) <= 1L
+/** The one model of declared keys that every key-reading rule shares (the
+  * reference's rules all read data_dependencies/unique_column_combination.hpp
+  * the same way). Only row-identity-preserving shapes are traced, and only
+  * an alias that genuinely names its table ([[owner]]) contributes keys. */
+object KeyTracer extends PredicateHelper {
+
+  /** The constrained table `alias` genuinely names: its child is a View or a
+    * catalog relation of that very name. An alias that merely SHADOWS a
+    * constrained name (`FROM other_table AS t`, or a derived subquery
+    * aliased to `t`) wraps the other source's own alias or a derived plan,
+    * never this table, so it names none and stays transparent: the real
+    * tables beneath still resolve their own constraints. */
+  def owner(alias: SubqueryAlias): Option[String] = {
+    val name = alias.identifier.name.toLowerCase
+    val owns = alias.child match {
+      case v: View => v.desc.identifier.table.equalsIgnoreCase(name)
+      case lr: LogicalRelation => lr.catalogTable.exists(_.identifier.table.equalsIgnoreCase(name))
+      case _ => false
+    }
+    if (owns && ConstraintRegistry.of(name).nonEmpty) Some(name) else None
+  }
+
+  /** `plan` is unique on `keys`: a declared PRIMARY KEY/UNIQUE of an owned
+    * table lies within them (uniqueness on a subset implies it on the set).
+    * Traced through Filter, View, SubqueryAlias, Project — where `keys`
+    * narrows to the exprId pass-throughs — and Inner equi-joins with every
+    * key on one side whose other side is unique on its own join keys (a
+    * PK–FK join cannot duplicate the preserved side's rows). */
+  def unique(plan: LogicalPlan, keys: Seq[Attribute]): Boolean = plan match {
+    case a: SubqueryAlias =>
+      owner(a).exists { t =>
+        val names = keys.filter(a.outputSet.contains).map(_.name.toLowerCase).toSet
+        ConstraintRegistry.uniqueKeys(t).exists(_.subsetOf(names))
+      } || unique(a.child, keys)
+    case Project(ps, child) =>
+      val passed = ps.collect { case ar: AttributeReference => ar.exprId }.toSet
+      val kept = keys.filter(k => passed.contains(k.exprId))
+      kept.nonEmpty && unique(child, kept) // no declared key is empty
+    case f: Filter => unique(f.child, keys)
+    case v: View => unique(v.child, keys)
+    case Join(l, r, Inner, Some(cond), _) =>
+      // one side holds every key; the other must be unique on its join keys
+      equiPairs(l, r, cond).exists { pairs =>
+        if (keys.forall(l.outputSet.contains)) unique(l, keys) && unique(r, pairs.map(_._2))
+        else keys.forall(r.outputSet.contains) && unique(r, keys) && unique(l, pairs.map(_._1))
+      }
+    case _ => false
+  }
+
+  /** A table instance that columns trace to; `id` keeps a self-join's two
+    * sides apart (a key of one instance says nothing about the other). */
+  final case class Instance(id: Int, table: String, viewOwned: Boolean)
+
+  /** exprId → owned table instance, for the columns of `plan` that trace to
+    * one through Project pass-throughs, Filter, View and any join. */
+  def instances(plan: LogicalPlan): Map[ExprId, Instance] = {
+    var nextId = 0
+    def walk(p: LogicalPlan): Map[ExprId, Instance] = p match {
+      case a: SubqueryAlias => owner(a) match {
+        case Some(t) =>
+          nextId += 1
+          val me = Instance(nextId, t, a.child.isInstanceOf[View])
+          a.output.map(_.exprId -> me).toMap
+        case None => walk(a.child)
+      }
+      case Project(ps, child) =>
+        val below = walk(child)
+        ps.collect {
+          case ar: AttributeReference if below.contains(ar.exprId) => ar.exprId -> below(ar.exprId)
+        }.toMap
+      case f: Filter => walk(f.child)
+      case v: View => walk(v.child)
+      case j: Join => walk(j.left) ++ walk(j.right)
+      case _ => Map.empty
+    }
+    walk(plan)
+  }
+
+  /** Every conjunct of `cond` as a cross-side attribute equality, oriented
+    * (left key, right key): Some iff ALL conjuncts are plain `=` between one
+    * attribute of each side (`<=>` would match NULL keys, which a standard
+    * UNIQUE constraint does not make unique). */
+  def equiPairs(l: LogicalPlan, r: LogicalPlan, cond: Expression)
+      : Option[Seq[(AttributeReference, AttributeReference)]] = {
+    val pairs = splitConjunctivePredicates(cond).map {
+      case EqualTo(x: AttributeReference, y: AttributeReference) =>
+        if (l.outputSet.contains(x) && r.outputSet.contains(y)) Some((x, y))
+        else if (l.outputSet.contains(y) && r.outputSet.contains(x)) Some((y, x))
+        else None
+      case _ => None
+    }
+    if (pairs.forall(_.isDefined)) Some(pairs.flatten) else None
   }
 }
 
@@ -54,40 +136,25 @@ object ConstraintRegistry {
   * (dependent_group_by_reduction_rule.cpp's spirit: use unique column
   * combinations to drop redundant dedup work). At scale this deletes an
   * entire hash-aggregate shuffle. Injected via [[GraftExtensions]]. */
-class RemoveRedundantDistinct(spark: SparkSession) extends Rule[LogicalPlan] {
+object RemoveRedundantDistinct extends Rule[LogicalPlan] {
+  import KeyTracer.unique
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case Distinct(child) if keyCovered(child, visibleNames(child)) => child
+    case Distinct(child) if unique(child, child.output) => child
     case Deduplicate(keys, child)
         if keys.map(_.name.toLowerCase).toSet == visibleNames(child)
-          && keyCovered(child, visibleNames(child)) => child
+          && unique(child, child.output) => child
     // ReplaceDistinctWithAggregate has usually run first: a pure-distinct
     // aggregate is Aggregate(out, out, child) with no aggregate functions.
     case a: Aggregate
         if a.aggregateExpressions.forall(_.isInstanceOf[AttributeReference])
           && a.groupingExpressions == a.aggregateExpressions
           && a.aggregateExpressions.map(_.name.toLowerCase).toSet == visibleNames(a.child)
-          && keyCovered(a.child, visibleNames(a.child)) => a.child
+          && unique(a.child, a.child.output) => a.child
   }
 
   private def visibleNames(plan: LogicalPlan): Set[String] =
     plan.output.map(_.name.toLowerCase).toSet
-
-  /** True if `plan` exposes, unduplicated, all columns of some declared unique
-    * key. Only shapes that provably preserve row identity are traversed:
-    * aliases, filters, and simple column projections. */
-  private def keyCovered(plan: LogicalPlan, visible: Set[String]): Boolean = plan match {
-    case SubqueryAlias(ident, child) =>
-      ConstraintRegistry.uniqueKeys(ident.name).exists(_.subsetOf(visible)) ||
-        keyCovered(child, visible)
-    case Project(ps, child) =>
-      // only same-name column passthrough keeps key identity (renames are
-      // conservatively treated as losing the key)
-      val passthrough = ps.collect { case a: AttributeReference => a.name.toLowerCase }.toSet
-      keyCovered(child, visible.intersect(passthrough))
-    case f: Filter => keyCovered(f.child, visible)
-    case _ => false
-  }
 }
 
 /** Inner joins used only as an EXISTENCE probe — no column of one side is
@@ -98,56 +165,21 @@ class RemoveRedundantDistinct(spark: SparkSession) extends Rule[LogicalPlan] {
   * Uniqueness is what licenses it: a non-unique probe side could emit a left
   * row more than once, a semi join never does. At scale the win is the hash
   * table: a semi join stores only probe keys and short-circuits on first
-  * match. Only plain `=` conjuncts qualify (`<=>` would match NULL keys,
-  * which a standard UNIQUE constraint does not make unique). */
-class JoinToSemiJoin(spark: SparkSession) extends Rule[LogicalPlan] {
+  * match. Only plain `=` conjuncts qualify ([[KeyTracer.equiPairs]]). */
+object JoinToSemiJoin extends Rule[LogicalPlan] {
+  import KeyTracer.{equiPairs, unique}
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case p @ Project(_, j @ Join(left, right, Inner, Some(cond), _))
         if p.references.subsetOf(left.outputSet)
-          && rightEquiKeys(cond, j).exists(ks => uniqueCovered(right, ks)) =>
+          && equiPairs(left, right, cond).exists(ps => unique(right, ps.map(_._2))) =>
       p.copy(child = j.copy(joinType = LeftSemi))
-    case p @ Project(_, j @ Join(left, right, Inner, Some(cond), hint))
+    case p @ Project(_, Join(left, right, Inner, Some(cond), hint))
         if p.references.subsetOf(right.outputSet)
-          && leftEquiKeys(cond, j).exists(ks => uniqueCovered(left, ks)) =>
+          && equiPairs(left, right, cond).exists(ps => unique(left, ps.map(_._1))) =>
       // mirrored: probe side is the LEFT input; semi join keeps its left, so
       // swap the children (condition attributes are side-agnostic)
       p.copy(child = Join(right, left, LeftSemi, Some(cond), hint))
-  }
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case other => Seq(other)
-  }
-
-  /** If EVERY conjunct is `leftAttr = rightAttr`, the probe-side key names. */
-  private def rightEquiKeys(cond: Expression, j: Join): Option[Set[String]] = {
-    val pairs = conjuncts(cond).map {
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-          if j.left.outputSet.contains(a) && j.right.outputSet.contains(b) => Some(b.name.toLowerCase)
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-          if j.right.outputSet.contains(a) && j.left.outputSet.contains(b) => Some(a.name.toLowerCase)
-      case _ => None
-    }
-    if (pairs.forall(_.isDefined)) Some(pairs.flatten.toSet) else None
-  }
-
-  private def leftEquiKeys(cond: Expression, j: Join): Option[Set[String]] = {
-    val mirrored = j.copy(left = j.right, right = j.left)
-    rightEquiKeys(cond, mirrored)
-  }
-
-  /** The join keys cover a declared unique key of the probe-side table
-    * (traversing only row-identity-preserving shapes, as in keyCovered). */
-  private def uniqueCovered(plan: LogicalPlan, keys: Set[String]): Boolean = plan match {
-    case SubqueryAlias(ident, child) =>
-      ConstraintRegistry.uniqueKeys(ident.name).exists(_.subsetOf(keys)) ||
-        uniqueCovered(child, keys)
-    case Project(ps, child) =>
-      val passthrough = ps.collect { case a: AttributeReference => a.name.toLowerCase }.toSet
-      keys.subsetOf(passthrough) && uniqueCovered(child, keys)
-    case f: Filter => uniqueCovered(f.child, keys)
-    case _ => false
   }
 }
 
@@ -168,57 +200,14 @@ class JoinToSemiJoin(spark: SparkSession) extends Rule[LogicalPlan] {
   * side, so dependents stay constant within each (possibly NULL) key group.
   * Conservative bails: any non-column grouping expression; any dependent
   * column referenced inside a non-aggregate expression of the select list;
-  * renames (a Project alias drops the source mapping). */
-class DependentGroupByReduction(spark: SparkSession) extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{ExprId, NamedExpression}
+  * renames (a Project alias drops the source mapping); an alias that only
+  * shadows a constrained name ([[KeyTracer.owner]]). */
+object DependentGroupByReduction extends Rule[LogicalPlan] {
+  import org.apache.spark.sql.catalyst.expressions.NamedExpression
   import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First}
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case a: Aggregate if a.groupingExpressions.size > 1 => reduce(a)
-  }
-
-  /** exprId → (table-instance id, table name) for columns that trace to a
-    * catalog table through row-identity-preserving shapes. Distinct instance
-    * ids keep a self-join's two sides apart: a PK from instance 1 never
-    * licenses dropping columns of instance 2. */
-  private def tableSources(plan: LogicalPlan): Map[ExprId, (Int, String)] = {
-    var nextId = 0
-    // An alias that merely SHADOWS a constrained name must not inherit its
-    // constraints: `FROM other_table AS dgbq` or a derived subquery aliased
-    // to `dgbq` resolves to SubqueryAlias(dgbq, ...) over the OTHER source's
-    // plan, and attributing dgbq's PRIMARY KEY there would unsoundly shrink
-    // the grouping list (this rule changes returned rows, unlike the
-    // keyCovered lookups). This rule runs post-hoc in the analyzer, where a
-    // genuine catalog reference still carries its View node — so constraints
-    // attach ONLY when the alias directly wraps the resolved View OF THE SAME
-    // NAME. A shadowing alias wraps the other table's own SubqueryAlias (or a
-    // derived Project/Aggregate), never this view, and stays transparent so
-    // the real tables beneath still resolve their own constraints.
-    def isOwnView(child: LogicalPlan, name: String): Boolean = child match {
-      case v: org.apache.spark.sql.catalyst.plans.logical.View =>
-        v.desc.identifier.table.toLowerCase == name
-      case _ => false
-    }
-    def walk(p: LogicalPlan): Map[ExprId, (Int, String)] = p match {
-      case SubqueryAlias(ident, child) =>
-        val name = ident.name.toLowerCase
-        if (ConstraintRegistry.of(ident.name).nonEmpty && isOwnView(child, name)) {
-          nextId += 1
-          val me = nextId
-          p.output.map(o => o.exprId -> (me, name)).toMap
-        } else walk(child) // transparent alias (no constraints at this name)
-      case Project(ps, child) =>
-        val below = walk(child)
-        ps.collect {
-          case ar: AttributeReference if below.contains(ar.exprId) =>
-            ar.exprId -> below(ar.exprId)
-        }.toMap
-      case f: Filter => walk(f.child)
-      case v: org.apache.spark.sql.catalyst.plans.logical.View => walk(v.child)
-      case j: Join => walk(j.left) ++ walk(j.right)
-      case _ => Map.empty
-    }
-    walk(plan)
   }
 
   /** References of `e` OUTSIDE aggregate functions (an aggregate's argument
@@ -232,13 +221,14 @@ class DependentGroupByReduction(spark: SparkSession) extends Rule[LogicalPlan] {
   private def reduce(a: Aggregate): LogicalPlan = {
     val groupAttrs = a.groupingExpressions.collect { case ar: AttributeReference => ar }
     if (groupAttrs.size != a.groupingExpressions.size) return a // expression keys: bail
-    val sources = tableSources(a.child)
+    // View-owned only: a non-decomposable FIRST on a catalog relation stops EagerAggregation (q18, q10)
+    val sources = KeyTracer.instances(a.child).filter(_._2.viewOwned)
     val depIds: Set[ExprId] = groupAttrs
       .filter(g => sources.contains(g.exprId))
       .groupBy(g => sources(g.exprId))
-      .flatMap { case ((_, table), attrs) =>
+      .flatMap { case (inst, attrs) =>
         val names = attrs.map(_.name.toLowerCase).toSet
-        ConstraintRegistry.of(table)
+        ConstraintRegistry.of(inst.table)
           .filter(_.kind == "PRIMARY KEY")
           .map(_.cols.map(_.toLowerCase).toSet)
           .find(pk => pk.nonEmpty && pk.subsetOf(names))
@@ -291,30 +281,30 @@ class DependentGroupByReduction(spark: SparkSession) extends Rule[LogicalPlan] {
   * Correctness: the unique equality leaves ≤1 build row, so an inner join
   * cannot duplicate kept rows and semi/inner keep-sets coincide; an empty
   * build side makes the scalar subquery NULL and `col = NULL` keeps nothing,
-  * exactly the empty-join result. Uniqueness is View-verified like
-  * [[DependentGroupByReduction]] — a shadowing alias never licenses the
-  * rewrite, and only a singleton declared key column (PRIMARY KEY or UNIQUE
-  * of that one column) traced through row-preserving shapes qualifies, so
-  * the subquery can never raise a more-than-one-row error.
+  * exactly the empty-join result. Uniqueness comes from [[KeyTracer.unique]]
+  * — a shadowing alias never licenses the rewrite, and only a singleton
+  * declared key column (PRIMARY KEY or UNIQUE of that one column) traced
+  * through row-preserving shapes qualifies, so the subquery can never raise
+  * a more-than-one-row error.
   *
   * At scale the win is plan shape: no build-side exchange at all — the
   * subquery executes once during preparation and the remaining predicate is
   * a codegen'd literal comparison on the probe side instead of a per-row
   * hash probe. Injected after [[JoinToSemiJoin]] via [[GraftExtensions]]. */
-class JoinToPredicateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+object JoinToPredicateRewrite extends Rule[LogicalPlan] with PredicateHelper {
   import org.apache.spark.sql.catalyst.expressions.{Literal, ScalarSubquery}
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, LeftSemi, Some(EqualTo(x: AttributeReference, y: AttributeReference)), _)
+    case j @ Join(left, right, LeftSemi, Some(cond @ EqualTo(_: AttributeReference, _: AttributeReference)), _)
         if planDeterministic(right) =>
-      sidePair(left, right, x, y).collect {
+      KeyTracer.equiPairs(left, right, cond).map(_.head).collect {
         case (lk, rk) if singletonGuaranteed(right) =>
           Filter(EqualTo(lk, ScalarSubquery(Project(Seq(rk), right))), left)
       }.getOrElse(j)
     case p @ Project(_, Filter(cond,
-        j @ Join(left, right, Inner, Some(EqualTo(x: AttributeReference, y: AttributeReference)), _)))
+        Join(left, right, Inner, Some(on @ EqualTo(_: AttributeReference, _: AttributeReference)), _)))
         if p.references.subsetOf(left.outputSet) && planDeterministic(right) =>
-      rewriteInner(p, cond, left, right, x, y).getOrElse(p)
+      rewriteInner(p, cond, left, right, on).getOrElse(p)
   }
 
   /** No node in the subtree evaluates a nondeterministic expression — the
@@ -326,15 +316,15 @@ class JoinToPredicateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     p.find(n => !n.expressions.forall(_.deterministic)).isEmpty
 
   private def rewriteInner(p: Project, cond: Expression, left: LogicalPlan,
-      right: LogicalPlan, x: AttributeReference, y: AttributeReference): Option[LogicalPlan] = {
-    val cs = conjuncts(cond)
+      right: LogicalPlan, on: Expression): Option[LogicalPlan] = {
+    val cs = splitConjunctivePredicates(cond)
     if (!cs.forall(_.deterministic)) return None // a rand()<0.5 conjunct must
     // keep filtering per joined row; moving it into a once-evaluated scalar
     // subquery (or leaving it beside the probe predicate with a different
     // evaluation count) would keep all-or-none of the fact rows instead.
     val (rightCs, restCs) = cs.partition(_.references.subsetOf(right.outputSet))
     for {
-      (lk, rk) <- sidePair(left, right, x, y)
+      (lk, rk) <- KeyTracer.equiPairs(left, right, on).map(_.head)
       if restCs.forall(_.references.subsetOf(left.outputSet)) // no mixed conjuncts
       filteredRight = rightCs.reduceOption(And).map(Filter(_, right)).getOrElse(right)
       if singletonGuaranteed(filteredRight)
@@ -344,52 +334,21 @@ class JoinToPredicateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  private def sidePair(left: LogicalPlan, right: LogicalPlan,
-      x: AttributeReference, y: AttributeReference): Option[(AttributeReference, AttributeReference)] =
-    if (left.outputSet.contains(x) && right.outputSet.contains(y)) Some((x, y))
-    else if (left.outputSet.contains(y) && right.outputSet.contains(x)) Some((y, x))
-    else None
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case other => Seq(other)
-  }
-
   /** Some filter inside `plan` (through row-preserving shapes only — a
-    * union or join in between would invalidate the key, reference
-    * join_to_predicate_rewrite_rule.cpp:108-118) pins a declared
-    * single-column unique key to one literal → at most one row survives. */
+    * union in between would invalidate the key, reference
+    * join_to_predicate_rewrite_rule.cpp:108-118) pins a column that its
+    * input is unique on by a single-column declared key to one literal → at
+    * most one row survives. */
   private def singletonGuaranteed(plan: LogicalPlan): Boolean = plan match {
     case f: Filter =>
-      conjuncts(f.condition).exists {
-        case EqualTo(a: AttributeReference, _: Literal) => uniqueOn(f.child, a)
-        case EqualTo(_: Literal, a: AttributeReference) => uniqueOn(f.child, a)
+      splitConjunctivePredicates(f.condition).exists {
+        case EqualTo(a: AttributeReference, _: Literal) => KeyTracer.unique(f.child, Seq(a))
+        case EqualTo(_: Literal, a: AttributeReference) => KeyTracer.unique(f.child, Seq(a))
         case _ => false
       } || singletonGuaranteed(f.child)
     case Project(_, child) => singletonGuaranteed(child)
     case SubqueryAlias(_, child) => singletonGuaranteed(child)
     case v: View => singletonGuaranteed(v.child)
-    case _ => false
-  }
-
-  /** `a` alone is a declared unique key of the genuine catalog table it
-    * traces to (View-verified, exprId-preserving pass-throughs only). */
-  private def uniqueOn(plan: LogicalPlan, a: AttributeReference): Boolean = plan match {
-    case SubqueryAlias(ident, child) =>
-      (child match {
-        case v: View =>
-          v.desc.identifier.table.equalsIgnoreCase(ident.name) &&
-            plan.outputSet.contains(a) &&
-            ConstraintRegistry.uniqueKeys(ident.name).contains(Set(a.name.toLowerCase))
-        case _ => false
-      }) || uniqueOn(child, a)
-    case Project(ps, child) =>
-      ps.exists {
-        case ar: AttributeReference => ar.exprId == a.exprId
-        case _ => false
-      } && uniqueOn(child, a)
-    case f: Filter => uniqueOn(f.child, a)
-    case v: View => uniqueOn(v.child, a)
     case _ => false
   }
 }

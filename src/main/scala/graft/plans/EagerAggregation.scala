@@ -85,7 +85,8 @@ import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, NumericTyp
   * (operators/SsbQueries.scala). Re-tested against the r14 generalization
   * (multi-conjunct keys, composite-FK bounds, AVG): the refusal is
   * stats-driven, not structural, so it stands — the spec pins it. */
-class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
+class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
+  import KeyTracer.{equiPairs, unique}
 
   private val MinCollapse = 3.0
   private val DefaultFilterSel = 0.33
@@ -106,22 +107,6 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
     case j: Join => tryJoin(a, j, None)
     case Filter(cond, j: Join) => tryJoin(a, j, Some(cond))
     case _ => None
-  }
-
-  /** Every conjunct of `cond` as a cross-side attribute equality:
-    * Some(Seq((lKey, rKey))) iff ALL conjuncts are `EqualTo` between one
-    * left-side and one right-side attribute (r14: multi-conjunct equi
-    * joins — composite-key dimensions fire like single-key ones). */
-  private def equiPairs(l: LogicalPlan, r: LogicalPlan, cond: Expression)
-      : Option[Seq[(AttributeReference, AttributeReference)]] = {
-    val pairs = splitConjuncts(cond).map {
-      case EqualTo(x: AttributeReference, y: AttributeReference) =>
-        if (l.outputSet.contains(x) && r.outputSet.contains(y)) Some((x, y))
-        else if (l.outputSet.contains(y) && r.outputSet.contains(x)) Some((y, x))
-        else None
-      case _ => None
-    }
-    if (pairs.forall(_.isDefined)) Some(pairs.map(_.get)) else None
   }
 
   private def tryJoin(a: Aggregate, j: Join, where: Option[Expression]): Option[LogicalPlan] =
@@ -145,7 +130,7 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
       factKeys: Seq[AttributeReference], otherKeys: Seq[AttributeReference],
       factIsLeft: Boolean, where: Option[Expression]): Option[LogicalPlan] = {
     // WHERE above the join: push fact-side conjuncts, refuse the rest
-    val whereCs = where.map(splitConjuncts).getOrElse(Nil)
+    val whereCs = where.map(splitConjunctivePredicates).getOrElse(Nil)
     val (factCs, rest) = whereCs.partition(_.references.subsetOf(fact0.outputSet))
     if (rest.nonEmpty) return None
     val fact = factCs.reduceOption(And).map(Filter(_, fact0)).getOrElse(fact0)
@@ -173,7 +158,7 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
     // no non-agg select expression may mix fact refs outside grouping exprs —
     // Spark's analyzer already guarantees select exprs are grouping exprs or
     // aggregates, so matching grouping exprs below is enough
-    if (!uniqueOnKeys(other, otherKeys)) return None
+    if (!unique(other, otherKeys)) return None
     if (hasDataFilter(other)) return None // forfeit no runtime prune (q4 lesson)
 
     // ---- stats gate
@@ -266,67 +251,15 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
       aggregateExpressions = finalAggs, child = newJoin))
   }
 
-  // ------------------------------------------------ uniqueness licensing
-
-  /** `plan` is provably unique on the composite `keys`: a declared
-    * PK/UNIQUE of the genuine catalog object it traces to whose columns are
-    * a SUBSET of `keys` (uniqueness on a superset is implied), through
-    * row-identity-preserving shapes — including Inner PK–FK joins, which
-    * cannot duplicate the preserved side's rows when the OTHER side is
-    * unique on its own join keys. */
-  private def uniqueOnKeys(plan: LogicalPlan, keys: Seq[AttributeReference]): Boolean = plan match {
-    case SubqueryAlias(ident, child) =>
-      ownNamed(ident.name, child, keys) || uniqueOnKeys(child, keys)
-    case Project(ps, child) =>
-      keys.forall(key => ps.exists {
-        case ar: AttributeReference => ar.exprId == key.exprId
-        case _ => false
-      }) && uniqueOnKeys(child, keys)
-    case f: Filter => uniqueOnKeys(f.child, keys)
-    case v: View => uniqueOnKeys(v.child, keys)
-    case Join(l, r, Inner, Some(cond), _) =>
-      equiPairs(l, r, cond) match {
-        case Some(pairs) =>
-          val (lks, rks) = (pairs.map(_._1), pairs.map(_._2))
-          if (keys.forall(l.outputSet.contains))
-            uniqueOnKeys(l, keys) && uniqueOnKeys(r, rks)
-          else if (keys.forall(r.outputSet.contains))
-            uniqueOnKeys(r, keys) && uniqueOnKeys(l, lks)
-          else false
-        case None => false
-      }
-    case _ => false
-  }
-
-  /** Declared unique key at a NAME that genuinely owns its child (a resolved
-    * View of the same name, or a catalog relation of the same name) — the
-    * shadow-alias discipline of [[DependentGroupByReduction]]. */
-  private def ownNamed(name: String, child: LogicalPlan, keys: Seq[AttributeReference]): Boolean = {
-    val owns = child match {
-      case v: View => v.desc.identifier.table.equalsIgnoreCase(name)
-      case lr: LogicalRelation =>
-        lr.catalogTable.exists(_.identifier.table.equalsIgnoreCase(name))
-      case _ => false
-    }
-    owns && keys.forall(child.outputSet.contains) &&
-      ConstraintRegistry.uniqueKeys(name)
-        .exists(_.subsetOf(keys.map(_.name.toLowerCase).toSet))
-  }
-
   /** A filter with a DATA predicate (not just null guards) sits in the
     * subtree — joining this side will hand the fact a runtime prune that a
     * pre-aggregate below the join would forfeit. */
   private def hasDataFilter(plan: LogicalPlan): Boolean = plan.exists {
-    case f: Filter => splitConjuncts(f.condition).exists {
+    case f: Filter => splitConjunctivePredicates(f.condition).exists {
       case _: IsNotNull => false
       case _ => true
     }
     case _ => false
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
   }
 
   // -------------------------------------------------------- cardinality
@@ -349,7 +282,7 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
     case v: View => estRows(v.child)
     case Project(_, child) => estRows(child)
     case f: Filter =>
-      val dataPreds = splitConjuncts(f.condition).count {
+      val dataPreds = splitConjunctivePredicates(f.condition).count {
         case _: IsNotNull => false
         case _ => true
       }
@@ -358,9 +291,9 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
       equiPairs(l, r, cond) match {
         case Some(pairs) =>
           val (lks, rks) = (pairs.map(_._1), pairs.map(_._2))
-          if (uniqueOnKeys(r, rks))
+          if (unique(r, rks))
             for (fl <- estRows(l); sel <- sideSelectivity(r)) yield fl * sel
-          else if (uniqueOnKeys(l, lks))
+          else if (unique(l, lks))
             for (fr <- estRows(r); sel <- sideSelectivity(l)) yield fr * sel
           else None
         case None => None
@@ -392,11 +325,11 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
   private def estGroups(keys: Seq[Expression], fact: LogicalPlan): Option[Double] = {
     val attrs = keys.collect { case ar: AttributeReference => ar }
     val exprs = keys.filterNot(_.isInstanceOf[AttributeReference])
-    val sources = attributeTables(fact)
+    val sources = KeyTracer.instances(fact)
     val byInstance = attrs.groupBy(a => sources.get(a.exprId))
     var bound = 1.0
     byInstance.foreach {
-      case (Some((_, table)), as) =>
+      case (Some(KeyTracer.Instance(_, table, _)), as) =>
         val names = as.map(_.name.toLowerCase).toSet
         val pkCovered = ConstraintRegistry.of(table)
           .filter(_.kind == "PRIMARY KEY")
@@ -457,38 +390,5 @@ class EagerAggregation(spark: SparkSession) extends Rule[LogicalPlan] {
       case f if f.prettyName == "hour" && f.children.forall(isTemporal) => Some(24.0)
       case _ => None
     }
-  }
-
-  /** exprId → (instance id, table name) for attributes tracing to a genuine
-    * catalog object (View-of-same-name or catalog relation), through
-    * row-identity-preserving shapes — [[DependentGroupByReduction]]'s
-    * instance discipline, extended to catalog relations. */
-  private def attributeTables(plan: LogicalPlan): Map[ExprId, (Int, String)] = {
-    var nextId = 0
-    def walk(p: LogicalPlan): Map[ExprId, (Int, String)] = p match {
-      case SubqueryAlias(ident, child) =>
-        val name = ident.name.toLowerCase
-        val owns = child match {
-          case v: View => v.desc.identifier.table.equalsIgnoreCase(name)
-          case lr: LogicalRelation =>
-            lr.catalogTable.exists(_.identifier.table.equalsIgnoreCase(name))
-          case _ => false
-        }
-        if (owns && ConstraintRegistry.of(name).nonEmpty) {
-          nextId += 1
-          val me = nextId
-          p.output.map(o => o.exprId -> (me, name)).toMap
-        } else walk(child)
-      case Project(ps, child) =>
-        val below = walk(child)
-        ps.collect {
-          case ar: AttributeReference if below.contains(ar.exprId) => ar.exprId -> below(ar.exprId)
-        }.toMap
-      case f: Filter => walk(f.child)
-      case v: View => walk(v.child)
-      case j: Join => walk(j.left) ++ walk(j.right)
-      case _ => Map.empty
-    }
-    walk(plan)
   }
 }

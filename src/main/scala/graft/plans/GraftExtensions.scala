@@ -18,12 +18,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // nodes to map plans back to constrained catalog tables, and the
     // optimizer's Finish-Analysis batch strips those before custom optimizer
     // rules run.
-    ext.injectPostHocResolutionRule(session => new RemoveRedundantDistinct(session))
-    ext.injectPostHocResolutionRule(session => new JoinToSemiJoin(session))
-    ext.injectPostHocResolutionRule(session => new DependentGroupByReduction(session))
+    ext.injectPostHocResolutionRule(_ => RemoveRedundantDistinct)
+    ext.injectPostHocResolutionRule(_ => JoinToSemiJoin)
+    ext.injectPostHocResolutionRule(_ => DependentGroupByReduction)
     // after JoinToSemiJoin: it canonicalizes the prunable inner join into the
     // LeftSemi shape this rule's first case consumes
-    ext.injectPostHocResolutionRule(session => new JoinToPredicateRewrite(session))
+    ext.injectPostHocResolutionRule(_ => JoinToPredicateRewrite)
     // after the key-driven rewrites: a shrunk grouping list gives the eager
     // pre-aggregate fewer keys, and the stats gate sees the final shape
     ext.injectPostHocResolutionRule(session => new EagerAggregation(session))

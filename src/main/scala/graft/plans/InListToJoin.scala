@@ -28,12 +28,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * Guard: an IN over a PARTITION column is left alone — the scan prunes it
   * at the file listing, which the semi join would forfeit. */
-class InListToJoin(spark: SparkSession) extends Rule[LogicalPlan] {
+class InListToJoin(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
   import InListToJoin.Threshold
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, child) if f.resolved =>
-      val conjs = splitConjuncts(cond)
+      val conjs = splitConjunctivePredicates(cond)
       val (ins, rest) = conjs.partition(rewritable(_, child))
       if (ins.isEmpty) f
       else {
@@ -74,11 +74,6 @@ class InListToJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           })
     }.flatten.map(_.toLowerCase).toSet
     value.references.exists(a => partCols.contains(a.name.toLowerCase))
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
   }
 }
 

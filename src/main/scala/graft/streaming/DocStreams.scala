@@ -121,7 +121,7 @@ object DocStreams {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val materialized = batch.localCheckpoint(true)
-        if (cat.hasTable(table)) cat.insert(table, materialized)
+        if (cat.exists(table)) cat.insert(table, materialized)
         else cat.register(table, materialized)
       }
       .start()

@@ -313,6 +313,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(rs(0).status == p.Ok)
     assert(rs(2).status != p.Ok, "nested BEGIN must fail")
     assert(rs(3).status == p.Ok, "read-only commit succeeds")
+    // DROP TABLE is auto-commit DDL: refused inside BEGIN, so ROLLBACK keeps
+    // the table and a later staged write to it still commits
+    val dr = p.run("BEGIN; DROP TABLE t_region; ROLLBACK")
+    assert(dr(1).status != p.Ok, "DROP TABLE inside BEGIN must be refused")
+    assert(p.catalog.exists("t_region") && p.sql("SELECT * FROM t_region").count() == 5)
+    val dc = p.run("BEGIN; DROP TABLE t_nation; " +
+      "INSERT INTO t_nation VALUES (99, 'X', 0); COMMIT")
+    assert(dc(1).status != p.Ok, "DROP TABLE inside BEGIN must be refused")
+    assert(dc(3).status == p.Ok, s"the staged insert commits: ${dc(3).status}")
+    assert(p.catalog.table("t_nation").count() == 26)
   }
 
   test("EXPLAIN returns the formatted physical plan, one row per line") {

@@ -11,6 +11,19 @@ class ConstraintSpec extends AnyFunSuite {
 
   private def freshPipe(): Pipeline = new Pipeline(new Catalog(spark))
 
+  /** Rows of `sql` as the constraint rules rewrite it equal its rows with the
+    * declarations of `tables` taken out of [[ConstraintRegistry]] (so no rule
+    * can fire); the declarations are restored afterwards. Both runs go
+    * through `spark.sql`, never the pipeline's plan memo. */
+  private def sameRowsWithoutConstraints(sql: String, tables: String*): Unit = {
+    def rows(): Seq[String] = spark.sql(sql).collect().map(_.toString).toSeq.sorted
+    val rewritten = rows()
+    val saved = tables.map(t => t -> ConstraintRegistry.of(t))
+    saved.foreach { case (t, _) => ConstraintRegistry.drop(t) }
+    try assert(rows() === rewritten, s"rows changed by a constraint rewrite: $sql")
+    finally saved.foreach { case (t, cs) => ConstraintRegistry.put(t, cs) }
+  }
+
   test("CREATE TABLE with PK/UNIQUE/FK round-trips into meta_constraints") {
     val p = freshPipe()
     p.run(
@@ -46,7 +59,23 @@ class ConstraintSpec extends AnyFunSuite {
       "distinct NOT covering the key must remain")
     // results are unchanged by the rewrite
     assert(p.sql("SELECT DISTINCT k, v FROM keyed").count() == 2)
-    p.run("DROP TABLE keyed")
+    sameRowsWithoutConstraints("SELECT DISTINCT k, v FROM keyed", "keyed")
+    // subset semantics: k passes through the projection, so the key still
+    // covers the output and the aggregate goes
+    assert(!hasDistinctAgg("SELECT DISTINCT k, v + 1 AS w FROM keyed"))
+    sameRowsWithoutConstraints("SELECT DISTINCT k, v + 1 AS w FROM keyed", "keyed")
+    // blocked: an alias that only shadows the constrained name; dup holds
+    // (1, 10) twice, so the DISTINCT must stay and return one row
+    p.run("CREATE TABLE dup (k INT, v INT); " +
+      "INSERT INTO dup VALUES (1, 10); INSERT INTO dup VALUES (1, 10)")
+    // (the analyzed plan: over two literal rows the optimizer folds the kept
+    // aggregate into a LocalRelation)
+    val kept = p.sql("SELECT DISTINCT k, v FROM dup AS keyed").queryExecution.analyzed
+      .collect { case d: org.apache.spark.sql.catalyst.plans.logical.Distinct => d }
+    assert(kept.nonEmpty, "alias shadowing a constrained name must keep the DISTINCT")
+    assert(p.sql("SELECT DISTINCT k, v FROM dup AS keyed").count() == 1)
+    sameRowsWithoutConstraints("SELECT DISTINCT k, v FROM dup AS keyed", "keyed")
+    p.run("DROP TABLE keyed; DROP TABLE dup")
   }
 
   test("rewrite survives projection and filter, is blocked by renames") {
@@ -58,6 +87,7 @@ class ConstraintSpec extends AnyFunSuite {
         .collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }.size
     assert(aggs("SELECT DISTINCT k, v FROM keyed2 WHERE w > 0") == 0,
       "filter preserves uniqueness")
+    sameRowsWithoutConstraints("SELECT DISTINCT k, v FROM keyed2 WHERE w > 0", "keyed2")
     assert(aggs("SELECT DISTINCT k AS renamed, v FROM keyed2") == 1,
       "a renamed key column conservatively blocks the rewrite")
     p.run("DROP TABLE keyed2")
@@ -86,6 +116,7 @@ class ConstraintSpec extends AnyFunSuite {
     assert(p.sql(q).columns.toSeq == Seq("k", "name", "s"), "output schema unchanged")
     assert(p.sql(q).orderBy("k").collect().map(_.toSeq).toSeq ==
       Seq(Seq(1, "a", 10L), Seq(2, "b", 20L), Seq(3, "a", 30L)))
+    sameRowsWithoutConstraints(q, "dgb")
     // blocked: no constraint on the grouping columns
     p.run("CREATE TABLE dgb_nopk (k INT, name VARCHAR(10), v INT); " +
       "INSERT INTO dgb_nopk VALUES (1, 'a', 10)")
@@ -111,6 +142,7 @@ class ConstraintSpec extends AnyFunSuite {
     // still fires: the constrained table referenced UNDER a different alias
     assert(groupingSizes("SELECT k, name, SUM(v) AS s FROM dgb AS z GROUP BY k, name")
       == Seq(1), "renamed alias over the genuine view still attributes the PK")
+    sameRowsWithoutConstraints("SELECT k, name, SUM(v) AS s FROM dgb AS z GROUP BY k, name", "dgb")
     // join shape: PK side shrinks, other side's column stays a grouping key
     p.run("CREATE TABLE dgb_f (fk INT, amt INT); " +
       "INSERT INTO dgb_f VALUES (1, 5); INSERT INTO dgb_f VALUES (1, 6); " +
@@ -119,6 +151,7 @@ class ConstraintSpec extends AnyFunSuite {
     assert(groupingSizes(jq) == Seq(1))
     assert(p.sql(jq).orderBy("k").collect().map(_.toSeq).toSeq ==
       Seq(Seq(1, "a", 11L), Seq(2, "b", 7L)))
+    sameRowsWithoutConstraints(jq, "dgb")
     p.run("DROP TABLE dgb; DROP TABLE dgb_nopk; DROP TABLE dgb_u; DROP TABLE dgb_f")
   }
 
@@ -140,6 +173,7 @@ class ConstraintSpec extends AnyFunSuite {
       s"existence probe must plan as a semi join, got $probe")
     // answers unchanged: two matching fact rows survive, each once
     assert(p.sql("SELECT payload FROM fact_u JOIN dim_u ON fk = dk").count() == 2)
+    sameRowsWithoutConstraints("SELECT payload FROM fact_u JOIN dim_u ON fk = dk", "dim_u")
     // a dim column referenced above blocks the rewrite
     assert(joinTypes("SELECT payload, attr FROM fact_u JOIN dim_u ON fk = dk")
       .forall(_ == "Inner"))
@@ -150,7 +184,17 @@ class ConstraintSpec extends AnyFunSuite {
     val mirrored = joinTypes("SELECT payload FROM dim_u JOIN fact_u ON dk = fk")
     assert(mirrored.nonEmpty && mirrored.forall(_ == "LeftSemi"),
       s"mirrored existence probe must also plan as a semi join, got $mirrored")
-    p.run("DROP TABLE dim_u; DROP TABLE fact_u")
+    sameRowsWithoutConstraints("SELECT payload FROM dim_u JOIN fact_u ON dk = fk", "dim_u")
+    // blocked: an alias that only shadows the constrained name; dimdup holds
+    // dk = 1 twice, so each of the two fk = 1 fact rows joins twice
+    p.run("CREATE TABLE dimdup (dk INT, attr VARCHAR(10)); " +
+      "INSERT INTO dimdup VALUES (1, 'x'); INSERT INTO dimdup VALUES (1, 'x')")
+    val shadow = "SELECT payload FROM fact_u JOIN dimdup AS dim_u ON fk = dk"
+    assert(joinTypes(shadow).nonEmpty && joinTypes(shadow).forall(_ == "Inner"),
+      s"alias shadowing a constrained name must stay an inner join, got ${joinTypes(shadow)}")
+    assert(p.sql(shadow).count() == 4)
+    sameRowsWithoutConstraints(shadow, "dim_u")
+    p.run("DROP TABLE dim_u; DROP TABLE fact_u; DROP TABLE dimdup")
   }
 
   test("join-to-predicate: singleton-guaranteed probe side becomes a scalar-subquery filter") {
@@ -170,10 +214,13 @@ class ConstraintSpec extends AnyFunSuite {
     assert(joins(q) == 0, "join must be replaced by a scalar-subquery predicate")
     assert(p.sql(q).orderBy("val").collect().map(_.toSeq).toSeq ==
       Seq(Seq(1, 10), Seq(1, 11)))
+    sameRowsWithoutConstraints(q, "j2p_dim")
     // a fact row may match several dim rows ONLY via the join key; with the
     // unique filter the keep-set is exact. Empty probe side -> zero rows.
     assert(p.sql("SELECT fk, val FROM j2p_fact JOIN j2p_dim ON fk = k WHERE code = 'XX'")
       .collect().isEmpty, "empty probe side keeps nothing (col = NULL subquery)")
+    sameRowsWithoutConstraints(
+      "SELECT fk, val FROM j2p_fact JOIN j2p_dim ON fk = k WHERE code = 'XX'", "j2p_dim")
     // blocked: filter column is not unique (several rows could survive)
     assert(joins("SELECT fk, val FROM j2p_fact JOIN j2p_dim ON fk = k WHERE pad = 0") == 1)
     // blocked: the projection reads a probe-side column
@@ -193,6 +240,8 @@ class ConstraintSpec extends AnyFunSuite {
     assert(joins("SELECT fk, val FROM j2p_fact WHERE fk IN (SELECT k FROM j2p_dim WHERE code = 'DE')") == 0 ||
       p.sql("SELECT fk, val FROM j2p_fact WHERE fk IN (SELECT k FROM j2p_dim WHERE code = 'DE')")
         .orderBy("val").collect().map(_.toSeq).toSeq == Seq(Seq(1, 10), Seq(1, 11)))
+    sameRowsWithoutConstraints(
+      "SELECT fk, val FROM j2p_fact WHERE fk IN (SELECT k FROM j2p_dim WHERE code = 'DE')", "j2p_dim")
     p.run("DROP TABLE j2p_dim; DROP TABLE j2p_fact; DROP TABLE j2p_other")
   }
 }
