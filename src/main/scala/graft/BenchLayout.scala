@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** Materialize a fixture scale-factor directory as the PRODUCTION layout the
   * engine is designed around, so Bench can run against real multi-file scans
   * instead of the driver's single-row-group files:
@@ -17,6 +19,19 @@ package graft
   * of the driver contract (the driver always benches its own fixture dir).
   */
 object BenchLayout {
+
+  /** Persist `df` directory-partitioned by `partCol` — the storage layout
+    * that turns partition-key predicates into FILE PRUNING: a filter on the
+    * partition column never opens non-matching files (static pruning), and a
+    * join against a filtered dimension on the partition key prunes at RUNTIME
+    * via dynamic partition pruning. At 100 TB, date-partitioning the facts is
+    * the difference between scanning a day and scanning the lake; the
+    * reference's counterpart is chunk exclusion via pruning lists
+    * (reference: src/lib/storage/chunk.hpp pruning statistics +
+    * get_table.hpp excluded-chunk lists). */
+  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
+    df.write.mode("overwrite").partitionBy(partCol).parquet(path)
+
   def main(args: Array[String]): Unit = {
     val (src, dst) = (args(0), args(1))
     // optional 3rd arg (r16): files per unpartitioned table — the core-
@@ -35,7 +50,7 @@ object BenchLayout {
         // round-robin spread BEFORE the hive write: each of the N tasks
         // emits one file per partition value, so the fact lands as
         // N × |values| splittable files instead of one per value
-        case Some(c) => Layout.writePartitioned(
+        case Some(c) => writePartitioned(
           df.repartition(math.max(1, files / 2)), out, c)
         case None if singleFile(t) =>
           df.coalesce(1).write.mode("overwrite").parquet(out)

@@ -151,86 +151,6 @@ final class Catalog(val spark: SparkSession) {
 
   def parquetTables: Seq[(String, String)] = parquetPaths.toSeq.sortBy(_._1)
 
-  /** Persist the whole catalog under `dir`: every table as parquet, view
-    * definitions and declared key constraints as JSON manifests — the
-    * engine-restart story (the reference persists its storage manager via
-    * binary export/import, reference: src/lib/import_export/binary/
-    * binary_writer.hpp; here parquet IS the durable format, so a reload
-    * re-opens footer-backed bindings and the meta tables keep working). */
-  def saveTo(dir: String): Unit = {
-    import spark.implicits._
-    tables.keys.toSeq.sorted.foreach { n =>
-      table(n).write.mode("overwrite").parquet(s"$dir/tables/$n.parquet")
-    }
-    views.toSeq.sortBy(_._1).toDF("name", "sql")
-      .coalesce(1).write.mode("overwrite").json(s"$dir/views")
-    graft.plans.ConstraintRegistry.all
-      .filter(c => tables.contains(c.table))
-      .map(c => (c.table, c.kind, c.cols.mkString(","),
-        c.refTable.getOrElse(""), c.refCols.mkString(",")))
-      .toDF("tbl", "kind", "cols", "ref_table", "ref_cols")
-      .coalesce(1).write.mode("overwrite").json(s"$dir/constraints")
-    if (matViewDefs.nonEmpty)
-      matViewDefs.values.toSeq.sortBy(_.name).map(d => (d.name, d.sqlText))
-        .toDF("name", "sql")
-        .coalesce(1).write.mode("overwrite").json(s"$dir/matviews")
-    logEvent("INFO", s"catalog saved to $dir")
-  }
-
-  /** Re-open a catalog persisted by [[saveTo]]: tables come back as
-    * parquet-backed bindings (footer-driven meta tables included), views and
-    * constraints from the manifests. Load order: tables, then views (their
-    * SQL may reference the tables). */
-  def loadFrom(dir: String): Unit = {
-    val tdir = new java.io.File(s"$dir/tables")
-    Option(tdir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.endsWith(".parquet"))
-      .map(_.getName.stripSuffix(".parquet")).sorted
-      .foreach(n => registerParquet(n, s"$dir/tables/$n.parquet"))
-    if (new java.io.File(s"$dir/views").exists) {
-      // Views may reference other views and createView eagerly executes the
-      // SQL, but the manifest carries no creation order — restore with a
-      // retry-until-fixpoint pass so dependent views resolve regardless of
-      // name order; only an error that persists once no progress is possible
-      // is real, and it surfaces on the final replay.
-      var pending = spark.read.schema("name STRING, sql STRING").json(s"$dir/views")
-        .collect().sortBy(_.getString(0))
-        .map(r => (r.getString(0), r.getString(1))).toSeq
-      var progress = true
-      while (pending.nonEmpty && progress) {
-        val failed = pending.filter { case (n, viewSql) =>
-          try { createView(n, viewSql); false }
-          catch { case scala.util.control.NonFatal(_) => true }
-        }
-        progress = failed.size < pending.size
-        pending = failed
-      }
-      pending.headOption.foreach { case (n, viewSql) => createView(n, viewSql) }
-    }
-    if (new java.io.File(s"$dir/constraints").exists)
-      spark.read
-        .schema("tbl STRING, kind STRING, cols STRING, ref_table STRING, ref_cols STRING")
-        .json(s"$dir/constraints")
-        .collect().groupBy(_.getString(0)).foreach { case (t, rows) =>
-          graft.plans.ConstraintRegistry.put(t, rows.toSeq.map { r =>
-            graft.plans.KeyConstraint(r.getString(0), r.getString(1),
-              r.getString(2).split(",").toSeq.filter(_.nonEmpty),
-              Option(r.getString(3)).filter(_.nonEmpty),
-              r.getString(4).split(",").toSeq.filter(_.nonEmpty))
-          })
-        }
-    if (new java.io.File(s"$dir/matviews").exists)
-      // the MV's last snapshot was dumped as a plain table; re-materialize it
-      // as a LIVE view over the restored base (state recomputed, maintenance
-      // hooks reattached) instead of leaving a frozen copy
-      spark.read.schema("name STRING, sql STRING").json(s"$dir/matviews")
-        .collect().sortBy(_.getString(0)).foreach { r =>
-          if (exists(r.getString(0))) dropTable(r.getString(0))
-          createMatView(r.getString(0), r.getString(1))
-        }
-    logEvent("INFO", s"catalog loaded from $dir")
-  }
-
   def table(name: String): DataFrame =
     tables.getOrElse(name, sys.error(s"no such table: $name"))
 
@@ -518,8 +438,6 @@ final class Catalog(val spark: SparkSession) {
     views.remove(name)
     spark.catalog.dropTempView(name)
   }
-
-  def viewNames: Seq[String] = views.keys.toSeq.sorted
 
   // --------------------------------------------------------- meta tables
 

@@ -7,9 +7,8 @@ import org.apache.spark.sql.SparkSession
   * `hyriseConsole` (reference: src/bin/console/console.cpp — a readline REPL
   * with dot-style meta commands for loading tables, inspecting the catalog,
   * timing, and plan visualization, all dispatching to SQLPipeline). Every
-  * statement goes through the SAME [[Pipeline]] as the pgwire server, the
-  * line server, and the Verify/Bench entry points — one lifecycle, four
-  * front ends.
+  * statement goes through the SAME [[Pipeline]] as the pgwire server and the
+  * bench entry points — one statement lifecycle for every front end.
   *
   * Meta commands (the reference's console surface, adapted):
   *   .help                 command list

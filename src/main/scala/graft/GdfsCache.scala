@@ -21,7 +21,7 @@ import scala.collection.mutable
   * linear min-scan on evict is cheaper than maintaining a heap, so this
   * implementation is a single synchronized map — same observable policy.
   */
-final class GdfsCache[K, V](@volatile private var capacity: Int) {
+final class GdfsCache[K, V](capacity: Int) {
 
   private final class Entry(var value: V, var frequency: Long, val size: Double) {
     var priority: Double = 0.0
@@ -64,12 +64,6 @@ final class GdfsCache[K, V](@volatile private var capacity: Int) {
   def contains(key: K): Boolean = synchronized(map.contains(key))
   def size: Int = synchronized(map.size)
   def clear(): Unit = synchronized { map.clear(); inflation = 0.0 }
-
-  /** Shrink-capable resize (reference: gdfs_cache.hpp:108). */
-  def resize(newCapacity: Int): Unit = synchronized {
-    while (map.size > newCapacity) evictOne()
-    capacity = newCapacity
-  }
 
   /** (key, frequency) view for observability — the reference's `snapshot()`
     * feeds its meta cache tables the same pair. */

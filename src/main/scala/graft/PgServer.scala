@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * src/lib/server/postgres_protocol_handler.hpp:28; message catalogue
   * postgres_message_type.hpp; row serialization result_serializer.cpp). One
   * session per connection, every statement dispatched through the SAME
-  * [[Pipeline]] as the programmatic and line-JSON entry points.
+  * [[Pipeline]] as the [[Console]].
   *
   * Implements protocol 3.0's SIMPLE and EXTENDED query flows — both flows the
   * reference's handler serves (postgres_protocol_handler.hpp:28,

@@ -47,9 +47,9 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
   // conflict) restores the committed bindings. Temp views are per-SparkSession,
   // so a *concurrent* pipeline on the same session reads staged state early —
   // conflict DETECTION is still correct (it runs against commit CIDs, not
-  // views); only read isolation is session-shared. DDL auto-commits; the
-  // verbs that replace or remove a binding (ALTER TABLE, COPY, DROP TABLE)
-  // are refused while a transaction is open.
+  // views); only read isolation is session-shared. DDL auto-commits, so
+  // every DDL statement (CREATE, DROP, ALTER, COPY, REFRESH) is refused
+  // while a transaction is open: a ROLLBACK could not undo it.
   private var activeTxn: Option[Transaction] = None
   def inTransaction: Boolean = activeTxn.exists(_.isActive)
 
@@ -159,6 +159,9 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
             invalidatePlanCache()
             StatementResult(s, Ok, None)
         }
+      } else if (inTransaction && Pipeline.DdlPrefixes.exists(upper.startsWith)) {
+        StatementResult(s, Failed(
+          s"${upper.takeWhile(!_.isWhitespace)} is auto-commit DDL; not allowed inside BEGIN"), None)
       } else if (upper.startsWith("ASOF ")) {
         // ASOF <cid> <select> — time-travel read: the query sees every
         // catalog table at commit <cid> (Catalog.tableAsOf; the commit clock
@@ -360,7 +363,6 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
         // operators/import.hpp / export.hpp; format chosen by extension like
         // its ImportType). .csv/.tbl/.bin use the fixture codecs; .parquet/
         // .orc/.json are the distributed Spark writers.
-        require(!inTransaction, "COPY is auto-commit; not allowed inside BEGIN")
         val m = "(?is)COPY\\s+(\\S+)\\s+(FROM|TO)\\s+'([^']+)'".r
           .findFirstMatchIn(s)
           .getOrElse(sys.error("COPY <table> FROM|TO '<file>'"))
@@ -398,7 +400,6 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
         // Schema evolution as pure binding rewrites (beyond the reference —
         // hyrise has no ALTER TABLE; on immutable DataFrames each form is a
         // one-projection rewrite, auto-commit like the other DDL verbs).
-        require(!inTransaction, "ALTER TABLE is auto-commit DDL; not allowed inside BEGIN")
         val rest = s.drop("ALTER TABLE ".length).trim
         val Array(name, action) = rest.split("\\s+", 2)
         val u = action.toUpperCase
@@ -425,7 +426,6 @@ final class Pipeline(val catalog: Catalog, planCacheSize: Int = 128) {
         invalidatePlanCache()
         StatementResult(s, Ok, None)
       } else if (upper.startsWith("DROP TABLE ")) {
-        require(!inTransaction, "DROP TABLE is auto-commit DDL; not allowed inside BEGIN")
         val rest = s.drop("DROP TABLE ".length).trim
         val (ifExists, name) =
           if (rest.toUpperCase.startsWith("IF EXISTS ")) (true, rest.drop("IF EXISTS ".length).trim)
@@ -642,6 +642,9 @@ object Pipeline {
   /** Session-wide analysis mutex: ASOF's temp-view swap and every statement
     * analysis share it, because temp views live on the (shared) SparkSession.
     * JVM-global is correct here — all Pipelines in-process share one session
-    * (PgServer/Server/Console all build on the same GraftSession). */
+    * (PgServer and Console both build on the same GraftSession). */
   private[graft] val analysisLock = new Object
+
+  /** Statement prefixes of the auto-commit DDL verbs refused inside BEGIN. */
+  private val DdlPrefixes = Seq("CREATE ", "DROP ", "ALTER ", "COPY ", "REFRESH ")
 }

@@ -146,7 +146,7 @@ object Tables {
   /** Rewrite `ts` to a nanosecond-epoch long whatever the file carried.
     * TIMESTAMP_NTZ wall-clock is interpreted in the session zone (pinned to
     * UTC in GraftSession), matching DuckDB's naive-timestamp epoch_us. */
-  def normalizeEventTs(df: DataFrame): DataFrame = {
+  private[graft] def normalizeEventTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampType}
     import org.apache.spark.sql.functions.{col, unix_micros}
     df.schema("ts").dataType match {

@@ -117,7 +117,7 @@ object AnnIndex {
     * pass hive-partitions the corpus by cell. Same [[SimilarityQueries
     * .kmeansAssign]]/[[SimilarityQueries.kmeansUpdate]] kernels as the gated
     * inline tier — only the seeding and nlist differ. */
-  def buildIvfScaled(s: SparkSession, sfDir: String, indexDir: String): Long = {
+  def buildIvfScaled(s: SparkSession, sfDir: String, indexDir: String): Unit = {
     val quant = quantized(s, sfDir)
     val n = quant.count()
     val nlist = scaledNlist(n)
@@ -137,7 +137,6 @@ object AnnIndex {
       .write.mode("overwrite").partitionBy("cent_id")
       .parquet(s"$indexDir/ivf_scaled_cells")
     writeScaledRadii(s, indexDir)
-    n
   }
 
   /** Per-cell max angular radius r_c = max over x∈c of angle(x, centroid_c)
@@ -273,105 +272,6 @@ object AnnIndex {
     (s.createDataFrame(out).toDF("q_id", "n_id", "sim", "rk"), cursor)
   }
 
-  // -------------------------------------------------------------- append
-
-  /** Assign-only ingest — FAISS's `add` vs `train` split. A production
-    * corpus grows daily; a full rebuild re-runs Lloyd + the full assignment
-    * pass (192.5 s at 2M, hours at 10⁹), while appending a delta only needs
-    * the delta ASSIGNED: with the centroids held fixed, per-row assignment
-    * is a deterministic pure function, so
-    * `assign(old ∪ delta) = assign(old) ∪ assign(delta)` — appending the
-    * delta's cells to the stored layout is EXACTLY the index a from-scratch
-    * assignment of the grown corpus at the same centroids would produce
-    * (spec-proven in AnnIndexSpec). Probes are unchanged: each vector still
-    * lives in exactly one cell.
-    *
-    * The manifest is re-pinned to the GROWN corpus fingerprint (so ensure()
-    * keeps trusting the index) and `append_state.json` accumulates the
-    * appended row count against the trained base.
-    *
-    * Drift policy (documented, FAISS-practice): fixed centroids stay valid
-    * while the data distribution holds, but nlist was sized √N at train
-    * time — growth erodes both the cell balance and the √N sizing. A full
-    * retrain is recommended once appended rows exceed
-    * [[RETRAIN_GROWTH_FRACTION]] of the trained base ([[retrainRecommended]];
-    * callers can also force one by deleting manifest.json). Returns the
-    * number of vectors appended. */
-  def appendIvfScaled(s: SparkSession, sfDir: String, indexDir: String,
-      delta: DataFrame): Long = {
-    val trained = s.read.parquet(s"$indexDir/ivf_scaled_centroids")
-    val dq = delta.select(col("vec_id"), quantize(col("embedding")).as("qe"))
-    // integrity guards (verdict-r13 advice): a delta whose ids overlap the
-    // stored cells would occupy two top-k slots per duplicate, and a delta
-    // not reflected in sfDir would leave ensure() blessing an index that
-    // disagrees with its pinned corpus. Ids are required monotone (the
-    // ingest contract); the stored high-water mark makes the check O(delta).
-    val (trainedRows, priorAppended) = appendState(indexDir)
-    val maxStored = storedMaxVecId(indexDir)
-    val stats = dq.agg(min(col("vec_id")), max(col("vec_id")), count(lit(1))).head
-    // empty delta: min/max above are NULL — return before reading them
-    // (a clean no-op, not an opaque NPE; r14 advice)
-    if (stats.getLong(2) == 0L) return 0L
-    val (dMin, dMax, appended) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    require(maxStored < 0 || dMin > maxStored,
-      s"append delta overlaps stored ids: min(delta.vec_id)=$dMin ≤ stored max $maxStored")
-    val corpusRows = quantized(s, sfDir).count()
-    require(corpusRows >= trainedRows + priorAppended + appended,
-      s"sfDir must already contain the delta: corpus has $corpusRows rows < " +
-        s"stored ${trainedRows + priorAppended} + delta $appended")
-    val assigned = kmeansAssign(dq, trained)
-    assigned
-      .repartition(col("cent_id"))
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$indexDir/ivf_scaled_cells")
-    // appended vectors can widen a cell's angular radius: refresh the
-    // adaptive-probe bound table (one cheap pass, ≤nlist output rows)
-    writeScaledRadii(s, indexDir)
-    writeAppendState(indexDir, trainedRows, priorAppended + appended,
-      math.max(maxStored, dMax))
-    // re-pin the grown corpus: ensure() must keep trusting this index, while
-    // any OTHER corpus change still mismatches and forces a rebuild
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$indexDir/manifest.json"),
-      manifestJson(sfDir).getBytes("UTF-8"))
-    appended
-  }
-
-  /** Retrain once the appended mass reaches 30 % of the trained base: past
-    * that, √N-sized nlist and the trained cell balance have both drifted. */
-  val RETRAIN_GROWTH_FRACTION = 0.3
-
-  def retrainRecommended(indexDir: String): Boolean = {
-    val (trained, appended) = appendState(indexDir)
-    trained > 0 && appended.toDouble / trained > RETRAIN_GROWTH_FRACTION
-  }
-
-  /** (trained_rows, appended_rows) from append_state.json (0, 0 if absent). */
-  def appendState(indexDir: String): (Long, Long) = {
-    (stateField(indexDir, "trained_rows", 0L), stateField(indexDir, "appended_rows", 0L))
-  }
-
-  /** High-water mark of stored vec_ids (the append-overlap guard); -1 when
-    * unknown (pre-guard index or fresh build without the field). */
-  def storedMaxVecId(indexDir: String): Long =
-    stateField(indexDir, "max_vec_id", -1L)
-
-  private def stateField(indexDir: String, name: String, dflt: Long): Long = {
-    val p = java.nio.file.Paths.get(s"$indexDir/append_state.json")
-    if (!java.nio.file.Files.exists(p)) dflt
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      s""""$name":(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(dflt)
-    }
-  }
-
-  private def writeAppendState(indexDir: String, trained: Long, appended: Long,
-      maxVecId: Long): Unit =
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$indexDir/append_state.json"),
-      s"""{"trained_rows":$trained,"appended_rows":$appended,"max_vec_id":$maxVecId}"""
-        .getBytes("UTF-8"))
-
   /** Probe-only scaled IVF top-k: rank cells by query-centroid cosine, read
     * ONLY the top-`nprobe` cells' files (static partition pruning — probe
     * I/O is nprobe/√N of the store), exact cosine inside. Each corpus vector
@@ -450,12 +350,9 @@ object AnnIndex {
     // a manifest that blesses a half-old half-new index
     val manifest = manifestJson(sfDir)
     buildIvf(s, sfDir, indexDir)
-    val trainedRows = buildIvfScaled(s, sfDir, indexDir)
+    buildIvfScaled(s, sfDir, indexDir)
     buildIvfPq(s, sfDir, indexDir)
     buildSq8(s, sfDir, indexDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
-    val maxId = quantized(s, sfDir).agg(max(col("vec_id"))).head.getLong(0)
-    writeAppendState(indexDir, trainedRows, 0L, maxId)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$indexDir/manifest.json"),
       manifest.getBytes("UTF-8"))

@@ -114,10 +114,8 @@ object CurationQueries {
   private val digitCeilPct = 20 // n_digit * 100 <= 20 * chars
   private val dup2CeilPct = 60 // dupchars * 100 <= 60 * chars
 
-  /** The per-document keep/drop decision as ONE stateless Column — usable
-    * identically in batch (cur_quality_filter) and at ingest time in a
-    * Structured Streaming stage (graft.streaming.DocStreams): per-row, no
-    * state, stays inside codegen. */
+  /** The per-document keep/drop decision as ONE stateless Column
+    * (cur_quality_filter): per-row, no state, stays inside codegen. */
   def keepReason(text: Column): Column = {
     val stops = langMarkers.flatMap(_._2)
     // bind the token array ONCE: grams2's per-element lambda reads a bound

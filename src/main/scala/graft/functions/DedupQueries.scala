@@ -26,7 +26,7 @@ object DedupQueries {
   private val K = 12            // minhash signature length
   private val BANDS = 4         // LSH bands (rows-per-band = K / BANDS = 3)
   private val ROWS = K / BANDS
-  private[graft] val NGRAM = 3 // shingle width (words); shared with CurationQueries.decontaminate + DocStreams
+  private[graft] val NGRAM = 3 // shingle width (words); shared with CurationQueries.decontaminate
   private val JACCARD_MIN = 0.2 // near-dup threshold (calibrated: 25 planted pairs)
   private val SIMHASH_BITS = 32
 
@@ -212,10 +212,7 @@ object DedupQueries {
   }
 
   /** (doc_id, band_idx, band_key) for any (doc_id, text) frame — the LSH
-    * inverted-index layout. Shared by the batch pair join below and the
-    * ingest-time stream-static near-dup screen (graft.streaming.DocStreams):
-    * the expressions are stateless, so the SAME index definition serves both
-    * the stored corpus side and the arriving stream side. */
+    * inverted-index layout the pair join below reads. */
   def bandKeysOf(in: DataFrame): DataFrame = {
     val withSig = hsgOf(in) // one md5 per token, integer shingle keys
       .select(col("doc_id") +: minhashSig(col("hsg"), K): _*)

@@ -5,8 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch analytics over the `events` stream-shaped table. The reference has no
-  * streaming/time-series module (SURVEY §2.11) — these are beyond-parity, and the
-  * same plans re-run under Structured Streaming in graft.streaming.
+  * streaming/time-series module (SURVEY §2.11) — these are beyond-parity.
   *
   * Timestamp convention: Tables.df normalizes events.ts to a nanosecond-epoch
   * long whatever the file carried (TIMESTAMP(NANOS) or TIMESTAMP(MICROS));
@@ -110,9 +109,8 @@ object EventsQueries {
       .orderBy("click_id")
   }
 
-  /** Gap-based sessionization, batch form: a >30-minute silence starts a new
-    * session (the batch twin of the streaming flatMapGroupsWithState session
-    * in graft.streaming.EventStreams). Pure integer window arithmetic — a
+  /** Gap-based sessionization: a >30-minute silence starts a new
+    * session. Pure integer window arithmetic — a
     * session boundary flag summed cumulatively IS the session index — so both
     * engines agree exactly; one shuffle on user_id, then a keyed agg. */
   val eventsSessionize: Q = Q(

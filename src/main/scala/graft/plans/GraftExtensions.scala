@@ -32,7 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPostHocResolutionRule(session => new RollupFromBase(session))
     // last: turns >=1024-element literal IN lists into broadcast semi joins;
     // running after the others keeps their Filter pattern-matches intact
-    ext.injectPostHocResolutionRule(session => new InListToJoin(session))
+    ext.injectPostHocResolutionRule(_ => InListToJoin)
     // optimizer, not post-hoc: analysis and the rules above keep seeing the
     // plain Cast, only execution gets the exact fast kernel
     ext.injectOptimizerRule(_ => new ExactDoubleToDecimalRule)

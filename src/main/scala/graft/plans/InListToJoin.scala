@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
@@ -28,8 +27,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * Guard: an IN over a PARTITION column is left alone — the scan prunes it
   * at the file listing, which the semi join would forfeit. */
-class InListToJoin(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
-  import InListToJoin.Threshold
+object InListToJoin extends Rule[LogicalPlan] with PredicateHelper {
+  /** Below this, InSet + parquet range pushdown wins (Spark inlines sets
+    * into codegen up to `spark.sql.codegen.inSetSwitchThreshold` = 400 and
+    * a set probe is O(1) anyway); above it, plan-size and per-task
+    * serialization grow with the list while the broadcast ships once. */
+  val Threshold = 1024
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, child) if f.resolved =>
@@ -75,12 +78,4 @@ class InListToJoin(spark: SparkSession) extends Rule[LogicalPlan] with Predicate
     }.flatten.map(_.toLowerCase).toSet
     value.references.exists(a => partCols.contains(a.name.toLowerCase))
   }
-}
-
-object InListToJoin {
-  /** Below this, InSet + parquet range pushdown wins (Spark inlines sets
-    * into codegen up to `spark.sql.codegen.inSetSwitchThreshold` = 400 and
-    * a set probe is O(1) anyway); above it, plan-size and per-task
-    * serialization grow with the list while the broadcast ships once. */
-  val Threshold = 1024
 }

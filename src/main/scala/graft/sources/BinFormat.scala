@@ -64,7 +64,7 @@ object BinFormat {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Pure single-file decode — callable on executors (readDistributed). */
+  /** Single-file decode. */
   private[sources] def parse(bytes: Array[Byte]): (StructType, Array[Row]) = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     def u8(): Int = buf.get() & 0xff
@@ -240,42 +240,7 @@ object BinFormat {
   def write(df: DataFrame, path: String): Unit =
     Files.write(Paths.get(path), serialize(df.schema, df.collect()))
 
-  /** Distributed export as a directory of part files, each a SELF-CONTAINED
-    * single-chunk `.bin` (header + one Unencoded chunk — the format's own
-    * chunked layout, split at file granularity so executors serialize their
-    * partitions in parallel with zero driver materialization). Parts target a
-    * shared filesystem, like every file sink. [[readDistributed]] restores the
-    * table with per-part parallelism. Parquet remains the at-scale storage
-    * format; this is interchange parity at real-data size. */
-  def writeDistributed(df: DataFrame, dirPath: String): Unit = {
-    val schema = df.schema
-    val dir = new java.io.File(dirPath)
-    if (dir.exists()) { dir.listFiles().foreach(_.delete()) } else dir.mkdirs()
-    val written = df.rdd.mapPartitionsWithIndex { case (i, it) =>
-      val rows = it.toArray
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.bin"
-        Files.write(Paths.get(s"$dirPath/$name"), serialize(schema, rows))
-        Iterator.single(name)
-      }
-    }.collect() // collects part NAMES only (one tiny string per partition)
-    // empty input still needs a schema-bearing part for readDistributed
-    if (written.isEmpty)
-      Files.write(Paths.get(s"$dirPath/part-00000.bin"), serialize(schema, Array.empty[Row]))
-  }
-
-  def readDistributed(spark: SparkSession, dirPath: String): DataFrame = {
-    val files = new java.io.File(dirPath).listFiles()
-      .filter(_.getName.endsWith(".bin")).map(_.getAbsolutePath).sorted
-    require(files.nonEmpty, s"no .bin part files under $dirPath")
-    val schema = parse(Files.readAllBytes(Paths.get(files.head)))._1
-    val rdd = spark.sparkContext.parallelize(files.toIndexedSeq, files.length)
-      .flatMap(f => parse(Files.readAllBytes(Paths.get(f)))._2)
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Pure single-chunk encode — callable on executors (writeDistributed). */
+  /** Single-chunk encode. */
   private[sources] def serialize(schema: StructType, rows: Array[Row]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     val b8 = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)

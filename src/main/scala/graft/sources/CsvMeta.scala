@@ -62,27 +62,4 @@ object CsvMeta {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$csvPath.json"),
       s"""{"columns": $colsJson}""")
   }
-
-  /** Distributed export: executors write the CSV part files in parallel (the
-    * real-data Export path — `write` above is the byte-exact single-file
-    * fixture writer and collects on the driver; it must never see real data).
-    * The JSON side-car meta goes next to the output directory so
-    * [[readDistributed]] can restore the exact schema. */
-  def writeDistributed(df: DataFrame, dirPath: String): Unit = {
-    df.write.mode("overwrite")
-      .option("sep", ",").option("nullValue", "").option("emptyValue", "")
-      .csv(dirPath)
-    val colsJson = df.schema.fields.map(f =>
-      s"""{"name": "${f.name}", "type": "${toMetaType(f.dataType)}", "nullable": ${f.nullable}}""")
-      .mkString("[", ", ", "]")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dirPath.json"),
-      s"""{"columns": $colsJson}""")
-  }
-
-  def readDistributed(spark: SparkSession, dirPath: String): DataFrame =
-    spark.read
-      .option("sep", ",")
-      .option("nullValue", "")
-      .schema(schemaOf(spark, dirPath))
-      .csv(dirPath)
 }

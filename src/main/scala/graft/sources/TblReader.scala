@@ -27,18 +27,15 @@ object TblReader {
     (dt, nullable)
   }
 
-  private def schemaFromHeader(names: String, types: String): StructType =
-    StructType(names.split('|').zip(types.split('|')).map { case (n, t) =>
-      val (dt, nullable) = parseType(t.trim)
-      StructField(n.trim, dt, nullable)
-    })
-
   def schemaOf(path: String): StructType = {
     val src = scala.io.Source.fromFile(path)
     val Seq(names, types) =
       try src.getLines().take(2).toSeq
       finally src.close()
-    schemaFromHeader(names, types)
+    StructType(names.split('|').zip(types.split('|')).map { case (n, t) =>
+      val (dt, nullable) = parseType(t.trim)
+      StructField(n.trim, dt, nullable)
+    })
   }
 
   private def parseLine(schema: StructType)(line: String): Row = {
@@ -75,7 +72,7 @@ object TblReader {
   }
 
   /** Byte-exact single-file fixture writer (collects driver-side — KB-scale
-    * golden files ONLY; real data goes through [[writeDistributed]]). */
+    * golden files ONLY). */
   def write(df: DataFrame, path: String): Unit = {
     val fields = df.schema.fields
     val header = fields.map(_.name).mkString("|")
@@ -86,28 +83,5 @@ object TblReader {
     }.mkString("|"))
     val out = (Seq(header, types) ++ rows).mkString("", "\n", "\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), out)
-  }
-
-  /** Distributed export: executors format and write the pipe-separated body as
-    * part files in parallel (one codegen'd concat_ws projection + a text sink
-    * — nothing materializes on the driver); the two-line name/type header goes
-    * in a `<dir>.header` side-car, mirroring [[CsvMeta.writeDistributed]]'s
-    * side-car pattern. */
-  def writeDistributed(df: DataFrame, dirPath: String): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit}
-    val fields = df.schema.fields
-    val cols = fields.map(f => coalesce(col(s"`${f.name}`").cast(StringType), lit("null")))
-    df.select(concat_ws("|", cols.toIndexedSeq: _*).as("value"))
-      .write.mode("overwrite").text(dirPath)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dirPath.header"),
-      fields.map(_.name).mkString("|") + "\n" + fields.map(typeToken).mkString("|") + "\n")
-  }
-
-  def readDistributed(spark: SparkSession, dirPath: String): DataFrame = {
-    val Array(names, types) = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(s"$dirPath.header")).split('\n').take(2)
-    val schema = schemaFromHeader(names, types)
-    val body = spark.read.textFile(dirPath)
-    spark.createDataFrame(body.rdd.map(parseLine(schema)), schema)
   }
 }

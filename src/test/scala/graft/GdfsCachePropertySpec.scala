@@ -78,16 +78,15 @@ object GdfsCachePropertySpec extends Properties("GdfsCache") {
       }
     }
 
-  property("size never exceeds capacity, even across resizes") =
-    Prop.forAll(Gen.choose(0, 5), Gen.listOfN(60, genOp), Gen.choose(0, 3)) {
-      (cap, ops, newCap) =>
-        val cache = new GdfsCache[Int, Int](cap)
-        ops.foreach {
+  property("size never exceeds capacity") =
+    Prop.forAll(Gen.choose(0, 5), Gen.listOfN(60, genOp)) { (cap, ops) =>
+      val cache = new GdfsCache[Int, Int](cap)
+      ops.forall { op =>
+        op match {
           case Put(k, v, s) => cache.put(k, v, s)
           case GetOp(k) => cache.get(k)
         }
-        val okBefore = cache.size <= cap
-        cache.resize(newCap)
-        okBefore && cache.size <= newCap
+        cache.size <= cap
+      }
     }
 }

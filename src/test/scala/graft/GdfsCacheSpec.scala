@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * src/lib/cache/gdfs_cache.hpp, behaviors mirrored from
   * src/test/lib/sql/sql_plan_cache_test.cpp / cache policy tests):
   * frequency beats recency, inflation ages out cold residents, size scales
-  * priority, resize evicts to fit. */
+  * priority, a full cache evicts the lowest priority. */
 class GdfsCacheSpec extends AnyFunSuite {
 
   test("frequency beats recency: hot entry survives a burst of one-offs") {
@@ -51,13 +51,14 @@ class GdfsCacheSpec extends AnyFunSuite {
     assert(c.contains("k") && !c.contains("other"))
   }
 
-  test("resize evicts lowest priority first; clear resets inflation") {
-    val c = new GdfsCache[String, Int](4)
+  test("a full cache evicts the lowest priority first; clear empties it") {
+    val c = new GdfsCache[String, Int](3)
     c.put("a", 1); c.get("a"); c.get("a") // freq 3
     c.put("b", 2); c.get("b")             // freq 2
     c.put("c", 3)                          // freq 1
-    c.resize(1)
-    assert(c.size === 1 && c.contains("a"), "resize keeps the highest-priority entry")
+    c.put("d", 4)                          // full: evicts "c"
+    assert(c.size === 3 && c.contains("a") && c.contains("b") && !c.contains("c"),
+      "eviction keeps the higher-priority entries")
     c.clear()
     assert(c.size === 0)
     c.put("fresh", 7)

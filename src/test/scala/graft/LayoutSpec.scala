@@ -3,53 +3,19 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Physical-layout scale patterns: bucketed tables must join with no shuffle
-  * exchange; salted joins must be answer-identical to plain joins while
-  * spreading a hot key across salt partitions. */
+/** Partition pruning on the layout [[BenchLayout]] writes: a filter on the
+  * partition column prunes files statically, and a join against a filtered
+  * dimension on that column prunes them at run time. The zero-shuffle
+  * bucketed join is checked on the real path by [[BucketedLayoutSpec]]. */
 class LayoutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = SparkTestBase.sf
-
-  test("same-bucket tables join with zero shuffle on either side") {
-    val l = Tables.df(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
-    val o = Tables.df(spark, sf, "orders").select("o_orderkey", "o_totalprice")
-    Layout.writeBucketed(l, "b_lineitem", 8, "l_orderkey")
-    Layout.writeBucketed(o, "b_orders", 8, "o_orderkey")
-    try {
-      // bucketed joins need the SMJ path: disable broadcast for this probe
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("b_lineitem")
-        .join(spark.table("b_orders"), col("l_orderkey") === col("o_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucket co-location must eliminate both shuffles:\n$plan")
-      assert(joined.count() === l.count(), "inner join on FK: every line matches its order")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-    }
-  }
-
-  test("salted join equals the plain join and spreads the hot key") {
-    val l = Tables.df(spark, sf, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    val o = Tables.df(spark, sf, "orders").select("o_orderkey", "o_totalprice")
-    val plain = l.join(o, col("l_orderkey") === col("o_orderkey"))
-    val salted = Layout.saltedEquiJoin(l, o, "l_orderkey", "o_orderkey", factor = 4)
-    assert(salted.count() === plain.count())
-    assert(salted.join(plain, plain.columns.toSeq, "left_anti").count() === 0)
-    // the salt actually spreads rows of one key across partitions-by-salt
-    val spread = l.withColumn("__salt",
-      pmod(xxhash64(struct(l.columns.map(col).toIndexedSeq: _*)), lit(4)))
-      .groupBy("__salt").count().count()
-    assert(spread === 4, "deterministic salt must populate every bucket")
-  }
 
   test("partition-key filter prunes files statically (PartitionFilters, not data filters)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
     val li = Tables.df(spark, sf, "lineitem")
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
-    Layout.writePartitioned(li, dir, "ship_month")
+    BenchLayout.writePartitioned(li, dir, "ship_month")
     val months = spark.read.parquet(dir).select("ship_month").distinct().count()
     val one = spark.read.parquet(dir).filter(col("ship_month") === "1997-06")
     val f = one.queryExecution.explainString(
@@ -66,7 +32,7 @@ class LayoutSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
     val li = Tables.df(spark, sf, "lineitem")
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
-    Layout.writePartitioned(li, dir, "ship_month")
+    BenchLayout.writePartitioned(li, dir, "ship_month")
     val fact = spark.read.parquet(dir)
     // a dim keyed by the partition column, filtered on a non-key attribute —
     // the pruning value is only known at runtime, so static pruning can't act
@@ -77,99 +43,5 @@ class LayoutSpec extends AnyFunSuite {
     val optimized = q.queryExecution.optimizedPlan.toString
     assert(optimized.contains("dynamicpruning"),
       s"expected a dynamic partition pruning subquery in:\n$optimized")
-  }
-
-  /** Per-file normalized width of `c`'s [min,max] envelope, averaged over the
-    * part files of `dir` — the file-skipping proxy: a selective predicate on
-    * `c` can skip a file iff its envelope misses the value, so narrower
-    * envelopes = more skipping. */
-  private def avgEnvelope(dir: String, c: String): Double = {
-    val files = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).map(_.getPath)
-    assert(files.length > 1, s"need multiple part files in $dir")
-    val widths = files.map { f =>
-      val r = spark.read.parquet(f)
-        .agg(min(col(c)).cast("double"), max(col(c)).cast("double")).head()
-      r.getDouble(1) - r.getDouble(0)
-    }
-    val g = spark.read.parquet(dir)
-      .agg(min(col(c)).cast("double"), max(col(c)).cast("double")).head()
-    widths.sum / widths.length / math.max(1.0, g.getDouble(1) - g.getDouble(0))
-  }
-
-  test("z-order layout: every file covers a small rectangle of BOTH dimensions") {
-    val li = Tables.df(spark, sf, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
-    val single = java.nio.file.Files.createTempDirectory("graft_zsingle").toString
-    val zdir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    // baseline: the best SINGLE-column layout (sorted by l_partkey)
-    li.repartitionByRange(4, col("l_partkey")).sortWithinPartitions("l_partkey")
-      .write.mode("overwrite").parquet(single)
-    Layout.writeZOrdered(li, zdir, "l_partkey", "l_suppkey", files = 4)
-    // single-col sort: near-perfect on partkey, but every file spans the FULL
-    // suppkey range (~1.0); z-order: both dims get a fractional envelope, so
-    // the WORST dimension — what a mixed workload feels — improves a lot
-    val worstSingle = math.max(avgEnvelope(single, "l_partkey"), avgEnvelope(single, "l_suppkey"))
-    val worstZ = math.max(avgEnvelope(zdir, "l_partkey"), avgEnvelope(zdir, "l_suppkey"))
-    assert(worstZ < 0.75 * worstSingle,
-      s"z-order worst-dim envelope $worstZ must beat single-sort $worstSingle")
-    // and it is a layout, not a transformation: same rows
-    assert(spark.read.parquet(zdir).count() === li.count())
-  }
-
-  test("z-order degrades gracefully on empty input and clusters NULL keys") {
-    import spark.implicits._
-    // empty input: no range to interleave — must write a valid (empty)
-    // parquet dataset instead of NPEing on the null min/max aggregate
-    val empty = java.nio.file.Files.createTempDirectory("graft_zempty").toString
-    Layout.writeZOrdered(
-      Seq.empty[(Long, Long)].toDF("a", "b"), empty, "a", "b", files = 2)
-    assert(spark.read.parquet(empty).count() === 0)
-    // NULL keys: coalesced to the column min, so all rows land and the NULL
-    // rows cluster deterministically rather than scattering
-    val withNulls = Seq[(java.lang.Long, java.lang.Long)](
-      (1L, 10L), (2L, null), (null, 30L), (4L, 40L)).toDF("a", "b")
-    val zdir = java.nio.file.Files.createTempDirectory("graft_znull").toString
-    Layout.writeZOrdered(withNulls, zdir, "a", "b", files = 2)
-    assert(spark.read.parquet(zdir).count() === 4)
-  }
-
-  test("token shards: directories balanced to budget, rows conserved, deterministic") {
-    val docs = Tables.df(spark, sf, "documents")
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/docs"
-    Layout.writeTokenShards(docs, out, "doc_id", "n_chars", budget = 4000L)
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count(), "every doc in exactly one shard")
-    val masses = back.groupBy("shard").agg(sum("n_chars").as("m"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    assert(masses.map(_._1).toSeq == (0 until masses.length), "shard ids contiguous")
-    val maxDoc = docs.agg(max("n_chars")).collect().head.getLong(0)
-    masses.init.foreach { case (id, m) =>
-      assert(m >= 4000 - 2 * maxDoc && m <= 4000 + 2 * maxDoc,
-        s"shard $id mass $m vs budget 4000 (maxDoc=$maxDoc)")
-    }
-    // deterministic: a second write lands identical shard contents
-    val out2 = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/docs"
-    Layout.writeTokenShards(docs, out2, "doc_id", "n_chars", budget = 4000L)
-    val a = back.select("shard", "doc_id").collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    val b = spark.read.parquet(out2).select("shard", "doc_id")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sorted
-    assert(a.toSeq == b.toSeq)
-  }
-
-  test("compaction merges small files without a shuffle and preserves data") {
-    val li = Tables.df(spark, sf, "lineitem")
-    val frag = java.nio.file.Files.createTempDirectory("graft_frag").toString
-    val tidy = java.nio.file.Files.createTempDirectory("graft_tidy").toString
-    li.repartition(20).write.mode("overwrite").parquet(frag)
-    def nFiles(d: String) = new java.io.File(d).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(nFiles(frag) === 20)
-    Layout.compact(spark, frag, tidy, targetFiles = 2)
-    assert(nFiles(tidy) === 2, "compaction must hit the target file count")
-    val a = spark.read.parquet(frag)
-    val b = spark.read.parquet(tidy)
-    assert(b.count() === a.count())
-    assert(a.join(b, a.columns.toSeq, "left_anti").count() === 0,
-      "compaction must preserve every row")
   }
 }

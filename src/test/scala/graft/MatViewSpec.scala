@@ -368,40 +368,6 @@ class MatViewSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming ingest maintains a materialized view across micro-batches") {
-    import graft.streaming.DocStreams
-    val cat = new Catalog(spark)
-    // pre-register an empty landing table so the MV can be declared BEFORE
-    // the stream starts — each micro-batch then flows through cat.insert,
-    // whose IVM hook maintains the view incrementally
-    val schema = DocStreams.curated(DocStreams.source(spark, sf)).schema
-    cat.register("landed_ivm",
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    val p = new Pipeline(cat)
-    val defining = "SELECT reason, COUNT(*) AS n FROM landed_ivm GROUP BY reason"
-    p.run(s"CREATE MATERIALIZED VIEW landed_by_reason AS $defining")
-    val q = DocStreams.landToCatalog(DocStreams.source(spark, sf), cat, "landed_ivm")
-    try q.processAllAvailable() finally q.stop()
-    assert(cat.table("landed_ivm").count() == Tables.df(spark, sf, "documents").count())
-    assertMatchesRecompute(cat, "landed_by_reason", defining)
-    assert(cat.table("landed_by_reason").agg(sum("n")).head.getLong(0) ==
-      cat.table("landed_ivm").count())
-  }
-
-  test("saveTo/loadFrom round-trips a LIVE materialized view, not a frozen copy") {
-    val (cat, p) = freshPipeline()
-    val defining = "SELECT n_regionkey, COUNT(*) AS n FROM nation_mv GROUP BY n_regionkey"
-    p.run(s"CREATE MATERIALIZED VIEW persisted_mv AS $defining")
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv-persist").toString
-    cat.saveTo(dir)
-    val cat2 = new Catalog(spark)
-    cat2.loadFrom(dir)
-    assert(cat2.isMatView("persisted_mv"), "restored as a materialized view")
-    // maintenance hooks must be live again after restore
-    new Pipeline(cat2).run("INSERT INTO nation_mv VALUES (970, 'RESTORED', 2)")
-    assertMatchesRecompute(cat2, "persisted_mv", defining)
-  }
-
   test("meta_materialized_views lists definitions; REFRESH re-syncs a raw rebind") {
     val (cat, p) = freshPipeline()
     val defining = "SELECT n_regionkey, COUNT(*) AS n FROM nation_mv GROUP BY n_regionkey"

@@ -323,6 +323,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(dc(1).status != p.Ok, "DROP TABLE inside BEGIN must be refused")
     assert(dc(3).status == p.Ok, s"the staged insert commits: ${dc(3).status}")
     assert(p.catalog.table("t_nation").count() == 26)
+    // CREATE auto-commits like every DDL verb, so ROLLBACK could not undo it:
+    // refused inside BEGIN, and nothing is left behind
+    val ct = p.run("BEGIN; CREATE TABLE ddl_x (a INT); ROLLBACK")
+    assert(ct(1).status != p.Ok, "CREATE TABLE inside BEGIN must be refused")
+    assert(!p.catalog.exists("ddl_x"))
+    val cv = p.run("BEGIN; CREATE VIEW ddl_v AS SELECT * FROM t_region; ROLLBACK")
+    assert(cv(1).status != p.Ok, "CREATE VIEW inside BEGIN must be refused")
+    assert(p.run("SELECT * FROM ddl_v").head.status != p.Ok, "no view ddl_v after ROLLBACK")
   }
 
   test("EXPLAIN returns the formatted physical plan, one row per line") {
@@ -353,36 +361,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(p.catalog.table("n_copy").count() == 5)
     p.run("DROP TABLE n_copy")
     assert(!p.catalog.exists("n_copy"))
-  }
-
-  test("catalog save/load: tables, views, constraints survive an engine restart") {
-    val p = freshPipeline()
-    p.run("CREATE TABLE cs_store (store_id INT PRIMARY KEY, name VARCHAR(20));" +
-      "INSERT INTO cs_store VALUES (1, 'a'), (2, 'b')")
-    p.catalog.createView("cs_view",
-      "SELECT COUNT(*) AS n FROM t_region")
-    // dependent view whose name sorts BEFORE its base: the alphabetical
-    // restore order is wrong for it, so only the fixpoint pass brings it back
-    p.catalog.createView("aa_dependent", "SELECT n + 1 AS n1 FROM cs_view")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cat").toString
-    p.catalog.saveTo(dir)
-    // simulate restart: wipe the constraint registry entry AND the session
-    // temp views (else the pre-save definitions mask the restore order),
-    // then reload into a brand-new catalog
-    graft.plans.ConstraintRegistry.drop("cs_store")
-    spark.catalog.dropTempView("cs_view")
-    spark.catalog.dropTempView("aa_dependent")
-    val cat2 = new Catalog(spark)
-    cat2.loadFrom(dir)
-    assert(cat2.table("cs_store").orderBy("store_id").collect().map(_.getInt(0)).toSeq == Seq(1, 2))
-    assert(cat2.table("t_region").count() == 5)
-    assert(cat2.viewNames.contains("cs_view"))
-    assert(spark.sql("SELECT * FROM cs_view").collect().head.getLong(0) == 5)
-    assert(cat2.viewNames.contains("aa_dependent"), "dependent view restored via fixpoint")
-    assert(spark.sql("SELECT * FROM aa_dependent").collect().head.getLong(0) == 6)
-    assert(graft.plans.ConstraintRegistry.uniqueKeys("cs_store") == Seq(Set("store_id")),
-      "PK came back from the manifest")
-    assert(cat2.parquetTables.nonEmpty, "reloaded tables are parquet-backed (meta tables work)")
   }
 
   test("failures are per-statement, not script-aborting") {

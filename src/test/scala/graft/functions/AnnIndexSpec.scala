@@ -110,77 +110,6 @@ class AnnIndexSpec extends AnyFunSuite {
       s"tight clusters: every query must stop early (nlist=$nlist): $probed")
   }
 
-  test("append ≡ rebuild assignment at fixed centroids (assign-only ingest)") {
-    import org.apache.spark.sql.functions._
-    // grown corpus: base ∪ 10% delta (same vectors under fresh ids — the
-    // identity under test is the ASSIGNMENT, which is per-row and id-blind)
-    val base = graft.Tables.df(spark, sf, "embeddings")
-    val maxId = base.agg(max("vec_id")).head.getLong(0)
-    val delta = base.filter(col("vec_id") % 10 === 0)
-      .withColumn("vec_id", col("vec_id") + maxId + 1)
-    val grown = java.nio.file.Files.createTempDirectory("graft-anngrown").toString
-    base.unionByName(delta).write.parquet(s"$grown/embeddings.parquet")
-
-    val d = java.nio.file.Files.createTempDirectory("graft-annappend").toString
-    AnnIndex.buildAll(spark, sf, d)
-    val appended = AnnIndex.appendIvfScaled(spark, grown, d, delta)
-    assert(appended === delta.count())
-
-    // the stored cells after append must equal a from-scratch assignment of
-    // the GROWN corpus at the SAME centroids — assignment is a pure per-row
-    // function, so append commutes with union
-    val trained = spark.read.parquet(s"$d/ivf_scaled_centroids")
-    val grownQuant = spark.read.parquet(s"$grown/embeddings.parquet")
-      .select(col("vec_id"), SimilarityQueries.quantize(col("embedding")).as("qe"))
-    val expect = SimilarityQueries.kmeansAssign(grownQuant, trained)
-      .select(col("vec_id"), col("cent_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = spark.read.parquet(s"$d/ivf_scaled_cells")
-      .select(col("vec_id"), col("cent_id").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === expect)
-
-    // manifest re-pinned to the grown corpus: ensure() must NOT rebuild
-    val m = java.nio.file.Paths.get(s"$d/manifest.json")
-    val t1 = java.nio.file.Files.getLastModifiedTime(m)
-    AnnIndex.ensure(spark, grown, d)
-    assert(java.nio.file.Files.getLastModifiedTime(m) === t1,
-      "ensure on an appended index for the grown corpus must be a no-op")
-
-    // probes on the appended index still answer (structure intact), and the
-    // appended vectors are reachable as neighbors
-    val probe = AnnIndex.probeIvfScaled(spark, grown, d).collect()
-    assert(probe.groupBy(_.getLong(0)).forall(_._2.length == 3))
-    assert(probe.exists(_.getLong(1) > maxId),
-      "appended vectors (exact duplicates of base ones) must surface as neighbors")
-
-    // drift policy: 10% growth → no retrain; accumulated past 30% → retrain.
-    // Each further delta arrives under FRESH ids and an sfDir that already
-    // contains it — the ingest contract the integrity guards enforce.
-    val (tr, ap) = AnnIndex.appendState(d)
-    assert(tr > 0 && ap === appended)
-    assert(!AnnIndex.retrainRecommended(d))
-    val extras = (2 to 4).map(k => base.filter(col("vec_id") % 10 === 0)
-      .withColumn("vec_id", col("vec_id") + (maxId + 1) * k))
-    val grown2 = java.nio.file.Files.createTempDirectory("graft-anngrown2").toString
-    extras.foldLeft(base.unionByName(delta))(_ unionByName _)
-      .write.parquet(s"$grown2/embeddings.parquet")
-    extras.foreach(dx => AnnIndex.appendIvfScaled(spark, grown2, d, dx))
-    assert(AnnIndex.retrainRecommended(d),
-      "40% accumulated growth must recommend a retrain")
-
-    // integrity guards (verdict-r13 advice): an id-overlapping delta would
-    // occupy two top-k slots per duplicate — refused; a delta sfDir does not
-    // contain would leave the manifest blessing a corpus-disagreeing index —
-    // refused
-    assertThrows[IllegalArgumentException](
-      AnnIndex.appendIvfScaled(spark, grown2, d, delta))
-    val unreflected = base.filter(col("vec_id") % 10 === 0)
-      .withColumn("vec_id", col("vec_id") + (maxId + 1) * 9)
-    assertThrows[IllegalArgumentException](
-      AnnIndex.appendIvfScaled(spark, grown2, d, unreflected))
-  }
-
   test("adaptive-nprobe: wide far cell behind a tight near cell (suffix-max bound)") {
     import org.apache.spark.sql.functions._
     // The r13-verdict adversarial geometry: probe order is csim-descending

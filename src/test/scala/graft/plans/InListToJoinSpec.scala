@@ -22,6 +22,7 @@ class InListToJoinSpec extends AnyFunSuite {
 
   test("above threshold: semi join, identical rows to the unrewritten filter") {
     val vals = (1L to 2000L).filter(_ % 3 != 0)
+    assert(vals.size >= InListToJoin.Threshold)
     val orders = graft.Tables.df(spark, sf, "orders")
     val rewritten = orders.filter(col("o_custkey").isin(vals: _*))
       .select("o_orderkey", "o_custkey").orderBy("o_orderkey")
@@ -34,8 +35,10 @@ class InListToJoinSpec extends AnyFunSuite {
   }
 
   test("below threshold: InSet kept, no semi join") {
+    val vals = 1L to 100L
+    assert(vals.size < InListToJoin.Threshold)
     val df = graft.Tables.df(spark, sf, "orders")
-      .filter(col("o_custkey").isin((1L to 100L): _*))
+      .filter(col("o_custkey").isin(vals: _*))
       .select("o_orderkey")
     assert(semiJoins(df).isEmpty, df.queryExecution.optimizedPlan.toString)
   }

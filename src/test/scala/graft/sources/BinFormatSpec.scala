@@ -184,30 +184,6 @@ class BinFormatSpec extends AnyFunSuite {
     assert(back.collect().toSeq === nation.collect().toSeq)
   }
 
-  test("distributed multi-part .bin export round-trips without driver collect") {
-    val li = Tables.df(spark, SparkTestBase.sf, "lineitem")
-      .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
-      .repartition(4) // force several executor-written parts
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin-dist").toString + "/parts"
-    BinFormat.writeDistributed(li, dir)
-    val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".bin"))
-    assert(parts.length > 1, s"expected multiple parts, got ${parts.length}")
-    val back = BinFormat.readDistributed(spark, dir)
-    assert(back.schema.map(f => (f.name, f.dataType)) === li.schema.map(f => (f.name, f.dataType)))
-    assert(back.count() === li.count())
-    assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
-  }
-
-  test("distributed .bin export of an empty table keeps the schema") {
-    import spark.implicits._
-    val empty = Seq.empty[(Int, String)].toDF("k", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin-empty").toString + "/parts"
-    BinFormat.writeDistributed(empty, dir)
-    val back = BinFormat.readDistributed(spark, dir)
-    assert(back.count() === 0L)
-    assert(back.columns.toSeq === Seq("k", "s"))
-  }
-
   test("round-trip: nullable values survive") {
     import spark.implicits._
     val df = Seq(

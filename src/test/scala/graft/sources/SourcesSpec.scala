@@ -103,40 +103,4 @@ class SourcesSpec extends AnyFunSuite {
     val back = CsvMeta.read(spark, path)
     assert(back.orderBy("id").collect().toSeq == Seq(Row(1L, "a"), Row(2L, "b")))
   }
-
-  test("distributed .tbl export round-trips without any driver collect") {
-    val dir = tmp("dist_tbl")
-    val nation = graft.Tables.df(spark, SparkTestBase.sf, "nation")
-    TblReader.writeDistributed(nation, dir)
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("part-")))
-    assert(Files.exists(java.nio.file.Paths.get(s"$dir.header")), "name/type side-car")
-    val back = TblReader.readDistributed(spark, dir)
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      nation.schema.map(f => (f.name, f.dataType)))
-    assert(back.count() == nation.count())
-    assert(back.exceptAll(nation).isEmpty && nation.exceptAll(back).isEmpty)
-  }
-
-  test("distributed .tbl export writes literal null for NULLs") {
-    val dir = tmp("dist_tbl_null")
-    import spark.implicits._
-    val df = Seq((1, Some("x")), (2, None)).toDF("k", "s")
-    TblReader.writeDistributed(df, dir)
-    val back = TblReader.readDistributed(spark, dir)
-    val rows = back.orderBy("k").collect()
-    assert(rows(0).getString(1) == "x" && rows(1).isNullAt(1))
-  }
-
-  test("distributed csv export round-trips real-table data with nulls") {
-    val dir = tmp("dist_csv")
-    val li = graft.Tables.df(spark, SparkTestBase.sf, "lineitem")
-      .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
-    CsvMeta.writeDistributed(li, dir)
-    // executors wrote part files, not one driver file
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("part-")))
-    val back = CsvMeta.readDistributed(spark, dir)
-    assert(back.schema == li.schema.copy()) // side-car restores the exact schema
-    assert(back.count() == li.count())
-    assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
-  }
 }
