@@ -92,8 +92,9 @@ final class Console(spark: SparkSession, in: BufferedReader, out: PrintWriter) {
 
 object Console {
   def main(args: Array[String]): Unit = {
+    val cores = Runtime.getRuntime.availableProcessors()
     val spark = GraftSession.create(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"), shufflePartitions = 8)
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"), shufflePartitions = cores)
     spark.sparkContext.setLogLevel("ERROR")
     val console = new Console(spark,
       new BufferedReader(new InputStreamReader(System.in)),

@@ -9,7 +9,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.benchNames
-    val spark = GraftSession.create("local[4]", shufflePartitions = 4)
+    // sized like BenchLayout: the printed plan shows the partition counts
+    // this machine's own session plans
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = GraftSession.create(s"local[$cores]", shufflePartitions = cores)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"\n========== $name ==========")

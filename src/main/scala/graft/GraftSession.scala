@@ -37,7 +37,9 @@ object GraftSession {
 
   /** AQE's initial partition count per shuffle partition
     * (`spark.sql.adaptive.coalescePartitions.initialPartitionNum` =
-    * `shufflePartitions` × this); see the comment in [[tuned]]. */
+    * `shufflePartitions` × this): the CAP that
+    * [[graft.plans.InputSizedShufflePartitions]] sizes each query's
+    * exchanges under; see the comment in [[tuned]]. */
   private val InitialPartitionsMultiplier = 32
 
   /** Conf shared by every entry point (Verify, Bench, tests, user sessions). */
@@ -46,17 +48,19 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Let the PARTITION COUNT scale with the data, not the knob: AQE plans
-      // every exchange at 32× the core count and coalesces down to its
-      // ~64 MiB advisory target at runtime. With the bare core-count default
-      // a fixed 32 becomes the CAP, and at SF100 each of 32 partitions
-      // carries ~19M lineitem rows — build sides overflow the per-task
-      // memory budget and the q3/q4/q5-class fact joins go superlinear from
-      // spill+GC (measured 22–36× per decade; 2.4× after this change). Small
-      // fixtures coalesce straight back to a handful of partitions, so the
-      // sf0.1 gate numbers are unaffected. On a 1000-executor cluster this
-      // is exactly the config you'd ship: initial count ≫ cores, AQE sizes
-      // the real parallelism per stage from map output statistics.
+      // Let the PARTITION COUNT scale with the data, not the knob. The cap is
+      // 32× the core count: with the bare core-count default a fixed 32 is
+      // the cap, and at SF100 each of 32 partitions carries ~19M lineitem
+      // rows — build sides overflow the per-task memory budget and the
+      // q3/q4/q5-class fact joins go superlinear from spill+GC (measured
+      // 22–36× per decade; 2.4× with the 32× cap). Under that cap
+      // InputSizedShufflePartitions plans each query at ⌈input bytes / 4 MiB⌉
+      // clamped to [shufflePartitions, cap]: SF10 and SF100 fact queries keep
+      // the cap, every sf0.1 headline query plans `shufflePartitions`. AQE
+      // then coalesces toward its ~64 MiB advisory target at runtime. The
+      // cap is not free at small scale even though AQE coalesces it back:
+      // on 4 cores the sf0.1 headline ran 1.11 queries/s planned at 128 and
+      // 1.24 planned at 4 (perfbench olap_headline, medians of 10 runs).
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (shufflePartitions * InitialPartitionsMultiplier).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

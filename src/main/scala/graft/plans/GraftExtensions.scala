@@ -36,6 +36,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer, not post-hoc: analysis and the rules above keep seeing the
     // plain Cast, only execution gets the exact fast kernel
     ext.injectOptimizerRule(_ => new ExactDoubleToDecimalRule)
+    // AQE query-stage preparation: runs after EnsureRequirements has placed
+    // the exchanges, on the initial plan and on every re-plan
+    ext.injectQueryStagePrepRule(session => new InputSizedShufflePartitions(session))
     ext.injectFunction((
       FunctionIdentifier("graft_vec_dot"),
       new ExpressionInfo(classOf[FloatVectorDot].getName, "graft_vec_dot"),
