@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.adaptive.{QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_COL,
   ReusedExchangeExec, ShuffleExchangeExec, ValidateRequirements}
 
@@ -22,7 +22,7 @@ import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION
   * `EnsureRequirements`, on the initial plan and on every re-plan) rewrites
   * each exchange that `EnsureRequirements` or `repartition(cols)` planned at
   * exactly C to n = clamp(⌈S / [[BytesPerPartition]]⌉, P, C), where S is
-  * the summed size of the plan's leaf relations, a finished query stage
+  * the summed size of the plan's leaf relations, a finished shuffle stage
   * counting at least the bytes it wrote (see [[inputBytes]]). Every
   * exchange rewritten in one pass gets the same n, so co-partitioned join
   * sides still agree (an exchange that must match a finished stage gets
@@ -79,14 +79,18 @@ object InputSizedShufflePartitions {
   /** Summed `sizeInBytes` of the leaf relations under `p`, or None when one
     * is unknown (no logical link, or Spark's "unknown" default size). Query
     * stages and reused exchanges are walked into, so S never falls between
-    * the initial plan and an AQE re-plan; a materialized stage counts the
-    * larger of that estimate and the bytes it measurably wrote, so the
-    * exchanges planned after it see rows that grew past the compressed scan
-    * (a self-join's pairs, decoded text). */
+    * the initial plan and an AQE re-plan; a materialized shuffle stage
+    * counts the larger of that estimate and the bytes it measurably wrote,
+    * so the exchanges planned after it see rows that grew past the
+    * compressed scan (a self-join's pairs, decoded text). A broadcast
+    * stage counts its estimate only: its size is that of the in-memory
+    * hash relation built from the rows, not of rows that will be
+    * shuffled. */
   def inputBytes(p: SparkPlan, unknown: Long): Option[BigInt] = p match {
-    case s: QueryStageExec =>
+    case s: ShuffleQueryStageExec =>
       val est = inputBytes(s.plan, unknown)
       s.computeStats().fold(est)(st => est.map(_.max(st.sizeInBytes)))
+    case s: QueryStageExec => inputBytes(s.plan, unknown)
     case r: ReusedExchangeExec => inputBytes(r.child, unknown)
     case f: FileSourceScanExec => Some(BigInt(f.relation.sizeInBytes))
     case leaf if leaf.children.isEmpty =>

@@ -4,6 +4,7 @@ import graft.{SparkEntry, SparkTestBase}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_COL,
   ShuffleExchangeExec, ValidateRequirements}
@@ -94,6 +95,30 @@ class InputSizedShufflePartitionsSpec extends AnyFunSuite {
     }.flatten
     val counts = stageCounts(wide.queryExecution.executedPlan)
     assert(counts.size === 2 && counts.min === P && counts.max > P, counts)
+  }
+
+  test("a join planned after one side's stage grew still co-partitions its sides") {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      // the left aggregate's stage writes ≈ 25 MB and finishes before the
+      // join's left exchange is planned; the right side's stage is planned
+      // at P from the first S
+      val left = spark.range(0, 200000)
+        .select((col("id") % 100000).as("k"), concat(lit("x" * 100), col("id").cast("string")).as("s"))
+        .groupBy("k", "s").count()
+      val right = spark.range(0, 1000).select((col("id") * 7).as("k"))
+      val df = left.join(right, "k")
+      // 1000 right keys, each matching two (k, s) groups
+      assert(df.collect().length === 2000)
+      val joins = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan.collect { case j: SortMergeJoinExec => j }
+        case p => fail(s"not an adaptive plan: $p")
+      }
+      assert(joins.size === 1)
+      val sides = joins.head.children.map(_.outputPartitioning.numPartitions)
+      assert(sides.distinct.size === 1, sides)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("count: ⌈S / 4 MiB⌉ clamped to [P, C]") {
